@@ -1506,16 +1506,9 @@ object SparkEntry {
     val dir = s"spark-warehouse/graft_state/ivfpq_index_${sourceStateKey(s, d, "embeddings.parquet")}"
     if (!new java.io.File(s"$dir/v=1/manifest/_SUCCESS").exists) {
       val emb = Tables.embeddings(s, d)
-      val e0 = emb.select(col("vec_id"),
-        Similarity.toDoubleArray(col("embedding")).as("v"))
-      val cents = e0.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("cell"), col("v").as("cv"))
-      val cb = e0.filter(col("vec_id") < 16).select(col("vec_id"),
-        posexplode(array((0 until 8).map(ss =>
-          slice(col("v"), ss * 8 + 1, 8)): _*)).as(Seq("s", "vs")))
-        .select(col("s"), col("vec_id").cast("int").as("code"),
-          col("vs").as("cw"))
-      Similarity.writeIvfPqIndex(emb, cents, cb, dir, version = 1)
+      Similarity.writeIvfPqIndex(emb,
+        Similarity.deterministicCentroids(emb, nCells = 16),
+        Similarity.deterministicCodebook(emb, nCodes = 16), dir, version = 1)
     }
     dir
   }

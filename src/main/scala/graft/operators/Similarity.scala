@@ -64,6 +64,11 @@ object Similarity {
 
   def toDoubleArray(c: Column): Column = transform(c, x => x.cast("double"))
 
+  /** `(vec_id, v, nrm)`: an embedding table as DOUBLE vectors with norms. */
+  private def vectors(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
+      .withColumn("nrm", normFast(col("v")))
+
   /** Per-vector symmetric scalar quantization report (the int8 compression
     * every large ANN deployment applies before indexing — FAISS
     * `ScalarQuantizer` semantics): `scale = max|x| / 127`, code_i =
@@ -425,6 +430,76 @@ object Similarity {
       .limit(k)
   }
 
+  // ------------------------------------------------------------------
+  // Product-quantization building blocks. Every PQ path — pqTopK, the
+  // IVF-PQ kernel behind ivfPqTopK/ivfPqTopKWith/ivfPqTopKFromIndex,
+  // the recall harness, index encoding and the codebook helpers —
+  // splits, measures and encodes through these, so a PQ convention
+  // (sub-vector bounds, squared-L2 fold, nearest-code tie-break) lives
+  // in one place.
+  // ------------------------------------------------------------------
+
+  /** Squared L2 as `a·a + b·b − 2·a·b` over the codegen'd [[dotFast]]
+    * fold — the same fold the DuckDB oracles replay. */
+  private def l2sq(a: Column, b: Column): Column =
+    dotFast(a, a) + dotFast(b, b) - lit(2.0) * dotFast(a, b)
+
+  /** Sub-vector `s` (0-based) of a `dim`-vector split into `m` equal
+    * subspaces. */
+  private def subVector(v: Column, s: Int, m: Int, dim: Int): Column =
+    slice(v, s * (dim / m) + 1, dim / m)
+
+  /** `v` as its `m` sub-vectors: a `posexplode` yielding `(s, sub-vector)`. */
+  private def subVectors(v: Column, m: Int, dim: Int): Column =
+    posexplode(array((0 until m).map(s => subVector(v, s, m, dim)): _*))
+
+  /** Element-wise `a − b`: a vector's residual against a centroid. */
+  private def minus(a: Column, b: Column): Column = zip_with(a, b, (x, c) => x - c)
+
+  /** The `(vec_id, ev)` vectors PQ encodes: `v` itself, or with
+    * `residual` `v − centroid(cell(v))` (the FAISS IVF-PQ default —
+    * residuals cluster tighter than raw vectors). `assigned` carries
+    * `(vec_id, v, cell)`, `cents` carries `(cell, cv)`. */
+  private def encodedVectors(assigned: DataFrame, cents: DataFrame,
+                             residual: Boolean): DataFrame =
+    if (!residual) assigned.select(col("vec_id"), col("v").as("ev"))
+    else assigned
+      .join(broadcast(cents.select(col("cell"), col("cv"))), Seq("cell"))
+      .select(col("vec_id"), minus(col("v"), col("cv")).as("ev"))
+
+  /** [[encodedVectors]] as `(vec_id, s, vs)` sub-vector rows. */
+  private def encodedSlices(assigned: DataFrame, cents: DataFrame, m: Int,
+                            dim: Int, residual: Boolean): DataFrame =
+    encodedVectors(assigned, cents, residual)
+      .select(col("vec_id"), subVectors(col("ev"), m, dim).as(Seq("s", "vs")))
+
+  /** The deterministic first-`nCodes` codebook over `(vec_id, s, vs)`
+    * slices: codeword `code` of subspace `s` is sub-vector `s` of vector
+    * `code` — reproducible in the DuckDB oracle, unlike a k-means fit. */
+  private def firstCodes(slices: DataFrame, nCodes: Int): DataFrame =
+    slices.filter(col("vec_id") < nCodes)
+      .select(col("s"), col("vec_id").cast("int").as("code"), col("vs").as("cw"))
+
+  /** Nearest codeword of every `(vec_id, s, vs)` slice — argmin squared
+    * L2, ties to the lowest code — as `(vec_id, s, code)`. The codebook is
+    * KBs and broadcasts; the rank window partitions by (vec_id, s). */
+  private def nearestCodes(slices: DataFrame, codebook: DataFrame): DataFrame =
+    slices.join(broadcast(codebook), Seq("s"))
+      .withColumn("d2", l2sq(col("vs"), col("cw")))
+      .withColumn("rn", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy("vec_id", "s").orderBy(col("d2"), col("code"))))
+      .filter(col("rn") === 1)
+      .select(col("vec_id"), col("s"), col("code"))
+
+  /** ADC table: squared L2 from each query sub-vector `qvs` of `qslices`
+    * to every codeword of its subspace, as `(keys…, s, code, qd2)` —
+    * m × nCodes rows per key, broadcast-sized. */
+  private def adcTable(codebook: DataFrame, qslices: DataFrame,
+                       keys: Column*): DataFrame =
+    codebook.join(broadcast(qslices), Seq("s"))
+      .select(keys ++ Seq(col("s"), col("code"),
+        l2sq(col("qvs"), col("cw")).as("qd2")): _*)
+
   /** Product-quantization ANN (Jégou et al. 2011) with asymmetric
     * distance computation (ADC): the 64-dim vector splits into `m`
     * subspaces of `dim/m` dims; each sub-vector is encoded as the id of
@@ -439,9 +514,8 @@ object Similarity {
     * sub-vectors of the first `nCodes` vec_ids), so the ENTIRE pipeline —
     * encode, table, ADC rank — replays bit-for-bit in the DuckDB oracle;
     * a k-means codebook is a drop-in upgrade that changes no dataflow.
-    * Squared L2 is computed as `a·a + b·b − 2·a·b` over the codegen'd
-    * [[dotFast]] fold (same fold in SQL). ADC sums ROUND(6) BEFORE the
-    * rank (the catalog convention: a deterministic k-boundary).
+    * ADC sums ROUND(6) BEFORE the rank (the catalog convention: a
+    * deterministic k-boundary).
     *
     * Scale shape: encoding is one (vector × codeword-per-subspace)
     * broadcast join — the codebook is KBs; the encoded corpus (the thing
@@ -451,31 +525,16 @@ object Similarity {
   def pqTopK(emb: DataFrame, queryId: Long, k: Int,
              m: Int = 8, nCodes: Int = 16, dim: Int = 64): DataFrame = {
     require(dim % m == 0, "m must divide dim")
-    val sub = dim / m
     // scan floor: encode is a per-vector broadcast join + window over
     // the scan — measured sf1 solo 2.4 s -> 1.1 s; identity on fan-out
     // inputs (see Tables.scanFloor)
-    val e = graft.Tables.scanFloor(emb)
+    val slices = graft.Tables.scanFloor(emb)
       .select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-    val slices = e.select(col("vec_id"),
-      posexplode(array((0 until m).map(s => slice(col("v"), s * sub + 1, sub)): _*))
-        .as(Seq("s", "vs")))
-    val codebook = slices.filter(col("vec_id") < nCodes)
-      .select(col("s"), col("vec_id").cast("int").as("code"), col("vs").as("cw"))
-    def l2sq(a: Column, b: Column): Column =
-      dotFast(a, a) + dotFast(b, b) - lit(2.0) * dotFast(a, b)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id", "s").orderBy(col("d2"), col("code"))
-    val enc = slices.join(broadcast(codebook), Seq("s"))
-      .withColumn("d2", l2sq(col("vs"), col("cw")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("s"), col("code"))
-    val qtab = codebook
-      .join(broadcast(slices.filter(col("vec_id") === queryId)
-        .select(col("s"), col("vs").as("qvs"))), Seq("s"))
-      .select(col("s"), col("code"), l2sq(col("qvs"), col("cw")).as("qd2"))
-    enc.filter(col("vec_id") =!= queryId)
+      .select(col("vec_id"), subVectors(col("v"), m, dim).as(Seq("s", "vs")))
+    val codebook = firstCodes(slices, nCodes)
+    val qtab = adcTable(codebook, slices.filter(col("vec_id") === queryId)
+      .select(col("s"), col("vs").as("qvs")))
+    nearestCodes(slices, codebook).filter(col("vec_id") =!= queryId)
       .join(broadcast(qtab), Seq("s", "code"))
       .groupBy(col("vec_id"))
       .agg(round(sum(col("qd2")), 6).as("adc_dist"))
@@ -483,126 +542,26 @@ object Similarity {
       .limit(k)
   }
 
-  /** IVF-PQ composed ANN — the billion-vector serving shape (FAISS
-    * `IVFx,PQy` semantics): IVF cell partitioning for the coarse probe,
-    * PQ-ADC ranking inside the probed cells, exact re-rank of the ADC
-    * shortlist.
-    *
-    * Composition of the two already-oracled stages with THEIR
-    * deterministic conventions: cells/assignment from [[ivfTopK]]
-    * (centroids = vec_id < nCells, cosine argmax, ties to lowest cell),
-    * codebook/encoding/ADC from [[pqTopK]] (codewords = sub-vectors of
-    * vec_id < nCodes, squared L2 via the shared dot fold). The query
-    * probes its `nprobe` nearest cells (centroid cosine, ties to lowest
-    * cell) — more cells than plain IVF's nprobe=1 at LESS scan cost,
-    * because inside a cell only the m-byte PQ codes are read (32×
-    * smaller than the float vectors): nprobe=4 of codes ≈ 1/8 the bytes
-    * of one cell of floats. ADC ranks the candidates; the top
-    * `shortlist` get one exact-cosine re-rank over their float vectors
-    * (point lookups at scale). ADC and cosine both ROUND(6) before their
-    * rank boundaries — deterministic on both engines.
-    *
-    * Scale shape: the per-cell encoded corpus is the persisted index
-    * (partitionBy(cell), m small ints per vector); a probe reads nprobe
-    * partitions of codes + `shortlist` float rows.
-    *
-    * `residual = true` switches to residual encoding (the FAISS IVF-PQ
-    * default): PQ runs over `v − centroid(cell(v))` — residuals cluster
-    * tighter than raw vectors, so the same codebook budget spends its
-    * resolution where the data actually lives. The codebook becomes the
-    * residual sub-vectors of the first `nCodes` vectors (same
-    * deterministic convention), and the ADC table becomes per-PROBED-CELL
-    * (the query's residual differs per cell): nprobe × m × nCodes rows,
-    * still broadcast-sized. The catalog entry keeps `residual = false`
-    * (codebook shared across cells, simpler oracle replay); the residual
-    * path is pinned by the same full-probe == brute-force closure test. */
+  /** IVF-PQ composed ANN over the deterministic quantizers — the
+    * billion-vector serving shape (FAISS `IVFx,PQy` semantics) in the
+    * form the DuckDB oracle replays: centroids = the first `nCells`
+    * vectors ([[deterministicCentroids]], the [[ivfTopK]] convention),
+    * codebook = sub-vectors of the first `nCodes` vectors
+    * ([[deterministicCodebook]], the [[pqTopK]] convention) or, with
+    * `residual`, of their assigned-cell residuals ([[residualCodebook]]).
+    * The corpus is encoded in memory and ranked by the one IVF-PQ kernel
+    * that also serves [[ivfPqTopKWith]] and [[ivfPqTopKFromIndex]] — see
+    * [[ivfPqRank]] for the probe, ADC, shortlist and re-rank. The catalog
+    * pins both encodings (`sim_ivfpq_ann`, `sim_ivfpq_res_ann`). */
   def ivfPqTopK(emb: DataFrame, queryId: Long, k: Int, nCells: Int = 16,
                 nprobe: Int = 4, m: Int = 8, nCodes: Int = 16,
                 shortlist: Int = 50, dim: Int = 64,
                 residual: Boolean = false): DataFrame = {
-    require(dim % m == 0, "m must divide dim")
-    val sub = dim / m
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val cents = e.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell"), col("v").as("cv"), col("nrm").as("cnrm"))
-    val assigned = assignCells(e, cents)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-    // the encoded vector: raw, or the residual against the assigned cell
-    val encBase =
-      if (!residual) assigned.select(col("vec_id"), col("cell"), col("v").as("ev"))
-      else assigned
-        .join(broadcast(cents.select(col("cell"), col("cv"))), Seq("cell"))
-        .select(col("vec_id"), col("cell"),
-          zip_with(col("v"), col("cv"), (x, c) => x - c).as("ev"))
-    // PQ encode (pqTopK convention; at scale this is the persisted index,
-    // not recomputed per query)
-    val slices = encBase.select(col("vec_id"), col("cell"),
-      posexplode(array((0 until m).map(s => slice(col("ev"), s * sub + 1, sub)): _*))
-        .as(Seq("s", "vs")))
-    val codebook = slices.filter(col("vec_id") < nCodes)
-      .select(col("s"), col("vec_id").cast("int").as("code"), col("vs").as("cw"))
-    def l2sq(a: Column, b: Column): Column =
-      dotFast(a, a) + dotFast(b, b) - lit(2.0) * dotFast(a, b)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("vec_id", "s").orderBy(col("d2"), col("code"))
-    val enc = slices.join(broadcast(codebook), Seq("s"))
-      .withColumn("d2", l2sq(col("vs"), col("cw")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("s"), col("code"))
-    // coarse probe: the query's nprobe nearest cells
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("nrm").as("qnrm"))
-    val probed = cents.crossJoin(broadcast(q))
-      .withColumn("qccos", dotFast(col("cv"), col("qv")) / (col("cnrm") * col("qnrm")))
-      .orderBy(col("qccos").desc, col("cell"))
-      .limit(nprobe)
-      .select(col("cell"), col("cv"))
-    // ADC table: m × nCodes rows (raw) or per probed cell (residual —
-    // the query residual differs per cell), nprobe × m × nCodes rows;
-    // broadcast either way
-    val qtab =
-      if (!residual) {
-        val qslices = e.filter(col("vec_id") === queryId)
-          .select(posexplode(array(
-            (0 until m).map(s => slice(col("v"), s * sub + 1, sub)): _*))
-            .as(Seq("s", "qvs")))
-        codebook.join(broadcast(qslices), Seq("s"))
-          .select(lit(null).cast("long").as("qcell"), col("s"), col("code"),
-            l2sq(col("qvs"), col("cw")).as("qd2"))
-      } else {
-        val qres = probed.crossJoin(broadcast(q))
-          .select(col("cell").as("qcell"),
-            zip_with(col("qv"), col("cv"), (x, c) => x - c).as("qr"))
-        val qslices = qres.select(col("qcell"), posexplode(array(
-            (0 until m).map(s => slice(col("qr"), s * sub + 1, sub)): _*))
-            .as(Seq("s", "qvs")))
-        codebook.join(broadcast(qslices), Seq("s"))
-          .select(col("qcell"), col("s"), col("code"),
-            l2sq(col("qvs"), col("cw")).as("qd2"))
-      }
-    val candCodes = assigned.join(broadcast(probed.select("cell")), Seq("cell"))
-      .filter(col("vec_id") =!= queryId)
-      .select(col("vec_id"), col("cell"))
-      .join(enc, Seq("vec_id"))
-    val joined =
-      if (!residual) candCodes.join(broadcast(qtab), Seq("s", "code"))
-      else candCodes.join(broadcast(qtab),
-        col("cell") === col("qcell") &&
-          candCodes("s") === qtab("s") && candCodes("code") === qtab("code"))
-    val short = joined
-      .groupBy(col("vec_id"), col("cell"))
-      .agg(round(sum(col("qd2")), 6).as("adc_dist"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-      .limit(shortlist)
-    short
-      .join(e.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("cell"), col("adc_dist"),
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    val codebook =
+      if (residual) residualCodebook(emb, nCells, nCodes, m, dim)
+      else deterministicCodebook(emb, nCodes, m, dim)
+    ivfPqInMemory(emb, deterministicCentroids(emb, nCells), codebook, m, dim,
+      residual, queryId, k, nprobe, shortlist)
   }
 
   /** Mean-pooling of chunk embeddings into a parent-document embedding —
@@ -720,20 +679,10 @@ object Similarity {
   def annRecallIvfPq(emb: DataFrame, queryIds: Seq[Long], k: Int,
                      nCells: Int = 16, nprobe: Int = 4, m: Int = 8,
                      nCodes: Int = 16, shortlist: Int = 50,
-                     dim: Int = 64): DataFrame = {
-    require(dim % m == 0, "m must divide dim")
-    val sub = dim / m
-    val e0 = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-    val cents = e0.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell"), col("v").as("cv"))
-    val codebook = e0.filter(col("vec_id") < nCodes)
-      .select(col("vec_id"),
-        posexplode(array((0 until m).map(s => slice(col("v"), s * sub + 1, sub)): _*))
-          .as(Seq("s", "vs")))
-      .select(col("s"), col("vec_id").cast("int").as("code"), col("vs").as("cw"))
-    annRecallIvfPqWith(emb, cents, codebook, queryIds, k, nprobe, m,
+                     dim: Int = 64): DataFrame =
+    annRecallIvfPqWith(emb, deterministicCentroids(emb, nCells),
+      deterministicCodebook(emb, nCodes, m, dim), queryIds, k, nprobe, m,
       shortlist, dim)
-  }
 
   /** [[annRecallIvfPq]] with caller-supplied coarse centroids and PQ
     * codebook — the TRAINED-index eval path ([[trainCentroids]] /
@@ -746,7 +695,13 @@ object Similarity {
     * time — the dataflow downstream of them is IDENTICAL to the
     * deterministic path, so swapping fitted centroids in changes no
     * shuffle, no join strategy, and no determinism convention (ties still
-    * break to the lowest cell/code id). */
+    * break to the lowest cell/code id).
+    *
+    * The IVF-PQ arm is [[ivfPqRank]]'s dataflow batched over the query
+    * panel (every rank window partitions by query id). `residual = true`
+    * encodes `v − centroid(cell(v))` and builds the ADC table per probed
+    * cell; the codebook passed in must then be residual-trained
+    * ([[trainCodebookResidual]]). */
   def annRecallIvfPqWith(emb: DataFrame, centsIn: DataFrame,
                          codebookIn: DataFrame, queryIds: Seq[Long], k: Int,
                          nprobe: Int = 4, m: Int = 8, shortlist: Int = 50,
@@ -754,12 +709,10 @@ object Similarity {
     require(queryIds.nonEmpty, "queryIds must be non-empty")
     require(dim % m == 0, "m must divide dim")
     val W = org.apache.spark.sql.expressions.Window
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
     val cents = centsIn
       .select(col("cell"), col("cv"), normFast(col("cv")).as("cnrm"))
     val codebook = codebookIn.select(col("s"), col("code"), col("cw"))
-    val assigned = assignCells(e, cents)
+    val assigned = assignCells(vectors(emb), cents)
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
       .persist()
     try {
@@ -777,7 +730,7 @@ object Similarity {
           col("cell") === col("qcell") && col("vec_id") =!= col("qid"))
         .select(col("qid"), col("vec_id"), qcos.as("cos"))
         .withColumn("rk", row_number().over(rank)).filter(col("rk") <= k)
-      // ---- IVF-PQ arm (ivfPqTopK conventions, per query id) ----
+      // ---- IVF-PQ arm (ivfPqRank conventions, per query id) ----
       val probed = cents.crossJoin(broadcast(qs.select("qid", "qv", "qnrm")))
         .withColumn("qccos",
           dotFast(col("cv"), col("qv")) / (col("cnrm") * col("qnrm")))
@@ -785,56 +738,26 @@ object Similarity {
           W.partitionBy("qid").orderBy(col("qccos").desc, col("cell"))))
         .filter(col("pr") <= nprobe)
         .select(col("qid"), col("cell"))
-      val sub = dim / m
-      def sliceCols(v: Column): Column =
-        posexplode(array((0 until m).map(s => slice(v, s * sub + 1, sub)): _*))
-      // residual = true: PQ runs over v − centroid(cell(v)) (the FAISS
-      // IVF-PQ default — residuals cluster tighter than raw vectors, so
-      // the codebook budget spends its resolution where the data lives);
-      // the codebook passed in must then be residual-trained
-      // ([[trainCodebookResidual]]). The ADC table becomes per-PROBED-
-      // CELL (the query residual differs per cell) — nprobe × m × nCodes
-      // rows, still broadcast-sized.
-      val slices =
-        if (!residual) e.select(col("vec_id"),
-          sliceCols(col("v")).as(Seq("s", "vs")))
-        else assigned
-          .join(broadcast(cents.select(col("cell"), col("cv"))), Seq("cell"))
-          .select(col("vec_id"),
-            sliceCols(zip_with(col("v"), col("cv"), (x, c) => x - c))
-              .as(Seq("s", "vs")))
-      def l2sq(a: Column, b: Column): Column =
-        dotFast(a, a) + dotFast(b, b) - lit(2.0) * dotFast(a, b)
-      val enc = slices.join(broadcast(codebook), Seq("s"))
-        .withColumn("d2", l2sq(col("vs"), col("cw")))
-        .withColumn("rn", row_number().over(
-          W.partitionBy("vec_id", "s").orderBy(col("d2"), col("code"))))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("s"), col("code"))
+      val slices = encodedSlices(assigned, cents, m, dim, residual)
       val cand = assigned.join(broadcast(probed), Seq("cell"))
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("cell"), col("vec_id"))
-        .join(enc, Seq("vec_id"))
+        .join(nearestCodes(slices, codebook), Seq("vec_id"))
       val joined =
         if (!residual) {
-          val qtab = codebook
-            .join(broadcast(slices.join(broadcast(qs.select(col("qid"))),
-                col("vec_id") === col("qid"))
-              .select(col("qid"), col("s"), col("vs").as("qvs"))), Seq("s"))
-            .select(col("qid"), col("s"), col("code"),
-              l2sq(col("qvs"), col("cw")).as("qd2"))
-          cand.join(broadcast(qtab), Seq("qid", "s", "code"))
+          val qsl = slices.join(broadcast(qs.select(col("qid"))),
+              col("vec_id") === col("qid"))
+            .select(col("qid"), col("s"), col("vs").as("qvs"))
+          cand.join(broadcast(adcTable(codebook, qsl, col("qid"))),
+            Seq("qid", "s", "code"))
         } else {
-          val qres = probed
+          // per-probed-cell table: the query's residual differs per cell
+          val qsl = probed
             .join(broadcast(qs.select(col("qid"), col("qv"))), Seq("qid"))
             .join(broadcast(cents.select(col("cell"), col("cv"))), Seq("cell"))
             .select(col("qid"), col("cell").as("qcell"),
-              zip_with(col("qv"), col("cv"), (x, c) => x - c).as("qr"))
-          val qsl = qres.select(col("qid"), col("qcell"),
-            sliceCols(col("qr")).as(Seq("s", "qvs")))
-          val qtab = codebook.join(broadcast(qsl), Seq("s"))
-            .select(col("qid"), col("qcell"), col("s"), col("code"),
-              l2sq(col("qvs"), col("cw")).as("qd2"))
+              subVectors(minus(col("qv"), col("cv")), m, dim).as(Seq("s", "qvs")))
+          val qtab = adcTable(codebook, qsl, col("qid"), col("qcell"))
           cand.join(broadcast(qtab),
             cand("qid") === qtab("qid") && col("cell") === col("qcell") &&
               cand("s") === qtab("s") && cand("code") === qtab("code"))
@@ -1501,68 +1424,51 @@ object Similarity {
   def trainCodebook(emb: DataFrame, m: Int = 8, nCodes: Int = 16,
                     dim: Int = 64, seed: Long = 42,
                     sampleFraction: Double = 1.0,
-                    maxIter: Int = 20): DataFrame = {
-    require(dim % m == 0, "m must divide dim")
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val sub = dim / m
-    val base = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-    val sampled =
-      if (sampleFraction >= 1.0) base
-      else base.sample(withReplacement = false, sampleFraction, seed)
-    // single-partition sorted sample: partition-layout-independent fits
-    // (the [[trainCentroids]] determinism convention)
-    val flat = sampled.sort("vec_id").coalesce(1)
-    val spark = emb.sparkSession
-    import spark.implicits._
-    (0 until m).flatMap { s =>
-      val model = new KMeans()
-        .setK(nCodes).setSeed(seed + s).setMaxIter(maxIter)
-        .setFeaturesCol("features")
-        .fit(flat.select(
-          array_to_vector(slice(col("v"), s * sub + 1, sub)).as("features")))
-      model.clusterCenters.toSeq.zipWithIndex
-        .map { case (c, i) => (s, i, c.toArray.toSeq) }
-    }.toDF("s", "code", "cw")
-  }
+                    maxIter: Int = 20): DataFrame =
+    fitSubspaces(emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("ev")),
+      m, nCodes, dim, seed, sampleFraction, maxIter)
 
   /** Residual-trained PQ codebooks (the FAISS IVF-PQ default): per-
     * subspace k-means over `v − centroid(cell(v))` — cell assignment by
     * the shared cosine-argmax convention against `centsIn`. Residuals
     * cluster tighter than raw vectors, so the same codebook budget
     * resolves finer; pair with `annRecallIvfPqWith(..., residual=true)`.
-    * Same determinism posture as [[trainCodebook]] (single-partition
-    * sorted sample, fixed seeds). */
+    * Same fit as [[trainCodebook]], over the residuals. */
   def trainCodebookResidual(emb: DataFrame, centsIn: DataFrame, m: Int = 8,
                             nCodes: Int = 16, dim: Int = 64, seed: Long = 42,
                             sampleFraction: Double = 1.0,
                             maxIter: Int = 20): DataFrame = {
+    val cents = centsIn
+      .select(col("cell"), col("cv"), normFast(col("cv")).as("cnrm"))
+    fitSubspaces(encodedVectors(assignCells(vectors(emb), cents), cents, residual = true),
+      m, nCodes, dim, seed, sampleFraction, maxIter)
+  }
+
+  /** The per-subspace k-means loop of [[trainCodebook]] and
+    * [[trainCodebookResidual]] over `(vec_id, ev)`: subspace `s` fits
+    * with seed `seed + s`. The sample is sorted and held in ONE
+    * partition (the [[trainCentroids]] determinism convention: the fit
+    * depends on (data, seed) alone, not on the core count or input
+    * split) and persisted, since all `m` fits read it. */
+  private def fitSubspaces(vecs: DataFrame, m: Int, nCodes: Int, dim: Int,
+                           seed: Long, sampleFraction: Double,
+                           maxIter: Int): DataFrame = {
     require(dim % m == 0, "m must divide dim")
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val sub = dim / m
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val cents = centsIn
-      .select(col("cell"), col("cv"), normFast(col("cv")).as("cnrm"))
-    val res = assignCells(e, cents)
-      .join(broadcast(cents.select(col("cell"), col("cv"))), Seq("cell"))
-      .select(col("vec_id"),
-        zip_with(col("v"), col("cv"), (x, c) => x - c).as("v"))
     val sampled =
-      if (sampleFraction >= 1.0) res
-      else res.sample(withReplacement = false, sampleFraction, seed)
-    val flat = sampled.sort("vec_id").coalesce(1)
-      .persist() // m fits read the same single-partition residual sample
+      if (sampleFraction >= 1.0) vecs
+      else vecs.sample(withReplacement = false, sampleFraction, seed)
+    val flat = sampled.sort("vec_id").coalesce(1).persist()
     try {
-      val spark = emb.sparkSession
+      val spark = vecs.sparkSession
       import spark.implicits._
       (0 until m).flatMap { s =>
         val model = new KMeans()
           .setK(nCodes).setSeed(seed + s).setMaxIter(maxIter)
           .setFeaturesCol("features")
           .fit(flat.select(
-            array_to_vector(slice(col("v"), s * sub + 1, sub)).as("features")))
+            array_to_vector(subVector(col("ev"), s, m, dim)).as("features")))
         model.clusterCenters.toSeq.zipWithIndex
           .map { case (c, i) => (s, i, c.toArray.toSeq) }
       }.toDF("s", "code", "cw")
@@ -1591,65 +1497,31 @@ object Similarity {
       .limit(k)
   }
 
-  /** [[ivfPqTopK]] (non-residual form) with caller-supplied centroids and
-    * codebook — the trained billion-vector serving shape: fitted coarse
-    * cells for the probe, fitted PQ codewords for the ADC rank, exact
-    * re-rank of the shortlist. Same broadcast/partition structure as the
-    * deterministic path; at 100 TB the trained frames are the persisted
-    * index metadata. */
+  /** [[ivfPqTopK]] (raw encoding) over caller-supplied centroids `(cell,
+    * cv)` and codebook `(s, code, cw)` — the trained billion-vector
+    * serving shape: fitted coarse cells for the probe, fitted PQ
+    * codewords for the ADC rank, exact re-rank of the shortlist. The
+    * corpus is encoded in memory exactly as [[writeIvfPqIndex]] encodes
+    * its postings and ranked by the same [[ivfPqRank]] kernel, so this
+    * equals [[ivfPqTopKFromIndex]] over a layout exported with the same
+    * quantizers. */
   def ivfPqTopKWith(emb: DataFrame, centsIn: DataFrame, codebookIn: DataFrame,
                     queryId: Long, k: Int, nprobe: Int = 4, m: Int = 8,
-                    shortlist: Int = 50, dim: Int = 64): DataFrame = {
+                    shortlist: Int = 50, dim: Int = 64): DataFrame =
+    ivfPqInMemory(emb, centsIn, codebookIn, m, dim, residual = false,
+      queryId, k, nprobe, shortlist)
+
+  /** Encode `emb` in memory against the given quantizers (the
+    * [[writeIvfPqIndex]] postings, never written) and rank them with
+    * [[ivfPqRank]]: the body of [[ivfPqTopK]] and [[ivfPqTopKWith]]. */
+  private def ivfPqInMemory(emb: DataFrame, centsIn: DataFrame,
+                            codebookIn: DataFrame, m: Int, dim: Int,
+                            residual: Boolean, queryId: Long, k: Int,
+                            nprobe: Int, shortlist: Int): DataFrame = {
     require(dim % m == 0, "m must divide dim")
-    val sub = dim / m
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val cents = centsIn
-      .select(col("cell"), col("cv"), normFast(col("cv")).as("cnrm"))
-    val codebook = codebookIn.select(col("s"), col("code"), col("cw"))
-    val assigned = assignCells(e, cents)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-    val slices = assigned.select(col("vec_id"),
-      posexplode(array((0 until m).map(s => slice(col("v"), s * sub + 1, sub)): _*))
-        .as(Seq("s", "vs")))
-    def l2sq(a: Column, b: Column): Column =
-      dotFast(a, a) + dotFast(b, b) - lit(2.0) * dotFast(a, b)
-    val enc = slices.join(broadcast(codebook), Seq("s"))
-      .withColumn("d2", l2sq(col("vs"), col("cw")))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("vec_id", "s").orderBy(col("d2"), col("code"))))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("s"), col("code"))
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("nrm").as("qnrm"))
-    val probed = cents.crossJoin(broadcast(q))
-      .withColumn("qccos", dotFast(col("cv"), col("qv")) / (col("cnrm") * col("qnrm")))
-      .orderBy(col("qccos").desc, col("cell"))
-      .limit(nprobe)
-      .select(col("cell"))
-    val qslices = e.filter(col("vec_id") === queryId)
-      .select(posexplode(array(
-        (0 until m).map(s => slice(col("v"), s * sub + 1, sub)): _*))
-        .as(Seq("s", "qvs")))
-    val qtab = codebook.join(broadcast(qslices), Seq("s"))
-      .select(col("s"), col("code"), l2sq(col("qvs"), col("cw")).as("qd2"))
-    val short = assigned.join(broadcast(probed), Seq("cell"))
-      .filter(col("vec_id") =!= queryId)
-      .select(col("vec_id"), col("cell"))
-      .join(enc, Seq("vec_id"))
-      .join(broadcast(qtab), Seq("s", "code"))
-      .groupBy(col("vec_id"), col("cell"))
-      .agg(round(sum(col("qd2")), 6).as("adc_dist"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-      .limit(shortlist)
-    short
-      .join(e.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("cell"), col("adc_dist"),
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    val (cents, codebook) = quantizers(centsIn, codebookIn)
+    ivfPqRank(encodePostings(vectors(emb), cents, codebook, m, dim, residual),
+      cents, codebook, m, dim, residual, queryId, k, nprobe, shortlist)
   }
 
   /** Per-cell occupancy audit — the PRE-JOIN guard the cell-bucketed
@@ -1709,29 +1581,30 @@ object Similarity {
       .filter(col("vec_id") < nCells)
       .select(col("vec_id").as("cell"), col("v").as("cv"))
 
+  /** The deterministic raw codebook — sub-vectors of the first `nCodes`
+    * vectors ([[pqTopK]]'s convention), the quantizer
+    * `ivfPqTopK(residual = false)` encodes with and the `sim_index_export`
+    * layout is written with. */
+  def deterministicCodebook(emb: DataFrame, nCodes: Int = 16, m: Int = 8,
+                            dim: Int = 64): DataFrame = {
+    require(dim % m == 0, "m must divide dim")
+    firstCodes(emb.select(col("vec_id"),
+      subVectors(toDoubleArray(col("embedding")), m, dim).as(Seq("s", "vs"))), nCodes)
+  }
+
   /** The deterministic residual codebook — sub-vectors of the first
-    * `nCodes` vectors' ASSIGNED-CELL residuals, exactly the quantizer
-    * `ivfPqTopK(residual = true)` trains inline — extracted so the
-    * exported-layout entry (`sim_index_export_res`) writes the very
-    * same codebook and the layout replay stays bit-identical to the
+    * `nCodes` vectors' ASSIGNED-CELL residuals against
+    * [[deterministicCentroids]], the quantizer `ivfPqTopK(residual =
+    * true)` encodes with and the `sim_index_export_res` layout is
+    * written with, so the layout replay stays bit-identical to the
     * in-memory path. */
   def residualCodebook(emb: DataFrame, nCells: Int = 16, nCodes: Int = 16,
                        m: Int = 8, dim: Int = 64): DataFrame = {
     require(dim % m == 0, "m must divide dim")
-    val sub = dim / m
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val cents = e.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell"), col("v").as("cv"), col("nrm").as("cnrm"))
-    assignCells(e, cents)
-      .join(broadcast(cents.select(col("cell"), col("cv"))), Seq("cell"))
-      .select(col("vec_id"),
-        zip_with(col("v"), col("cv"), (x, c) => x - c).as("ev"))
-      .filter(col("vec_id") < nCodes)
-      .select(col("vec_id"),
-        posexplode(array((0 until m).map(s => slice(col("ev"), s * sub + 1, sub)): _*))
-          .as(Seq("s", "vs")))
-      .select(col("s"), col("vec_id").cast("int").as("code"), col("vs").as("cw"))
+    val cents = deterministicCentroids(emb, nCells)
+      .select(col("cell"), col("cv"), normFast(col("cv")).as("cnrm"))
+    firstCodes(encodedSlices(assignCells(vectors(emb), cents), cents, m, dim,
+      residual = true), nCodes)
   }
 
   /** Handle over an exported index: manifest fields + the three frames.
@@ -1743,15 +1616,24 @@ object Similarity {
                               cents: DataFrame, codebook: DataFrame,
                               postings: DataFrame)
 
+  /** Quantizer frames in the types the encoder and kernel join on:
+    * centroids `(cell LONG, cv, cnrm)`, codebook `(s INT, code INT, cw)`. */
+  private def quantizers(centsIn: DataFrame,
+                         codebookIn: DataFrame): (DataFrame, DataFrame) =
+    (centsIn.select(col("cell").cast("long").as("cell"), col("cv"),
+      normFast(col("cv")).as("cnrm")),
+      codebookIn.select(col("s").cast("int").as("s"),
+        col("code").cast("int").as("code"), col("cw")))
+
   /** Export the IVF-PQ index for `emb` under `dir/v=<version>/`:
     * `centroids` (cell, cv), `codebook` (s, code, cw), `postings`
     * (vec_id, codes, v, nrm; parquet-partitioned by cell), `manifest`
     * (one row: version/dim/m/n_codes/n_cells/n_vectors/residual).
-    * Assignment and encoding reuse the exact query-path conventions
-    * ([[assignCells]] cosine-argmax, nearest-codeword by (d2, code)), so
-    * a query replayed from the layout is bit-identical to the in-memory
-    * path — the `sim_index_export` entry hash-gates that equivalence
-    * against the same DuckDB oracle as `sim_ivfpq_ann`.
+    * Assignment and encoding are [[encodePostings]], the encoder the
+    * in-memory paths rank, so a query replayed from the layout is
+    * bit-identical to the in-memory path — the `sim_index_export` entry
+    * hash-gates that equivalence against the same DuckDB oracle as
+    * `sim_ivfpq_ann`.
     *
     * `residual = true` encodes `v − centroid(cell(v))` instead of `v`
     * (the FAISS IVFx,PQy default — `sim_ivfpq_res_ann`'s convention);
@@ -1759,71 +1641,68 @@ object Similarity {
     * lands in the manifest so [[ivfPqTopKFromIndex]] builds the
     * per-probed-cell ADC table the encoding requires. The
     * `sim_index_export_res` entry hash-gates this variant against the
-    * same oracle as `sim_ivfpq_res_ann`. */
+    * same oracle as `sim_ivfpq_res_ann`.
+    *
+    * Geometry is checked before anything is written: the codebook must
+    * hold subspaces 0..m−1 of `dim/m`-long codewords and every centroid
+    * must be `dim` long (the native dot is NULL on a length mismatch,
+    * which would silently encode every sub-vector as code 0); encoding
+    * fails on a vector that is not `dim` long. */
   def writeIvfPqIndex(emb: DataFrame, centsIn: DataFrame, codebookIn: DataFrame,
                       dir: String, version: Int, m: Int = 8,
                       dim: Int = 64, residual: Boolean = false): Unit = {
+    require(dim % m == 0, "m must divide dim")
     val base = s"$dir/v=$version"
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val cents = centsIn
-      .select(col("cell").cast("long").as("cell"), col("cv"),
-        normFast(col("cv")).as("cnrm"))
-    val codebook = codebookIn.select(col("s").cast("int").as("s"),
-      col("code").cast("int").as("code"), col("cw"))
+    val e = vectors(emb)
+    val (cents, codebook) = quantizers(centsIn, codebookIn)
+    // the aggregates the manifest needs anyway, widened to carry the
+    // geometry check (no extra job)
+    val cb = codebook.agg(max(col("code")), sort_array(collect_set(col("s"))),
+      min(size(col("cw"))), max(size(col("cw")))).head()
+    require(cb.getSeq[Int](1) == (0 until m) &&
+      cb.get(2) == dim / m && cb.get(3) == dim / m,
+      s"codebook has subspaces ${cb.getSeq[Int](1).mkString("[", ",", "]")} of " +
+        s"${cb.get(2)}..${cb.get(3)}-long codewords; m = $m over dim = $dim " +
+        s"needs subspaces 0..${m - 1} of ${dim / m}-long codewords")
+    val ct = cents.agg(count(lit(1)), min(size(col("cv"))), max(size(col("cv"))))
+      .head()
+    require(ct.get(1) == dim && ct.get(2) == dim,
+      s"centroids are ${ct.get(1)}..${ct.get(2)} long, the index has dim = $dim")
     cents.select(col("cell"), col("cv")).write.mode("overwrite")
       .parquet(s"$base/centroids")
     codebook.write.mode("overwrite").parquet(s"$base/codebook")
     encodePostings(e, cents, codebook, m, dim, residual)
       .write.mode("overwrite").partitionBy("cell").parquet(s"$base/postings")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val nCodes = codebook.agg(max(col("code"))).collect()(0).getInt(0) + 1
-    Seq((version, dim, m, nCodes, cents.count(), e.count(), residual))
-      .toDF("version", "dim", "m", "n_codes", "n_cells", "n_vectors", "residual")
-      .coalesce(1).write.mode("overwrite").parquet(s"$base/manifest")
+    writeManifest(emb.sparkSession, base, version, dim, m, cb.getInt(0) + 1,
+      ct.getLong(0), e.count(), residual)
   }
 
-  /** Assignment + PQ encoding shared by [[writeIvfPqIndex]] (full
-    * builds) and [[appendIvfPqDelta]] (incremental batches): the same
-    * code path by construction, so compaction merging stored base
-    * postings with a delta is bit-identical to a from-scratch rebuild
-    * over the merged corpus (IndexCompactSpec pins it). Expects
-    * `(vec_id, v, nrm)` input and NORMALIZED quantizer frames (cents
-    * with cnrm, codebook with int s/code); emits the postings schema
-    * `(vec_id, cell, codes, v, nrm)`. */
+  /** Assignment + PQ encoding: the postings of [[writeIvfPqIndex]] (full
+    * builds) and [[appendIvfPqDelta]] (incremental batches) and the
+    * in-memory corpus of [[ivfPqTopK]]/[[ivfPqTopKWith]] — one encoder
+    * by construction, so compaction merging stored base postings with a
+    * delta is bit-identical to a from-scratch rebuild over the merged
+    * corpus (IndexCompactSpec pins it), and a layout replay equals the
+    * in-memory query. Expects `(vec_id, v, nrm)` input and [[quantizers]]
+    * frames; emits the postings schema `(vec_id, cell, codes, v, nrm)`.
+    * A vector that is not `dim` long fails the job. */
   private def encodePostings(e: DataFrame, cents: DataFrame,
                              codebook: DataFrame, m: Int, dim: Int,
                              residual: Boolean): DataFrame = {
-    require(dim % m == 0, "m must divide dim")
-    val sub = dim / m
-    val assigned = assignCells(e, cents)
+    val checked = e.withColumn("v", when(size(col("v")) =!= dim,
+      raise_error(concat(lit("vector "), col("vec_id").cast("string"),
+        lit(" has "), size(col("v")).cast("string"),
+        lit(s" dims, the index has dim = $dim"))))
+      .otherwise(col("v")))
+    val assigned = assignCells(checked, cents)
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-    def l2sq(a: Column, b: Column): Column =
-      dotFast(a, a) + dotFast(b, b) - lit(2.0) * dotFast(a, b)
-    // the encoded vector: raw, or the residual against the assigned cell
-    // (the ivfPqTopK convention, zip_with subtraction)
-    val encBase =
-      if (!residual) assigned.select(col("vec_id"), col("v").as("ev"))
-      else assigned
-        .join(broadcast(cents.select(col("cell"), col("cv"))), Seq("cell"))
-        .select(col("vec_id"),
-          zip_with(col("v"), col("cv"), (x, c) => x - c).as("ev"))
-    val slices = encBase.select(col("vec_id"),
-      posexplode(array((0 until m).map(s => slice(col("ev"), s * sub + 1, sub)): _*))
-        .as(Seq("s", "vs")))
-    val enc = slices.join(broadcast(codebook), Seq("s"))
-      .withColumn("d2", l2sq(col("vs"), col("cw")))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy("vec_id", "s").orderBy(col("d2"), col("code"))))
-      .filter(col("rn") === 1)
+    val codes = nearestCodes(encodedSlices(assigned, cents, m, dim, residual), codebook)
       // codes as ONE array ordered by subspace (collect_list order is
       // engine-nondeterministic; the struct sort pins it)
       .groupBy("vec_id")
       .agg(transform(sort_array(collect_list(struct(col("s"), col("code")))),
         x => x.getField("code")).as("codes"))
-    assigned.join(enc, Seq("vec_id"))
+    assigned.join(codes, Seq("vec_id"))
       .select(col("vec_id"), col("cell"), col("codes"), col("v"), col("nrm"))
   }
 
@@ -1839,6 +1718,43 @@ object Similarity {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
+  /** A postings-schema parquet dir; `cell` comes back through partition
+    * discovery, which infers int — pinned to long. */
+  private def readPostings(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(dir).withColumn("cell", col("cell").cast("long"))
+
+  /** The one manifest + quantizer reader: `dir/v=<version>`'s manifest
+    * fields and centroid/codebook frames, over the given postings (append
+    * never touches the base postings, so it does not open them).
+    * Manifests written before the residual variant existed lack the
+    * `residual` column; they are all raw-encoded by construction, so the
+    * absent column reads as false (additive schema evolution). */
+  private def readLayout(spark: SparkSession, dir: String, version: Int,
+                         postings: => DataFrame): IvfPqIndex = {
+    val base = s"$dir/v=$version"
+    val mf = spark.read.parquet(s"$base/manifest").collect()(0)
+    IvfPqIndex(
+      version = mf.getAs[Int]("version"), dim = mf.getAs[Int]("dim"),
+      m = mf.getAs[Int]("m"), nCodes = mf.getAs[Int]("n_codes"),
+      nCells = mf.getAs[Long]("n_cells"), nVectors = mf.getAs[Long]("n_vectors"),
+      residual = mf.schema.fieldNames.contains("residual") &&
+        mf.getAs[Boolean]("residual"),
+      cents = spark.read.parquet(s"$base/centroids"),
+      codebook = spark.read.parquet(s"$base/codebook"),
+      postings = postings)
+  }
+
+  /** The manifest row of layout `base`, written last: a layout version
+    * is committed once its manifest lands. */
+  private def writeManifest(spark: SparkSession, base: String, version: Int,
+                            dim: Int, m: Int, nCodes: Int, nCells: Long,
+                            nVectors: Long, residual: Boolean): Unit = {
+    import spark.implicits._
+    Seq((version, dim, m, nCodes, nCells, nVectors, residual))
+      .toDF("version", "dim", "m", "n_codes", "n_cells", "n_vectors", "residual")
+      .coalesce(1).write.mode("overwrite").parquet(s"$base/manifest")
+  }
+
   /** Encode an ingest batch against an EXISTING layout's quantizers and
     * persist it as that version's accumulated delta state
     * (`dir/v=<version>/delta/`, postings schema, cell-partitioned) —
@@ -1849,34 +1765,27 @@ object Similarity {
     * — O(batch) work, the base postings are never touched. Repeated
     * calls accumulate by vec_id (append semantics; a re-sent vec_id
     * replaces its earlier delta row — last write wins, matching the
-    * upsert [[compactIvfPqIndex]] applies against the base). */
+    * upsert [[compactIvfPqIndex]] applies against the base). A batch
+    * vector that is not the manifest's `dim` long fails the append
+    * before the accumulated delta is replaced. */
   def appendIvfPqDelta(batch: DataFrame, dir: String, version: Int): Unit = {
     val spark = batch.sparkSession
-    val base = s"$dir/v=$version"
-    val mf = spark.read.parquet(s"$base/manifest").collect()(0)
-    val residual = mf.schema.fieldNames.contains("residual") &&
-      mf.getAs[Boolean]("residual")
-    val m = mf.getAs[Int]("m"); val dim = mf.getAs[Int]("dim")
-    val cents = spark.read.parquet(s"$base/centroids")
-      .select(col("cell").cast("long").as("cell"), col("cv"),
-        normFast(col("cv")).as("cnrm"))
-    val codebook = spark.read.parquet(s"$base/codebook")
-      .select(col("s").cast("int").as("s"), col("code").cast("int").as("code"),
-        col("cw"))
-    val e = batch.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val deltaDir = s"$base/delta"
-    val fresh = encodePostings(e, cents, codebook, m, dim, residual)
+    val idx = readLayout(spark, dir, version, spark.emptyDataFrame)
+    val (cents, codebook) = quantizers(idx.cents, idx.codebook)
+    val deltaDir = s"$dir/v=$version/delta"
+    val fresh = encodePostings(vectors(batch), cents, codebook, idx.m, idx.dim,
+      idx.residual)
     val merged =
       if (!committedDirExists(spark, deltaDir)) fresh
       else {
-        val prior = spark.read.parquet(deltaDir)
-          .withColumn("cell", col("cell").cast("long"))
-        // parquet can't overwrite its own input mid-plan; pin the prior
-        // delta before the rewrite (bounded: a delta is one ingest window)
-        val pinned = prior.localCheckpoint(true)
-        pinned.join(fresh.select("vec_id"), Seq("vec_id"), "left_anti")
+        // parquet can't overwrite its own input mid-plan: materialize the
+        // merge (bounded: a delta is one ingest window) before the rewrite
+        // deletes the prior delta — which also surfaces an encoding
+        // failure while the prior delta is still intact
+        val prior = readPostings(spark, deltaDir)
+        prior.join(fresh.select("vec_id"), Seq("vec_id"), "left_anti")
           .unionByName(fresh)
+          .localCheckpoint(true)
       }
     merged.write.mode("overwrite").partitionBy("cell").parquet(deltaDir)
   }
@@ -1884,80 +1793,48 @@ object Similarity {
   /** Merge a layout version's accumulated delta into the NEXT layout
     * version — the nightly close of the batch/serving handoff (r13
     * VERDICT task 3): postings(v=N) upserted with delta (delta wins on
-    * vec_id collision) → postings(v=N+1), quantizers copied UNCHANGED
-    * (compaction reorganizes layout, never geometry — a query probes
-    * the same cells before and after), manifest rewritten with the new
-    * version and count. Pure layout-level work: reads codes + raw
-    * vectors from parquet and rewrites cell partitions — the base
-    * corpus is never re-assigned or re-encoded, so the nightly run
-    * costs O(index + delta), not O(corpus × training). Version
-    * directories are immutable once their manifest lands: readers
-    * replaying v=N are untouched mid-compaction (IndexCompactSpec pins
-    * both the reader isolation and compacted ≡ from-scratch-rebuild
-    * equality; the `sim_index_compact` entry hash-gates the v=N+1
-    * replay against a full-recompute DuckDB oracle). Returns the new
-    * version number. */
+    * vec_id collision, the [[readIvfPqIndexWithDelta]] overlay) →
+    * postings(v=N+1), quantizers copied UNCHANGED (compaction
+    * reorganizes layout, never geometry — a query probes the same cells
+    * before and after), manifest rewritten with the new version and
+    * count. Pure layout-level work: reads codes + raw vectors from
+    * parquet and rewrites cell partitions — the base corpus is never
+    * re-assigned or re-encoded, so the nightly run costs O(index +
+    * delta), not O(corpus × training). Version directories are
+    * immutable once their manifest lands: readers replaying v=N are
+    * untouched mid-compaction, and a compaction whose v=N+1 is already
+    * committed (a re-run job) fails instead of rewriting it under its
+    * readers (IndexCompactSpec pins reader isolation, the refusal and
+    * compacted ≡ from-scratch-rebuild equality; the `sim_index_compact`
+    * entry hash-gates the v=N+1 replay against a full-recompute DuckDB
+    * oracle). Returns the new version number. */
   def compactIvfPqIndex(spark: SparkSession, dir: String,
                         fromVersion: Int): Int = {
-    val from = s"$dir/v=$fromVersion"
     val toVersion = fromVersion + 1
     val to = s"$dir/v=$toVersion"
-    val mf = spark.read.parquet(s"$from/manifest").collect()(0)
-    val residual = mf.schema.fieldNames.contains("residual") &&
-      mf.getAs[Boolean]("residual")
-    val basePosts = spark.read.parquet(s"$from/postings")
-      .withColumn("cell", col("cell").cast("long"))
-    val deltaDir = s"$from/delta"
-    val merged =
-      if (!committedDirExists(spark, deltaDir)) basePosts
-      else {
-        val delta = spark.read.parquet(deltaDir)
-          .withColumn("cell", col("cell").cast("long"))
-        basePosts.join(delta.select("vec_id"), Seq("vec_id"), "left_anti")
-          .unionByName(delta)
-      }
-    spark.read.parquet(s"$from/centroids").write.mode("overwrite")
-      .parquet(s"$to/centroids")
-    spark.read.parquet(s"$from/codebook").write.mode("overwrite")
-      .parquet(s"$to/codebook")
-    merged.write.mode("overwrite").partitionBy("cell").parquet(s"$to/postings")
-    import spark.implicits._
-    val n = spark.read.parquet(s"$to/postings").count()
-    Seq((toVersion, mf.getAs[Int]("dim"), mf.getAs[Int]("m"),
-      mf.getAs[Int]("n_codes"), mf.getAs[Long]("n_cells"), n, residual))
-      .toDF("version", "dim", "m", "n_codes", "n_cells", "n_vectors", "residual")
-      .coalesce(1).write.mode("overwrite").parquet(s"$to/manifest")
+    if (committedDirExists(spark, s"$to/manifest"))
+      throw new IllegalStateException(s"$to is already committed; layout " +
+        s"versions are immutable, so v=$fromVersion cannot be compacted into it again")
+    val from = readIvfPqIndexWithDelta(spark, dir, fromVersion)
+    from.cents.write.mode("overwrite").parquet(s"$to/centroids")
+    from.codebook.write.mode("overwrite").parquet(s"$to/codebook")
+    from.postings.write.mode("overwrite").partitionBy("cell").parquet(s"$to/postings")
+    writeManifest(spark, to, toVersion, from.dim, from.m, from.nCodes,
+      from.nCells, spark.read.parquet(s"$to/postings").count(), from.residual)
     toVersion
   }
 
-  /** Open an exported index: reads the manifest and binds the three
-    * frames. The partition column `cell` comes back through parquet
-    * partition discovery (cast pinned to long — discovery infers int).
-    * Manifests written before the residual variant existed lack the
-    * `residual` column; they are all raw-encoded by construction, so
-    * the absent column reads as false (additive schema evolution). */
-  def readIvfPqIndex(spark: SparkSession, dir: String, version: Int): IvfPqIndex = {
-    val base = s"$dir/v=$version"
-    val mf = spark.read.parquet(s"$base/manifest").collect()(0)
-    val residual = mf.schema.fieldNames.contains("residual") &&
-      mf.getAs[Boolean]("residual")
-    IvfPqIndex(
-      version = mf.getAs[Int]("version"), dim = mf.getAs[Int]("dim"),
-      m = mf.getAs[Int]("m"), nCodes = mf.getAs[Int]("n_codes"),
-      nCells = mf.getAs[Long]("n_cells"), nVectors = mf.getAs[Long]("n_vectors"),
-      residual = residual,
-      cents = spark.read.parquet(s"$base/centroids"),
-      codebook = spark.read.parquet(s"$base/codebook"),
-      postings = spark.read.parquet(s"$base/postings")
-        .withColumn("cell", col("cell").cast("long")))
-  }
+  /** Open an exported index: reads the manifest ([[readLayout]]) and
+    * binds the three frames. */
+  def readIvfPqIndex(spark: SparkSession, dir: String, version: Int): IvfPqIndex =
+    readLayout(spark, dir, version, readPostings(spark, s"$dir/v=$version/postings"))
 
   /** Open v=N with its accumulated UN-COMPACTED delta overlaid on the
     * postings — the state a serving fleet is actually in between
     * nightly compactions (ref: the job-artifact refresh loop
     * `pipeline_helpers.py:63-77`): reads land on base ∪ delta with
     * delta-wins-on-collision, the very upsert [[compactIvfPqIndex]]
-    * later applies, so compaction is TRANSPARENT to readers — the
+    * writes out, so compaction is TRANSPARENT to readers — the
     * `sim_index_query_delta` entry hash-proves a query over this
     * overlay equals the same query over the compacted v=N+1.
     *
@@ -1975,8 +1852,7 @@ object Similarity {
     val deltaDir = s"$dir/v=$version/delta"
     if (!committedDirExists(spark, deltaDir)) base
     else {
-      val delta = spark.read.parquet(deltaDir)
-        .withColumn("cell", col("cell").cast("long"))
+      val delta = readPostings(spark, deltaDir)
       val overlay = base.postings
         .join(broadcast(delta.select("vec_id")), Seq("vec_id"), "left_anti")
         .unionByName(delta.select(base.postings.columns.map(col): _*))
@@ -1985,60 +1861,74 @@ object Similarity {
   }
 
   /** IVF-PQ top-k replayed from an exported layout ALONE — the serving
-    * read path: probe against the index centroids, ADC-rank the probed
-    * cells' CODES (partition-pruned scan), exact-re-rank the shortlist
-    * from the index's own raw vectors. Bit-identical to
-    * [[ivfPqTopKWith]] over the same quantizers by construction (same
-    * conventions at every stage); the catalog entry proves it by hash
-    * against the `sim_ivfpq_ann` oracle.
-    *
-    * The manifest's `residual` flag (not a caller argument — the layout
-    * is self-describing) switches the ADC table to per-probed-cell: the
-    * query's residual differs per cell, so `qtab` carries nprobe × m ×
-    * nCodes rows joined on (cell, s, code) instead of m × nCodes on
-    * (s, code) — still broadcast-sized. Hash-gated against the
-    * `sim_ivfpq_res_ann` oracle by `sim_index_export_res`. */
+    * read path: [[ivfPqRank]] over the index's postings and quantizers,
+    * with the encoding taken from the manifest's `residual` flag (not a
+    * caller argument — the layout is self-describing). The postings
+    * scan is partition-pruned to the probed cells, and the exact re-rank
+    * reads the index's own raw vectors. The kernel is the one the
+    * in-memory paths rank with, so the replay equals [[ivfPqTopKWith]] /
+    * [[ivfPqTopK]] over the same quantizers; the catalog proves it by
+    * hash against the `sim_ivfpq_ann` (`sim_index_export`) and
+    * `sim_ivfpq_res_ann` (`sim_index_export_res`) oracles. */
   def ivfPqTopKFromIndex(idx: IvfPqIndex, queryId: Long, k: Int,
-                         nprobe: Int = 4, shortlist: Int = 50): DataFrame = {
-    val sub = idx.dim / idx.m
-    def l2sq(a: Column, b: Column): Column =
-      dotFast(a, a) + dotFast(b, b) - lit(2.0) * dotFast(a, b)
-    val q = idx.postings.filter(col("vec_id") === queryId)
+                         nprobe: Int = 4, shortlist: Int = 50): DataFrame =
+    ivfPqRank(idx.postings, idx.cents, idx.codebook, idx.m, idx.dim,
+      idx.residual, queryId, k, nprobe, shortlist)
+
+  /** THE IVF-PQ kernel (FAISS `IVFx,PQy` semantics) over postings `(vec_id,
+    * cell, codes, v, nrm)` — an exported layout's or the in-memory
+    * [[encodePostings]] output — and the quantizers they were encoded
+    * with, centroids `(cell, cv)` and codebook `(s, code, cw)`:
+    *
+    *  1. probe: the query's `nprobe` nearest cells by centroid cosine,
+    *     ties to the lowest cell;
+    *  2. ADC: one table of squared L2 from the query's sub-vectors to
+    *     every codeword — m × nCodes rows joined on (s, code), or with
+    *     `residual` one per probed cell over the query's residual
+    *     against that cell's centroid (nprobe × m × nCodes rows joined on
+    *     (cell, s, code)); broadcast either way. Candidates are the
+    *     probed cells' postings (the query itself excluded), their codes
+    *     exploded and summed through the table;
+    *  3. shortlist: the `shortlist` lowest ADC sums, ROUND(6) with vec_id
+    *     tiebreak;
+    *  4. re-rank: exact cosine of the shortlist against the query,
+    *     ROUND(6) with vec_id tiebreak, top `k`.
+    *
+    * Returns `(vec_id, cell, adc_dist, cos)`. Both rank boundaries round
+    * before ordering, so the result is deterministic on both engines.
+    * Scale shape: a probe reads nprobe cell partitions of m-int codes
+    * (32× smaller than the float vectors: nprobe = 4 of codes ≈ 1/8 the
+    * bytes of one cell of floats) plus `shortlist` float rows. */
+  private def ivfPqRank(postings: DataFrame, cents: DataFrame,
+                        codebook: DataFrame, m: Int, dim: Int,
+                        residual: Boolean, queryId: Long, k: Int,
+                        nprobe: Int, shortlist: Int): DataFrame = {
+    val q = postings.filter(col("vec_id") === queryId)
       .select(col("v").as("qv"), col("nrm").as("qnrm"))
-    val cents = idx.cents.select(col("cell"), col("cv"),
-      normFast(col("cv")).as("cnrm"))
-    val probed = cents.crossJoin(broadcast(q))
+    val probed = cents.select(col("cell"), col("cv"), normFast(col("cv")).as("cnrm"))
+      .crossJoin(broadcast(q))
       .withColumn("qccos",
         dotFast(col("cv"), col("qv")) / (col("cnrm") * col("qnrm")))
       .orderBy(col("qccos").desc, col("cell"))
       .limit(nprobe)
       .select(col("cell"), col("cv"))
     val qtab =
-      if (!idx.residual) {
-        val qslices = idx.postings.filter(col("vec_id") === queryId)
-          .select(posexplode(array(
-            (0 until idx.m).map(s => slice(col("v"), s * sub + 1, sub)): _*))
-            .as(Seq("s", "qvs")))
-        idx.codebook.join(broadcast(qslices), Seq("s"))
-          .select(lit(null).cast("long").as("qcell"), col("s"), col("code"),
-            l2sq(col("qvs"), col("cw")).as("qd2"))
-      } else {
+      if (!residual)
+        adcTable(codebook, postings.filter(col("vec_id") === queryId)
+          .select(subVectors(col("v"), m, dim).as(Seq("s", "qvs"))),
+          lit(null).cast("long").as("qcell"))
+      else {
         val qres = probed.crossJoin(broadcast(q))
-          .select(col("cell").as("qcell"),
-            zip_with(col("qv"), col("cv"), (x, c) => x - c).as("qr"))
-        val qslices = qres.select(col("qcell"), posexplode(array(
-            (0 until idx.m).map(s => slice(col("qr"), s * sub + 1, sub)): _*))
-            .as(Seq("s", "qvs")))
-        idx.codebook.join(broadcast(qslices), Seq("s"))
-          .select(col("qcell"), col("s"), col("code"),
-            l2sq(col("qvs"), col("cw")).as("qd2"))
+          .select(col("cell").as("qcell"), minus(col("qv"), col("cv")).as("qr"))
+        adcTable(codebook, qres.select(col("qcell"),
+          subVectors(col("qr"), m, dim).as(Seq("s", "qvs"))), col("qcell"))
       }
-    val candCodes = idx.postings.join(broadcast(probed.select("cell")), Seq("cell"))
+    val candCodes = postings.join(broadcast(probed.select("cell")), Seq("cell"))
       .filter(col("vec_id") =!= queryId)
       .select(col("vec_id"), col("cell"),
         posexplode(col("codes")).as(Seq("s", "code")))
     val joined =
-      if (!idx.residual) candCodes.join(broadcast(qtab), Seq("s", "code"))
+      if (!residual) candCodes.join(broadcast(qtab), Seq("s", "code"))
       else candCodes.join(broadcast(qtab),
         col("cell") === col("qcell") &&
           candCodes("s") === qtab("s") && candCodes("code") === qtab("code"))
@@ -2048,7 +1938,7 @@ object Similarity {
       .orderBy(col("adc_dist"), col("vec_id"))
       .limit(shortlist)
     short
-      .join(idx.postings.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
+      .join(postings.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
       .crossJoin(broadcast(q))
       .select(col("vec_id"), col("cell"), col("adc_dist"),
         round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))

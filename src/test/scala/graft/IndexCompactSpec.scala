@@ -9,23 +9,21 @@ import graft.operators.Similarity
   * version, and prove (1) compacted layout ≡ from-scratch rebuild over
   * the merged corpus, (2) the query replay is identical on both, (3)
   * readers of v=N are untouched mid-compaction (version immutability),
-  * (4) delta-wins upsert semantics on vec_id collision, and (5) dynamic
-  * partition pruning still fires on the compacted postings scan. */
+  * (4) delta-wins upsert semantics on vec_id collision, (5) dynamic
+  * partition pruning still fires on the compacted postings scan, (6) a
+  * committed version is never compacted into again, and (7) quantizer or
+  * batch geometry that does not match the index fails instead of
+  * committing garbage codes. (1) and (2) run for both encodings. */
 class IndexCompactSpec extends SparkSpec {
 
   private def emb: DataFrame = Tables.embeddings(spark, sf0001)
 
-  /** First-16 deterministic quantizers — sim_index_export's convention. */
-  private def quantizers(e: DataFrame): (DataFrame, DataFrame) = {
-    val e0 = e.select(col("vec_id"), Similarity.toDoubleArray(col("embedding")).as("v"))
-    val cents = e0.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cell"), col("v").as("cv"))
-    val cb = e0.filter(col("vec_id") < 16).select(col("vec_id"),
-      posexplode(array((0 until 8).map(ss =>
-        slice(col("v"), ss * 8 + 1, 8)): _*)).as(Seq("s", "vs")))
-      .select(col("s"), col("vec_id").cast("int").as("code"), col("vs").as("cw"))
-    (cents, cb)
-  }
+  /** First-16 deterministic quantizers — sim_index_export's convention,
+    * or with `residual` sim_index_export_res's. */
+  private def quantizers(e: DataFrame, residual: Boolean = false): (DataFrame, DataFrame) =
+    (Similarity.deterministicCentroids(e, nCells = 16),
+      if (residual) Similarity.residualCodebook(e, nCells = 16, nCodes = 16)
+      else Similarity.deterministicCodebook(e, nCodes = 16))
 
   private def batchOf(e: DataFrame): DataFrame =
     e.filter(col("vec_id") % 17 === 0)
@@ -44,52 +42,119 @@ class IndexCompactSpec extends SparkSpec {
       queryId = 20, k = 10, nprobe = 4, shortlist = 50)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
 
-  test("compacted layout equals a from-scratch rebuild over the merged corpus") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_idx").toString
+  /** Files of layout version `v` with their modification times (the
+    * delta is append state, not layout). */
+  private def fileListing(dir: String, v: Int): Map[String, Long] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    walk(new java.io.File(s"$dir/v=$v"))
+      .filterNot(f => f.getPath.contains("/delta/"))
+      .map(f => f.getPath -> f.lastModified()).toMap
+  }
+
+  for ((encoding, residual) <- Seq("" -> false, " (residual encoding)" -> true))
+    test(s"compacted layout equals a from-scratch rebuild over the merged corpus$encoding") {
+      val dir = java.nio.file.Files.createTempDirectory("graft_idx").toString
+      val (cents, cb) = quantizers(emb, residual)
+      Similarity.writeIvfPqIndex(emb, cents, cb, dir, version = 1, residual = residual)
+      Similarity.appendIvfPqDelta(batchOf(emb), dir, version = 1)
+
+      // reader isolation: snapshot the v=1 replay AND the v=1 file listing
+      // before compaction; both must be untouched after
+      val v1Before = replayRows(dir, 1)
+      val v1Files = fileListing(dir, 1)
+
+      val newV = Similarity.compactIvfPqIndex(spark, dir, fromVersion = 1)
+      assert(newV == 2)
+
+      assert(fileListing(dir, 1) == v1Files, "v=1 layout files must be untouched by compaction")
+      assert(replayRows(dir, 1) == v1Before, "v=1 replay must be identical mid-lifecycle")
+
+      // from-scratch rebuild over corpus ∪ batch with the SAME quantizers
+      val rebuildDir = java.nio.file.Files.createTempDirectory("graft_idx_rb").toString
+      Similarity.writeIvfPqIndex(emb.select("vec_id", "embedding").unionByName(batchOf(emb)),
+        cents, cb, rebuildDir, version = 1, residual = residual)
+
+      val compacted = Similarity.readIvfPqIndex(spark, dir, 2)
+      val rebuilt = Similarity.readIvfPqIndex(spark, rebuildDir, 1)
+      assert(postingsSet(compacted.postings) == postingsSet(rebuilt.postings),
+        "compacted postings must equal the from-scratch rebuild's")
+      assert(compacted.nVectors == rebuilt.nVectors)
+      assert(compacted.dim == rebuilt.dim && compacted.m == rebuilt.m &&
+        compacted.nCodes == rebuilt.nCodes && compacted.nCells == rebuilt.nCells &&
+        compacted.residual == rebuilt.residual)
+      assert(compacted.version == 2 && compacted.residual == residual)
+
+      // and the replay agrees between the two layouts
+      val fromCompact = replayRows(dir, 2)
+      assert(fromCompact == replayRows(rebuildDir, 1),
+        "query replay must be bit-identical on compacted vs rebuilt layout")
+
+      sources.Artifacts.deleteRecursively(new java.io.File(dir))
+      sources.Artifacts.deleteRecursively(new java.io.File(rebuildDir))
+    }
+
+  test("compaction refuses to overwrite a committed version") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_twice").toString
     val (cents, cb) = quantizers(emb)
     Similarity.writeIvfPqIndex(emb, cents, cb, dir, version = 1)
     Similarity.appendIvfPqDelta(batchOf(emb), dir, version = 1)
-
-    // reader isolation: snapshot the v=1 replay AND the v=1 file listing
-    // before compaction; both must be untouched after
-    val v1Before = replayRows(dir, 1)
-    def fileListing(v: Int): Map[String, Long] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(s"$dir/v=$v"))
-        .filterNot(f => f.getPath.contains("/delta/")) // delta is append state, not layout
-        .map(f => f.getPath -> f.lastModified()).toMap
-    }
-    val v1Files = fileListing(1)
-
-    val newV = Similarity.compactIvfPqIndex(spark, dir, fromVersion = 1)
-    assert(newV == 2)
-
-    assert(fileListing(1) == v1Files, "v=1 layout files must be untouched by compaction")
-    assert(replayRows(dir, 1) == v1Before, "v=1 replay must be identical mid-lifecycle")
-
-    // from-scratch rebuild over corpus ∪ batch with the SAME quantizers
-    val rebuildDir = java.nio.file.Files.createTempDirectory("graft_idx_rb").toString
-    Similarity.writeIvfPqIndex(emb.select("vec_id", "embedding").unionByName(batchOf(emb)),
-      cents, cb, rebuildDir, version = 1)
-
-    val compacted = Similarity.readIvfPqIndex(spark, dir, 2)
-    val rebuilt = Similarity.readIvfPqIndex(spark, rebuildDir, 1)
-    assert(postingsSet(compacted.postings) == postingsSet(rebuilt.postings),
-      "compacted postings must equal the from-scratch rebuild's")
-    assert(compacted.nVectors == rebuilt.nVectors)
-    assert(compacted.dim == rebuilt.dim && compacted.m == rebuilt.m &&
-      compacted.nCodes == rebuilt.nCodes && compacted.nCells == rebuilt.nCells &&
-      compacted.residual == rebuilt.residual)
-    assert(compacted.version == 2)
-
-    // and the replay agrees between the two layouts
-    val fromCompact = replayRows(dir, 2)
-    assert(fromCompact == replayRows(rebuildDir, 1),
-      "query replay must be bit-identical on compacted vs rebuilt layout")
-
+    assert(Similarity.compactIvfPqIndex(spark, dir, fromVersion = 1) == 2)
+    val v2Files = fileListing(dir, 2)
+    val v2Replay = replayRows(dir, 2)
+    // a re-run of the same compaction (e.g. a retried nightly job)
+    val err = intercept[IllegalStateException](
+      Similarity.compactIvfPqIndex(spark, dir, fromVersion = 1))
+    assert(err.getMessage.contains("v=2"), err.getMessage)
+    assert(fileListing(dir, 2) == v2Files, "v=2 must not be rewritten under its readers")
+    assert(replayRows(dir, 2) == v2Replay)
     sources.Artifacts.deleteRecursively(new java.io.File(dir))
-    sources.Artifacts.deleteRecursively(new java.io.File(rebuildDir))
+  }
+
+  /** The messages of `t` and its causes, joined. */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  private def committed(path: String): Boolean =
+    new java.io.File(s"$path/_SUCCESS").exists
+
+  test("writeIvfPqIndex rejects a codebook that does not split dim into m subspaces") {
+    // an m = 4 codebook written with the default m = 8: before the check
+    // the native dot returned NULL for every 8-vs-16-long pair and every
+    // sub-vector silently encoded as code 0
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_geo").toString
+    val cb4 = Similarity.deterministicCodebook(emb, nCodes = 16, m = 4)
+    val err = intercept[IllegalArgumentException](Similarity.writeIvfPqIndex(emb,
+      Similarity.deterministicCentroids(emb, nCells = 16), cb4, dir, version = 1))
+    assert(err.getMessage.contains("m = 8"), err.getMessage)
+    assert(!committed(s"$dir/v=1/manifest") && !committed(s"$dir/v=1/postings"))
+    sources.Artifacts.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("writeIvfPqIndex rejects centroids whose length is not dim") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_cdim").toString
+    val cents32 = Similarity.deterministicCentroids(emb, nCells = 16)
+      .withColumn("cv", slice(col("cv"), 1, 32))
+    val err = intercept[IllegalArgumentException](Similarity.writeIvfPqIndex(emb,
+      cents32, Similarity.deterministicCodebook(emb, nCodes = 16), dir, version = 1))
+    assert(err.getMessage.contains("dim = 64"), err.getMessage)
+    assert(!committed(s"$dir/v=1/manifest"))
+    sources.Artifacts.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("appendIvfPqDelta rejects batch vectors whose length is not the manifest's dim") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_bdim").toString
+    val (cents, cb) = quantizers(emb)
+    Similarity.writeIvfPqIndex(emb, cents, cb, dir, version = 1)
+    Similarity.appendIvfPqDelta(batchOf(emb), dir, version = 1)
+    val before = postingsSet(Similarity.readIvfPqIndexWithDelta(spark, dir, 1).postings)
+    val short = batchOf(emb).limit(3)
+      .select((col("vec_id") + 1000000L).as("vec_id"), slice(col("embedding"), 1, 32).as("embedding"))
+    val err = intercept[Exception](Similarity.appendIvfPqDelta(short, dir, version = 1))
+    assert(messages(err).contains("the index has dim = 64"), messages(err))
+    // the accumulated delta survives the failed append
+    assert(postingsSet(Similarity.readIvfPqIndexWithDelta(spark, dir, 1).postings) == before)
+    sources.Artifacts.deleteRecursively(new java.io.File(dir))
   }
 
   test("upsert semantics: a delta row replaces its base vec_id; appends accumulate") {

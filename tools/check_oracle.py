@@ -6,10 +6,12 @@ loads the matching Spark parquet output from graft.Verify, and compares:
 schema (column names), row count, and values (rows sorted, columns sorted by
 name — per the driver contract). Exact match required; doubles compared
 bit-exactly after canonical repr, so any fp divergence shows up here first.
+With SPARK_GRAFT_ONLY set (the comma-separated entry filter graft.Verify
+reads), only those entries are checked.
 
 Dev tool only — NOT part of the shipped Spark library.
 """
-import json, math, sys
+import json, math, os, sys
 import duckdb
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -21,11 +23,21 @@ def canon(v):
         return repr(v)
     return repr(v)
 
+def load_oracle(outdir):
+    """oracle_sql.json, narrowed to the SPARK_GRAFT_ONLY entries when that
+    comma-separated filter is set — the subset graft.Verify dumped."""
+    oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+    only = os.environ.get("SPARK_GRAFT_ONLY")
+    if only is None:
+        return oracle
+    names = set(only.split(","))
+    return {n: sql for n, sql in oracle.items() if n in names}
+
 def main(outdir, sfdir):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
-    oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+    oracle = load_oracle(outdir)
     n_ok = n_bad = 0
     for name, sql in sorted(oracle.items()):
         try:
@@ -74,7 +86,7 @@ def parse_only(outdir, sfdir):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
-    oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+    oracle = load_oracle(outdir)
     n_bad = 0
     for name, sql in sorted(oracle.items()):
         try:
