@@ -46,15 +46,29 @@ object Dedup {
   def shingles(text: Column, n: Int): Column =
     shinglesFromTokens(TextFns.tokens(text), n)
 
-  /** Exploded (id, shingle) stream. Three projection steps so the
-    * optimizer cannot collapse the tokenizer back into the HOF lambda
-    * (CollapseProject keeps the boundary because `toks` is non-cheap and
-    * referenced three times by the shingle expression). */
+  /** Exploded (id, tags…, shingle) stream; `tags` are pass-through
+    * columns of `df`. Three projection steps so the optimizer cannot
+    * collapse the tokenizer back into the HOF lambda (CollapseProject
+    * keeps the boundary because `toks` is non-cheap and referenced three
+    * times by the shingle expression). */
   private def shingleStream(df: DataFrame, textCol: String, idCol: String,
-                            n: Int): DataFrame =
-    df.select(col(idCol), TextFns.tokens(col(textCol)).as("toks"))
-      .select(col(idCol), shinglesFromTokens(col("toks"), n).as("shs"))
-      .select(col(idCol), explode(col("shs")).as("sh"))
+                            n: Int, tags: Seq[String] = Nil): DataFrame = {
+    val keys = col(idCol) +: tags.map(col)
+    df.select(keys :+ TextFns.tokens(col(textCol)).as("toks"): _*)
+      .select(keys :+ shinglesFromTokens(col("toks"), n).as("shs"): _*)
+      .select(keys :+ explode(col("shs")).as("sh"): _*)
+  }
+
+  /** [[shingleStream]] over `probe ∪ corpus` with `__p` marking the
+    * probe side — the one tagged pass [[minhashProbePairs]] and
+    * [[minhashIngestPairs]] run, so both sides share one signature
+    * pipeline. Returns `(idCol, __p, sh)`. */
+  private def taggedShingles(probe: DataFrame, corpus: DataFrame,
+                             textCol: String, idCol: String, n: Int): DataFrame =
+    shingleStream(
+      probe.select(col(idCol), col(textCol)).withColumn("__p", lit(true))
+        .unionByName(corpus.select(col(idCol), col(textCol)).withColumn("__p", lit(false))),
+      textCol, idCol, n, Seq("__p"))
 
   /** Hot n-gram scan: the `k` most document-frequent n-token shingles
     * with df ≥ `minDf` — the memorization-risk / boilerplate audit at
@@ -104,10 +118,9 @@ object Dedup {
   }
 
   /** Exact-Jaccard pair pipeline over an already-persisted shingle
-    * stream `(idCol, sh)` — the body of [[ngramJaccardPairs]], split out
-    * so [[minhashPrCurve]] can run the exact and banded arms over ONE
-    * shared shingle pass (round 16, guide §2.4: the two arms each
-    * re-tokenized and re-shingled the corpus). Caller owns the persist. */
+    * stream `(idCol, sh)` — the body of [[ngramJaccardPairs]], shared
+    * with [[minhashPrCurve]] so its exact and banded arms read one
+    * shingle pass. Caller owns the persist. */
   private def exactPairsFromShingles(sh: DataFrame, idCol: String,
                                      minJaccard: Double): DataFrame = {
     val sizes = sh.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
@@ -116,12 +129,9 @@ object Dedup {
     val inter = a.join(b, Seq("sh"))
       .filter(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
+    withJaccard(inter,
+        sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), Seq("id_a"),
+        sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
       .filter(col("jaccard") > minJaccard)
       .select(col("id_a"), col("id_b"), col("inter"), col("sz_a"), col("sz_b"),
         col("jaccard"))
@@ -195,21 +205,6 @@ object Dedup {
       .orderBy("id_a", "id_b")
   }
 
-  /** MinHash signatures as a dataflow: explode the (id, shingle) stream
-    * once, then k `min(xxhash64(i, sh))` aggregates in a single groupBy.
-    * Array-lambda formulations re-evaluate the shingle construction per
-    * hash (interpreted HOFs have no common-subexpression elimination);
-    * this shape computes shingles exactly once and the k mins run inside
-    * codegen'd hash aggregation. Docs with fewer than n tokens produce no
-    * signature row (they cannot shingle-collide by definition).
-    * Returns (id, h0..h{k-1}). */
-  def minhashSignatures(df: DataFrame, textCol: String, idCol: String,
-                        n: Int, k: Int): DataFrame = {
-    val sh = shingleStream(df, textCol, idCol, n)
-    val aggs = (0 until k).map(i => min(xxhash64(lit(i), col("sh"))).as(s"h$i"))
-    sh.groupBy(col(idCol).as("id")).agg(aggs.head, aggs.tail: _*)
-  }
-
   /** Minhash permutation families. [[NativeFamily]] (xxhash64 seeded by
     * the permutation index — codegen'd, the 100 TB default) is not
     * reproducible outside Spark; [[PortableFamily]] exists so a DuckDB
@@ -234,6 +229,82 @@ object Dedup {
     conv(substring(md5(sh), 1, 15), 16, 10).cast("long"),
     conv(substring(md5(sh), 16, 12), 16, 10).cast("long"))
 
+  /** The MinHash kernel — the only signature and banding code: every
+    * MinHash pipeline below runs its shingle stream `(idCol, tags…, sh)`
+    * through here. Signatures are a dataflow, not array lambdas: k
+    * `min(perm_i(sh))` aggregates plus the set size in ONE hash
+    * aggregation (one shuffle, codegen'd; an array-lambda form would
+    * re-evaluate the shingle construction per hash). Returns
+    *  - `sigs`: `(id, tags…, sz, h0..h{k-1})`;
+    *  - `banded`: `(id, tags…, sz, band, bandhash)`, one row per band of
+    *    k/bands minima — keyed by a murmur `hash` of them for
+    *    [[NativeFamily]], by their comma-joined tuple for
+    *    [[PortableFamily]] (bulkier keys, but a DuckDB oracle forms the
+    *    identical buckets).
+    * Portable path: the md5 digest is computed ONCE per shingle row behind
+    * a projection boundary; the k permutations are integer arithmetic over
+    * its two halves. Docs with fewer than n tokens have no shingle rows,
+    * so no signature (they cannot shingle-collide by definition). */
+  private def minhashBands(sh: DataFrame, idCol: String, tags: Seq[String],
+                           k: Int, bands: Int, family: MinhashFamily)
+      : (DataFrame, DataFrame) = {
+    require(k > 0 && bands > 0 && k % bands == 0,
+      s"MinHash needs k > 0 and bands > 0 with bands dividing k (k = $k, bands = $bands)")
+    val r = k / bands
+    // (hashed stream, permutation i, band key); the band key's type is
+    // constant per family, so array() below stays homogeneous
+    val (hashed, perm, bandKey) = family match {
+      case NativeFamily =>
+        (sh, (i: Int) => xxhash64(lit(i), col("sh")), (hs: Seq[Column]) => hash(hs: _*))
+      case PortableFamily =>
+        val (h1, h2) = portableBaseHashes(col("sh"))
+        (sh.select((col(idCol) +: tags.map(col)) ++
+            Seq(col("sh"), h1.as("mh1"), h2.as("mh2")): _*),
+          (i: Int) => (col("mh1") + lit(i.toLong) * col("mh2")) % lit(PortableMod),
+          (hs: Seq[Column]) => concat_ws(",", hs: _*))
+    }
+    val sigs = hashed.groupBy(col(idCol).as("id") +: tags.map(col): _*)
+      .agg(count(lit(1)).as("sz"), (0 until k).map(i => min(perm(i)).as(s"h$i")): _*)
+    val bandCols = (0 until bands).map(b =>
+      bandKey((b * r until (b + 1) * r).map(i => col(s"h$i"))))
+    val carry = (col("id") +: tags.map(col)) :+ col("sz")
+    val banded = sigs.select(carry :+ posexplode(array(bandCols: _*)): _*)
+      .select(carry ++ Seq(col("pos").as("band"), col("col").as("bandhash")): _*)
+    (sigs, banded)
+  }
+
+  /** The exact-Jaccard verify every MinHash pipeline runs on its
+    * candidates. `cand` carries the a-side keys `ka` and b-side keys
+    * `kb`; `shA`/`shB` are each side's `(keys…, sh)` shingle stream and
+    * `szA`/`szB` its `(keys…, sz_a | sz_b)` set sizes. The b-side
+    * shingle join keys on the shingle as well as the keys, so only true
+    * intersections materialize — keying on the id alone would build a
+    * |sh(a)| x |sh(b)| cartesian per pair. Returns `(ka…, kb…, jaccard)`
+    * for pairs with Jaccard > minJaccard, published ROUND(6) (the value
+    * the oracles replay). */
+  private def verifyCandidates(cand: DataFrame, ka: Seq[String], kb: Seq[String],
+                               shA: DataFrame, shB: DataFrame,
+                               szA: DataFrame, szB: DataFrame,
+                               minJaccard: Double): DataFrame = {
+    val keys = (ka ++ kb).map(col)
+    val inter = cand.join(shA, ka).join(shB, kb :+ "sh")
+      .groupBy(keys: _*).agg(count(lit(1)).as("inter"))
+    withJaccard(inter, szA, ka, szB, kb)
+      .filter(col("jaccard") > minJaccard)
+      .select(keys :+ round(col("jaccard"), 6).as("jaccard"): _*)
+  }
+
+  /** Per-pair shared counts `inter` joined with both set sizes (`sz_a`
+    * keyed by `ka`, `sz_b` by `kb`), plus their unrounded `jaccard`. */
+  private def withJaccard(inter: DataFrame, szA: DataFrame, ka: Seq[String],
+                          szB: DataFrame, kb: Seq[String]): DataFrame =
+    inter.join(szA, ka).join(szB, kb)
+      .withColumn("jaccard", jaccardOf(col("inter"), col("sz_a"), col("sz_b")))
+
+  /** |A ∩ B| / |A ∪ B| from the intersection size and both set sizes. */
+  private def jaccardOf(inter: Column, szA: Column, szB: Column): Column =
+    inter.cast("double") / (szA + szB - inter).cast("double")
+
   /** MinHash+LSH near-duplicate pairs: band the k-entry signature into
     * `bands` groups of k/bands rows; docs colliding on any banded hash
     * become candidates; candidates are verified with exact n-gram Jaccard
@@ -248,8 +319,6 @@ object Dedup {
                           n: Int = 4, k: Int = 32, bands: Int = 16,
                           minJaccard: Double = 0.6,
                           family: MinhashFamily = NativeFamily): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
     // one shingling pass serves signatures, sizes, and both verification
     // join sides — persist it (the checkpointable intermediate at scale);
     // released in the finally, same discipline as [[ngramJaccardPairs]]
@@ -261,74 +330,27 @@ object Dedup {
   }
 
   /** Banded MinHash pair pipeline over an already-persisted shingle
-    * stream `(idCol, sh)` — the body of [[minhashNearDupPairs]], split
-    * out so [[minhashPrCurve]] can run the exact and banded arms over
-    * ONE shared shingle pass (round 16, guide §2.4). Caller owns the
-    * persist. */
+    * stream `(idCol, sh)` — the body of [[minhashNearDupPairs]], shared
+    * with [[minhashPrCurve]] so its exact and banded arms read one
+    * shingle pass. Candidates are the band-table self-join. Caller owns
+    * the persist. */
   private def bandedPairsFromShingles(sh: DataFrame, idCol: String,
                                       k: Int, bands: Int, minJaccard: Double,
                                       family: MinhashFamily): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
-    // signature and set size in the same hash aggregation: one shuffle.
-    // Portable path: the md5 digest is computed ONCE per (id, shingle)
-    // row behind a projection boundary; the k permutations are integer
-    // arithmetic over its two halves.
-    val hashed = family match {
-      case NativeFamily => sh
-      case PortableFamily =>
-        val (h1, h2) = portableBaseHashes(col("sh"))
-        sh.select(col(idCol), col("sh"), h1.as("mh1"), h2.as("mh2"))
-    }
-    val sigAggs = (0 until k).map { i =>
-      val h = family match {
-        case NativeFamily   => xxhash64(lit(i), col("sh"))
-        case PortableFamily => (col("mh1") + lit(i.toLong) * col("mh2")) % lit(PortableMod)
-      }
-      min(h).as(s"h$i")
-    }
-    val sigs = hashed.groupBy(col(idCol).as("id"))
-      .agg(count(lit(1)).as("sz"), sigAggs: _*)
-    val bandCols = (0 until bands).map { b =>
-      val hs = (b * r until (b + 1) * r).map(i => col(s"h$i"))
-      // array() below needs one element type, but the family is constant
-      // per call, so each call site stays homogeneous (int vs string)
-      family match {
-        case NativeFamily   => hash(hs: _*)
-        case PortableFamily => concat_ws(",", hs: _*)
-      }
-    }
-    val banded = sigs.select(col("id"),
-      posexplode(array(bandCols: _*)))
-      .select(col("id"), col("pos").as("band"), col("col").as("bandhash"))
+    val (sigs, banded) = minhashBands(sh, idCol, Nil, k, bands, family)
     val cand = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") &&
           col("x.bandhash") === col("y.bandhash") &&
           col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       .distinct()
-    // exact-Jaccard verification on candidates only; the second join keys
-    // on (id, shingle) so only true intersections materialize — keying on
-    // id alone would build a |sh(a)| x |sh(b)| cartesian per pair.
-    val sizes = sigs.select(col("id").as(idCol), col("sz"))
-    inter(cand, sh, idCol)
-      .join(sizes.select(col(idCol).as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
-      .join(sizes.select(col(idCol).as("id_b"), col("sz").as("sz_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
-      .filter(col("jaccard") > minJaccard)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"))
+    verifyCandidates(cand, Seq("id_a"), Seq("id_b"),
+        sh.select(col(idCol).as("id_a"), col("sh")),
+        sh.select(col(idCol).as("id_b"), col("sh")),
+        sigs.select(col("id").as("id_a"), col("sz").as("sz_a")),
+        sigs.select(col("id").as("id_b"), col("sz").as("sz_b")), minJaccard)
       .orderBy("id_a", "id_b")
   }
-
-  /** Candidate-pair shingle-intersection counts (the exact verify's first
-    * half), shared by [[bandedPairsFromShingles]]. */
-  private def inter(cand: DataFrame, sh: DataFrame, idCol: String): DataFrame =
-    cand
-      .join(sh.select(col(idCol).as("id_a"), col("sh")), Seq("id_a"))
-      .join(sh.select(col(idCol).as("id_b"), col("sh")), Seq("id_b", "sh"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
 
   /** MinHash banding precision/recall curve — the EVAL harness that picks
     * (k, bands) before a production dedup run (the ANN-recall discipline,
@@ -352,20 +374,18 @@ object Dedup {
                      n: Int = 4, k: Int = 32, bands: Int = 8,
                      thresholds: Seq[Double] = Seq(0.2, 0.3, 0.4, 0.5, 0.6, 0.7),
                      family: MinhashFamily = NativeFamily): DataFrame = {
-    // Round 16 (guide §2.4): ONE persisted shingle pass feeds BOTH arms —
-    // standalone ngramJaccardPairs + minhashNearDupPairs each tokenized,
-    // shingled and persisted the corpus independently (two full text
-    // scans, two cache populations). Arm pipelines are byte-identical to
-    // the standalone operators (shared private bodies), so the published
-    // curve is unchanged — only the duplicated upstream pass is gone.
+    // ONE persisted shingle pass feeds BOTH arms; each arm is the body of
+    // its standalone operator ([[ngramJaccardPairs]],
+    // [[minhashNearDupPairs]]), so the arms agree with those operators
     val sh = shingleStream(df, textCol, idCol, n).persist()
     val (exact, cand) = try {
+      // planned first so a degenerate k/bands fails before the exact arm runs
+      val banded = bandedPairsFromShingles(sh, idCol, k, bands,
+        minJaccard = 0.0, family)
       val e = exactPairsFromShingles(sh, idCol, minJaccard = 0.0)
         .localCheckpoint(eager = true)
         .select(col("id_a"), col("id_b"), col("jaccard"))
-      val c = bandedPairsFromShingles(sh, idCol, k, bands,
-          minJaccard = 0.0, family)
-        .localCheckpoint(eager = true)
+      val c = banded.localCheckpoint(eager = true)
         .select(col("id_a"), col("id_b"), lit(true).as("is_cand"))
       (e, c)
     } finally sh.unpersist()
@@ -407,65 +427,22 @@ object Dedup {
                         n: Int = 4, k: Int = 32, bands: Int = 16,
                         minJaccard: Double = 0.6,
                         family: MinhashFamily = NativeFamily): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
-    val tagged = probe.select(col(idCol), col(textCol)).withColumn("__p", lit(true))
-      .unionByName(corpus.select(col(idCol), col(textCol)).withColumn("__p", lit(false)))
-    val sh = tagged
-      .select(col(idCol), col("__p"), TextFns.tokens(col(textCol)).as("toks"))
-      .select(col(idCol), col("__p"),
-        explode(shinglesFromTokens(col("toks"), n)).as("sh"))
-      .persist()
+    val sh = taggedShingles(probe, corpus, textCol, idCol, n).persist()
     try {
-      val hashed = family match {
-        case NativeFamily => sh
-        case PortableFamily =>
-          val (h1, h2) = portableBaseHashes(col("sh"))
-          sh.select(col(idCol), col("__p"), col("sh"), h1.as("mh1"), h2.as("mh2"))
-      }
-      val sigAggs = (0 until k).map { i =>
-        val h = family match {
-          case NativeFamily   => xxhash64(lit(i), col("sh"))
-          case PortableFamily => (col("mh1") + lit(i.toLong) * col("mh2")) % lit(PortableMod)
-        }
-        min(h).as(s"h$i")
-      }
-      val sigs = hashed.groupBy(col(idCol).as("id"), col("__p"))
-        .agg(count(lit(1)).as("sz"), sigAggs: _*)
-      val bandCols = (0 until bands).map { b =>
-        val hs = (b * r until (b + 1) * r).map(i => col(s"h$i"))
-        family match {
-          case NativeFamily   => hash(hs: _*)
-          case PortableFamily => concat_ws(",", hs: _*)
-        }
-      }
-      val banded = sigs.select(col("id"), col("__p"),
-          posexplode(array(bandCols: _*)))
-        .select(col("id"), col("__p"), col("pos").as("band"), col("col").as("bandhash"))
+      val (sigs, banded) = minhashBands(sh, idCol, Seq("__p"), k, bands, family)
       val cand = banded.filter(col("__p")).as("x")
         .join(banded.filter(!col("__p")).as("y"),
           col("x.band") === col("y.band") && col("x.bandhash") === col("y.bandhash"))
         .select(col("x.id").as("probe_id"), col("y.id").as("corpus_id"))
         .distinct()
-      val inter = cand
-        .join(sh.filter(col("__p")).select(col(idCol).as("probe_id"), col("sh")),
-          Seq("probe_id"))
-        .join(sh.filter(!col("__p")).select(col(idCol).as("corpus_id"), col("sh")),
-          Seq("corpus_id", "sh"))
-        .groupBy("probe_id", "corpus_id").agg(count(lit(1)).as("inter"))
-      val sizes = sigs.select(col("id"), col("__p"), col("sz"))
-      val result = inter
-        .join(sizes.filter(col("__p"))
-          .select(col("id").as("probe_id"), col("sz").as("sz_p")), Seq("probe_id"))
-        .join(sizes.filter(!col("__p"))
-          .select(col("id").as("corpus_id"), col("sz").as("sz_c")), Seq("corpus_id"))
-        .withColumn("jaccard",
-          col("inter").cast("double") /
-            (col("sz_p") + col("sz_c") - col("inter")).cast("double"))
-        .filter(col("jaccard") > minJaccard)
-        .select(col("probe_id"), col("corpus_id"), round(col("jaccard"), 6).as("jaccard"))
+      verifyCandidates(cand, Seq("probe_id"), Seq("corpus_id"),
+          sh.filter(col("__p")).select(col(idCol).as("probe_id"), col("sh")),
+          sh.filter(!col("__p")).select(col(idCol).as("corpus_id"), col("sh")),
+          sigs.filter(col("__p")).select(col("id").as("probe_id"), col("sz").as("sz_a")),
+          sigs.filter(!col("__p")).select(col("id").as("corpus_id"), col("sz").as("sz_b")),
+          minJaccard)
         .orderBy("probe_id", "corpus_id")
-      result.localCheckpoint(eager = true)
+        .localCheckpoint(eager = true)
     } finally sh.unpersist()
   }
 
@@ -484,35 +461,9 @@ object Dedup {
                          n: Int = 4, k: Int = 32, bands: Int = 16,
                          family: MinhashFamily = NativeFamily)
       : (DataFrame, DataFrame) = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
     val sh = shingleStream(corpus, textCol, idCol, n)
-    val hashed = family match {
-      case NativeFamily => sh
-      case PortableFamily =>
-        val (h1, h2) = portableBaseHashes(col("sh"))
-        sh.select(col(idCol), col("sh"), h1.as("mh1"), h2.as("mh2"))
-    }
-    val sigAggs = (0 until k).map { i =>
-      val h = family match {
-        case NativeFamily   => xxhash64(lit(i), col("sh"))
-        case PortableFamily => (col("mh1") + lit(i.toLong) * col("mh2")) % lit(PortableMod)
-      }
-      min(h).as(s"h$i")
-    }
-    val sigs = hashed.groupBy(col(idCol).as("id"))
-      .agg(count(lit(1)).as("sz"), sigAggs: _*)
-    val bandCols = (0 until bands).map { b =>
-      val hs = (b * r until (b + 1) * r).map(i => col(s"h$i"))
-      family match {
-        case NativeFamily   => hash(hs: _*)
-        case PortableFamily => concat_ws(",", hs: _*)
-      }
-    }
-    val banded = sigs.select(col("id"), col("sz"),
-        posexplode(array(bandCols: _*)))
-      .select(col("id"), col("sz"), col("pos").as("band"), col("col").as("bandhash"))
-    (banded, sh.select(col(idCol).as("id"), col("sh")))
+    (minhashBands(sh, idCol, Nil, k, bands, family)._2,
+      sh.select(col(idCol).as("id"), col("sh")))
   }
 
   /** [[minhashProbePairs]] against a PERSISTED index ([[minhashIndexFrames]]
@@ -520,67 +471,62 @@ object Dedup {
     * BATCH side is shingled and signatured; the corpus band table and
     * shingle stream are table scans (bucket-pruned at 100 TB), so the
     * per-ingest cost is O(batch + colliding buckets), never O(corpus).
-    * Same family/banding parameters as the index build, same verified
-    * output as the recompute-everything form (DedupSpec pins equality). */
+    * Same verified output as the recompute-everything form (DedupSpec
+    * pins equality). Precondition: the same k/bands as the index build (a
+    * band-count mismatch finds no collisions); the family must match too,
+    * and a mismatched one (int vs string `bandhash`) is refused up front. */
   def minhashProbePairsIndexed(probe: DataFrame, indexBands: DataFrame,
                                indexShingles: DataFrame, textCol: String,
                                idCol: String, n: Int = 4, k: Int = 32,
                                bands: Int = 16, minJaccard: Double = 0.6,
                                family: MinhashFamily = NativeFamily): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
     val (probeBands, probeShingles) =
       minhashIndexFrames(probe, textCol, idCol, n, k, bands, family)
+    // schema-only check (no job): a bandhash type mismatch would otherwise
+    // fail inside an executor with a cast error mid-join
+    val (stored, probing) =
+      (indexBands.schema("bandhash").dataType, probeBands.schema("bandhash").dataType)
+    require(stored == probing, s"index bandhash is ${stored.simpleString} but " +
+      s"$family bands are ${probing.simpleString}: probe with the index's family")
     val pb = probeBands.persist()
     val ps = probeShingles.persist()
-    // candidates are read three times (verify join + the two prefilters
-    // below) — persist the small pair frame
     // BROADCAST the batch band table (O(batch × bands) rows — bounded by
     // the probe-batch contract) against the corpus-sized stored band
     // table: the index side streams map-side with no shuffle, the exact
-    // shape a 100 TB probe wants (and what bucketing would co-locate)
+    // shape a 100 TB probe wants (and what bucketing would co-locate).
+    // Candidates are read twice (verify join + the prefilter below) —
+    // persist the small pair frame
     val cand = indexBands.as("y")
       .join(broadcast(pb.as("x")),
         col("x.band") === col("y.band") && col("x.bandhash") === col("y.bandhash"))
       .select(col("x.id").as("probe_id"), col("y.id").as("corpus_id"))
       .distinct()
       .persist()
+    // broadcast-semi-join prefilter of the stored shingle stream: that
+    // table is corpus-sized (the dominant state table — ~100 shingles/
+    // doc), but the verify only needs the CANDIDATES' corpus docs, so the
+    // O(candidates) id set cuts the verify-side scan+shuffle from |corpus
+    // shingles| to |colliding docs' shingles|. Probe batches are bounded
+    // by contract (a corpus-scale re-probe belongs to
+    // [[minhashProbePairs]]); at 100 TB the same effect comes free from
+    // bucketing the stored stream by id and bucket-pruning.
     val candIds = cand.select(col("corpus_id").as("id")).distinct()
-    val corpusShP = indexShingles
+    val corpusSh = indexShingles
       .join(broadcast(candIds), Seq("id"), "left_semi")
       .select(col("id").as("corpus_id"), col("sh"))
       .persist()
     try {
-      // corpusShP is the broadcast-semi-join prefilter of the stored
-      // shingle stream: that table is corpus-sized (the dominant state
-      // table — ~100 shingles/doc), but the verify only needs the
-      // CANDIDATES' corpus docs, so the O(candidates) id set cuts the
-      // verify-side scan+shuffle from |corpus shingles| to |colliding
-      // docs' shingles|. Probe batches are bounded by contract (a
-      // corpus-scale re-probe belongs to [[minhashProbePairs]]); at
-      // 100 TB the same effect comes free from bucketing the stored
-      // stream by id and bucket-pruning.
-      val corpusSh = corpusShP
-      // set sizes recomputed from the PREFILTERED shingle stream (it is
-      // distinct per doc by construction) instead of re-scanning the fat
+      // corpus set sizes recomputed from the PREFILTERED shingle stream
+      // (distinct per doc by construction) instead of re-scanning the fat
       // band table — one small aggregation over rows already in memory
-      val corpusSz = corpusSh.groupBy("corpus_id").agg(count(lit(1)).as("sz_c"))
-      val inter = cand
-        .join(ps.select(col("id").as("probe_id"), col("sh")), Seq("probe_id"))
-        .join(corpusSh, Seq("corpus_id", "sh"))
-        .groupBy("probe_id", "corpus_id").agg(count(lit(1)).as("inter"))
-      val result = inter
-        .join(pb.select(col("id").as("probe_id"), col("sz").as("sz_p")).distinct(),
-          Seq("probe_id"))
-        .join(corpusSz, Seq("corpus_id"))
-        .withColumn("jaccard",
-          col("inter").cast("double") /
-            (col("sz_p") + col("sz_c") - col("inter")).cast("double"))
-        .filter(col("jaccard") > minJaccard)
-        .select(col("probe_id"), col("corpus_id"), round(col("jaccard"), 6).as("jaccard"))
+      verifyCandidates(cand, Seq("probe_id"), Seq("corpus_id"),
+          ps.select(col("id").as("probe_id"), col("sh")), corpusSh,
+          pb.select(col("id").as("probe_id"), col("sz").as("sz_a")).distinct(),
+          corpusSh.groupBy("corpus_id").agg(count(lit(1)).as("sz_b")), minJaccard)
         .orderBy("probe_id", "corpus_id")
-      result.localCheckpoint(eager = true)
+        .localCheckpoint(eager = true)
     } finally {
-      pb.unpersist(); ps.unpersist(); cand.unpersist(); corpusShP.unpersist()
+      pb.unpersist(); ps.unpersist(); cand.unpersist(); corpusSh.unpersist()
     }
   }
 
@@ -595,49 +541,17 @@ object Dedup {
     * the exact-Jaccard verify are shared, so restricting the within
     * rows to any batch subset gives exactly the pairs
     * [[minhashNearDupPairs]] would produce on that subset (banding is
-    * per-document). The b-side shingle join keys on the probe/corpus
-    * tag as well as the id, so re-ingest (same id on both sides) never
-    * double-counts intersections. */
+    * per-document). The b side of the verify keys on `vs_corpus` (its
+    * corpus-ness) as well as the id, so re-ingest (same id on both
+    * sides) never double-counts intersections. */
   def minhashIngestPairs(batch: DataFrame, corpus: DataFrame,
                          textCol: String, idCol: String,
                          n: Int = 4, k: Int = 32, bands: Int = 16,
                          minJaccard: Double = 0.6,
                          family: MinhashFamily = NativeFamily): DataFrame = {
-    require(k % bands == 0, "bands must divide k")
-    val r = k / bands
-    val tagged = batch.select(col(idCol), col(textCol)).withColumn("__p", lit(true))
-      .unionByName(corpus.select(col(idCol), col(textCol)).withColumn("__p", lit(false)))
-    val sh = tagged
-      .select(col(idCol), col("__p"), TextFns.tokens(col(textCol)).as("toks"))
-      .select(col(idCol), col("__p"),
-        explode(shinglesFromTokens(col("toks"), n)).as("sh"))
-      .persist()
+    val sh = taggedShingles(batch, corpus, textCol, idCol, n).persist()
     try {
-      val hashed = family match {
-        case NativeFamily => sh
-        case PortableFamily =>
-          val (h1, h2) = portableBaseHashes(col("sh"))
-          sh.select(col(idCol), col("__p"), col("sh"), h1.as("mh1"), h2.as("mh2"))
-      }
-      val sigAggs = (0 until k).map { i =>
-        val h = family match {
-          case NativeFamily   => xxhash64(lit(i), col("sh"))
-          case PortableFamily => (col("mh1") + lit(i.toLong) * col("mh2")) % lit(PortableMod)
-        }
-        min(h).as(s"h$i")
-      }
-      val sigs = hashed.groupBy(col(idCol).as("id"), col("__p"))
-        .agg(count(lit(1)).as("sz"), sigAggs: _*)
-      val bandCols = (0 until bands).map { b =>
-        val hs = (b * r until (b + 1) * r).map(i => col(s"h$i"))
-        family match {
-          case NativeFamily   => hash(hs: _*)
-          case PortableFamily => concat_ws(",", hs: _*)
-        }
-      }
-      val banded = sigs.select(col("id"), col("__p"),
-          posexplode(array(bandCols: _*)))
-        .select(col("id"), col("__p"), col("pos").as("band"), col("col").as("bandhash"))
+      val (sigs, banded) = minhashBands(sh, idCol, Seq("__p"), k, bands, family)
       // one self-join forms BOTH candidate classes; the filter keeps
       // probe×corpus (either order) and probe×probe with id_a < id_b
       val cand = banded.as("x").join(banded.as("y"),
@@ -648,28 +562,15 @@ object Dedup {
         .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
           (!col("y.__p")).as("vs_corpus"))
         .distinct()
-      val inter = cand
-        .join(sh.filter(col("__p")).select(col(idCol).as("id_a"), col("sh")),
-          Seq("id_a"))
-        .join(sh.select(col(idCol).as("id_b"), col("__p").as("__bp"), col("sh")),
-          Seq("id_b", "sh"))
-        .filter(col("__bp") === !col("vs_corpus"))
-        .groupBy("id_a", "id_b", "vs_corpus").agg(count(lit(1)).as("inter"))
-      val sizes = sigs.select(col("id"), col("__p"), col("sz"))
-      val result = inter
-        .join(sizes.filter(col("__p"))
-          .select(col("id").as("id_a"), col("sz").as("sz_a")), Seq("id_a"))
-        .join(sizes.select(col("id").as("id_b"), col("__p").as("__bp2"), col("sz").as("sz_b")),
-          Seq("id_b"))
-        .filter(col("__bp2") === !col("vs_corpus"))
-        .withColumn("jaccard",
-          col("inter").cast("double") /
-            (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
-        .filter(col("jaccard") > minJaccard)
-        .select(col("id_a"), col("id_b"), round(col("jaccard"), 6).as("jaccard"),
-          col("vs_corpus"))
+      verifyCandidates(cand, Seq("id_a"), Seq("id_b", "vs_corpus"),
+          sh.filter(col("__p")).select(col(idCol).as("id_a"), col("sh")),
+          sh.select(col(idCol).as("id_b"), (!col("__p")).as("vs_corpus"), col("sh")),
+          sigs.filter(col("__p")).select(col("id").as("id_a"), col("sz").as("sz_a")),
+          sigs.select(col("id").as("id_b"), (!col("__p")).as("vs_corpus"),
+            col("sz").as("sz_b")), minJaccard)
+        .select(col("id_a"), col("id_b"), col("jaccard"), col("vs_corpus"))
         .orderBy("vs_corpus", "id_a", "id_b")
-      result.localCheckpoint(eager = true)
+        .localCheckpoint(eager = true)
     } finally sh.unpersist()
   }
 
@@ -935,11 +836,12 @@ object Dedup {
     Option(df.agg(sum(col("lbl"))).collect()(0)).filterNot(_.isNullAt(0))
       .map(_.getLong(0))
 
-  /** 64-bit SimHash fingerprints as a dataflow (same rationale as
-    * [[minhashSignatures]]): explode tokens once, hash each once, then 64
-    * signed-bit sums in one codegen'd aggregation; bit b of the
-    * fingerprint is the sign of sum over tokens of ±1 according to bit b
-    * of xxhash64(token). Returns (id, fp). */
+  /** 64-bit SimHash fingerprints as a dataflow (same rationale as the
+    * MinHash signature aggregation behind [[minhashNearDupPairs]]):
+    * explode tokens once, hash each once, then 64 signed-bit sums in one
+    * codegen'd aggregation; bit b of the fingerprint is the sign of sum
+    * over tokens of ±1 according to bit b of xxhash64(token). Returns
+    * (id, fp). */
   def simhashFingerprints(df: DataFrame, textCol: String, idCol: String): DataFrame = {
     val toks = df.select(col(idCol).as("id"),
       explode(TextFns.tokens(col(textCol))).as("t"))
@@ -1166,8 +1068,8 @@ object Dedup {
         // materialized first so the intersection runs once per pair, not
         // once per reference in the jaccard expression
         .withColumn("__inter", size(array_intersect(col("__sa"), col("__sb"))))
-        .withColumn("__jac", col("__inter").cast("double") /
-          (size(col("__sa")) + size(col("__sb")) - col("__inter")).cast("double"))
+        .withColumn("__jac",
+          jaccardOf(col("__inter"), size(col("__sa")), size(col("__sb"))))
         .where(col("__jac") > minJaccard)
         .select(least(col("__ida"), col("__idb")).as("id_a"),
           greatest(col("__ida"), col("__idb")).as("id_b"),
@@ -1209,12 +1111,11 @@ object Dedup {
         .join(sh.select(col("src").as("src_b"), col("sh")), Seq("sh"))
         .filter(col("src_a") < col("src_b"))
         .groupBy("src_a", "src_b").agg(count(lit(1)).as("inter"))
-      val result = inter
-        .join(sizes.select(col("src").as("src_a"), col("sz").as("sz_a")), Seq("src_a"))
-        .join(sizes.select(col("src").as("src_b"), col("sz").as("sz_b")), Seq("src_b"))
+      val result = withJaccard(inter,
+          sizes.select(col("src").as("src_a"), col("sz").as("sz_a")), Seq("src_a"),
+          sizes.select(col("src").as("src_b"), col("sz").as("sz_b")), Seq("src_b"))
         .select(col("src_a"), col("src_b"), col("inter"), col("sz_a"), col("sz_b"),
-          round(col("inter").cast("double") /
-            (col("sz_a") + col("sz_b") - col("inter")).cast("double"), 6).as("jaccard"),
+          round(col("jaccard"), 6).as("jaccard"),
           round(col("inter").cast("double") /
             least(col("sz_a"), col("sz_b")).cast("double"), 6).as("containment"))
         .orderBy("src_a", "src_b")

@@ -161,38 +161,66 @@ class DedupSpec extends SparkSpec {
     assert(portable.size >= planted.size - 1, s"portable recall collapsed: ${portable.size}")
   }
 
-  test("minhashProbePairsIndexed == minhashProbePairs (persisted index is exact)") {
-    // the dd_incr_indexed contract: probing a stored band table + shingle
-    // stream yields exactly the pairs the recompute-everything probe
-    // yields — including after a parquet round-trip of the index frames
+  private val families =
+    Seq("" -> Dedup.PortableFamily, " (native family)" -> Dedup.NativeFamily)
+
+  for ((suffix, fam) <- families)
+    test(s"minhashProbePairsIndexed == minhashProbePairs (persisted index is exact)$suffix") {
+      // the dd_incr_indexed contract: probing a stored band table + shingle
+      // stream yields exactly the pairs the recompute-everything probe
+      // yields — including after a parquet round-trip of the index frames
+      val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
+      val batch = docs.filter(org.apache.spark.sql.functions.col("doc_id") % 17 === 0)
+        .select((col("doc_id") + 2000000).as("doc_id"),
+          org.apache.spark.sql.functions.concat_ws(" ",
+            org.apache.spark.sql.functions.slice(
+              graft.functions.TextFns.tokens(col("text")),
+              org.apache.spark.sql.functions.lit(1),
+              org.apache.spark.sql.functions.greatest(
+                org.apache.spark.sql.functions.size(
+                  graft.functions.TextFns.tokens(col("text"))) - 6,
+                org.apache.spark.sql.functions.lit(4)))).as("text"))
+      val direct = Dedup.minhashProbePairs(batch, docs, "text", "doc_id",
+          n = 4, k = 32, bands = 8, minJaccard = 0.5,
+          family = fam)
+        .collect().map(_.toSeq).toSet
+      val tmp = java.nio.file.Files.createTempDirectory("mh_index").toString
+      val (bands, shingles) = Dedup.minhashIndexFrames(docs, "text", "doc_id",
+        n = 4, k = 32, bands = 8, family = fam)
+      bands.write.mode("overwrite").parquet(s"$tmp/bands")
+      shingles.write.mode("overwrite").parquet(s"$tmp/shingles")
+      val indexed = Dedup.minhashProbePairsIndexed(batch,
+          spark.read.parquet(s"$tmp/bands"), spark.read.parquet(s"$tmp/shingles"),
+          "text", "doc_id", n = 4, k = 32, bands = 8, minJaccard = 0.5,
+          family = fam)
+        .collect().map(_.toSeq).toSet
+      assert(indexed == direct,
+        s"indexed-only=${indexed -- direct}, direct-only=${direct -- indexed}")
+      assert(indexed.nonEmpty)
+    }
+
+  test("minhash: degenerate k or bands fail up front with IllegalArgumentException") {
+    val docs = df1(Seq((1L, "a b c d e f"), (2L, "a b c d e g")))
+    intercept[IllegalArgumentException](
+      Dedup.minhashNearDupPairs(docs, "text", "doc_id", k = 32, bands = 0))
+    intercept[IllegalArgumentException](
+      Dedup.minhashNearDupPairs(docs, "text", "doc_id", k = 0, bands = 8,
+        family = Dedup.NativeFamily))
+    intercept[IllegalArgumentException](
+      Dedup.minhashNearDupPairs(docs, "text", "doc_id", k = 0, bands = 8,
+        family = Dedup.PortableFamily))
+  }
+
+  test("minhashProbePairsIndexed refuses an index built with the other family") {
     val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
-    val batch = docs.filter(org.apache.spark.sql.functions.col("doc_id") % 17 === 0)
-      .select((col("doc_id") + 2000000).as("doc_id"),
-        org.apache.spark.sql.functions.concat_ws(" ",
-          org.apache.spark.sql.functions.slice(
-            graft.functions.TextFns.tokens(col("text")),
-            org.apache.spark.sql.functions.lit(1),
-            org.apache.spark.sql.functions.greatest(
-              org.apache.spark.sql.functions.size(
-                graft.functions.TextFns.tokens(col("text"))) - 6,
-              org.apache.spark.sql.functions.lit(4)))).as("text"))
-    val direct = Dedup.minhashProbePairs(batch, docs, "text", "doc_id",
-        n = 4, k = 32, bands = 8, minJaccard = 0.5,
-        family = Dedup.PortableFamily)
-      .collect().map(_.toSeq).toSet
-    val tmp = java.nio.file.Files.createTempDirectory("mh_index").toString
     val (bands, shingles) = Dedup.minhashIndexFrames(docs, "text", "doc_id",
-      n = 4, k = 32, bands = 8, family = Dedup.PortableFamily)
-    bands.write.mode("overwrite").parquet(s"$tmp/bands")
-    shingles.write.mode("overwrite").parquet(s"$tmp/shingles")
-    val indexed = Dedup.minhashProbePairsIndexed(batch,
-        spark.read.parquet(s"$tmp/bands"), spark.read.parquet(s"$tmp/shingles"),
+      n = 4, k = 32, bands = 8, family = Dedup.NativeFamily)
+    val err = intercept[IllegalArgumentException](
+      Dedup.minhashProbePairsIndexed(docs.limit(5), bands, shingles,
         "text", "doc_id", n = 4, k = 32, bands = 8, minJaccard = 0.5,
-        family = Dedup.PortableFamily)
-      .collect().map(_.toSeq).toSet
-    assert(indexed == direct,
-      s"indexed-only=${indexed -- direct}, direct-only=${direct -- indexed}")
-    assert(indexed.nonEmpty)
+        family = Dedup.PortableFamily))
+    assert(err.getMessage.contains("int") && err.getMessage.contains("string"),
+      err.getMessage)
   }
 
   test("connected components: chain, clique, and singleton-pair canonicals") {
@@ -550,29 +578,30 @@ class DedupSpec extends SparkSpec {
     assert(out(7L) == ((2L, 1L, 0.5)))
   }
 
-  test("minhashIngestPairs == probePairs ∪ nearDupPairs (one-pass fusion is exact)") {
-    val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
-    val even = docs.filter(col("doc_id") % 2 === 0)
-    val odd = docs.filter(col("doc_id") % 2 =!= 0)
-    val ing = Dedup.minhashIngestPairs(odd, even, "text", "doc_id",
-      n = 4, k = 32, bands = 8, minJaccard = 0.5,
-      family = Dedup.PortableFamily).collect()
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"), r.getAs[Double]("jaccard"))
-    val vsCorpus = ing.filter(_.getAs[Boolean]("vs_corpus")).map(key).toSet
-    val within = ing.filterNot(_.getAs[Boolean]("vs_corpus")).map(key).toSet
-    val probe = Dedup.minhashProbePairs(odd, even, "text", "doc_id",
+  for ((suffix, fam) <- families)
+    test(s"minhashIngestPairs == probePairs ∪ nearDupPairs (one-pass fusion is exact)$suffix") {
+      val docs = Tables.documents(spark, sf0001).select("doc_id", "text")
+      val even = docs.filter(col("doc_id") % 2 === 0)
+      val odd = docs.filter(col("doc_id") % 2 =!= 0)
+      val ing = Dedup.minhashIngestPairs(odd, even, "text", "doc_id",
         n = 4, k = 32, bands = 8, minJaccard = 0.5,
-        family = Dedup.PortableFamily).collect()
-      .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("corpus_id"),
-        r.getAs[Double]("jaccard"))).toSet
-    val self = Dedup.minhashNearDupPairs(odd, "text", "doc_id",
-        n = 4, k = 32, bands = 8, minJaccard = 0.5,
-        family = Dedup.PortableFamily).collect().map(key).toSet
-    assert(vsCorpus == probe, s"probe arm diverged: ${vsCorpus.size} vs ${probe.size}")
-    assert(within == self, s"within arm diverged: ${within.size} vs ${self.size}")
-    assert(vsCorpus.nonEmpty || within.nonEmpty) // corpus has planted near-dups
-  }
+        family = fam).collect()
+      def key(r: org.apache.spark.sql.Row) =
+        (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"), r.getAs[Double]("jaccard"))
+      val vsCorpus = ing.filter(_.getAs[Boolean]("vs_corpus")).map(key).toSet
+      val within = ing.filterNot(_.getAs[Boolean]("vs_corpus")).map(key).toSet
+      val probe = Dedup.minhashProbePairs(odd, even, "text", "doc_id",
+          n = 4, k = 32, bands = 8, minJaccard = 0.5,
+          family = fam).collect()
+        .map(r => (r.getAs[Long]("probe_id"), r.getAs[Long]("corpus_id"),
+          r.getAs[Double]("jaccard"))).toSet
+      val self = Dedup.minhashNearDupPairs(odd, "text", "doc_id",
+          n = 4, k = 32, bands = 8, minJaccard = 0.5,
+          family = fam).collect().map(key).toSet
+      assert(vsCorpus == probe, s"probe arm diverged: ${vsCorpus.size} vs ${probe.size}")
+      assert(within == self, s"within arm diverged: ${within.size} vs ${self.size}")
+      assert(vsCorpus.nonEmpty || within.nonEmpty) // corpus has planted near-dups
+    }
 
   test("clusterStats averages the PUBLISHED (rounded) pair jaccard — oracle alignment") {
     val s = spark

@@ -7,7 +7,8 @@ schema (column names), row count, and values (rows sorted, columns sorted by
 name — per the driver contract). Exact match required; doubles compared
 bit-exactly after canonical repr, so any fp divergence shows up here first.
 With SPARK_GRAFT_ONLY set (the comma-separated entry filter graft.Verify
-reads), only those entries are checked.
+reads), only those entries are checked; a filtered entry with no oracle
+prints NOORACLE with its dump's row count, or FAIL when it has no dump.
 
 Dev tool only — NOT part of the shipped Spark library.
 """
@@ -23,14 +24,18 @@ def canon(v):
         return repr(v)
     return repr(v)
 
+def only_names():
+    """The SPARK_GRAFT_ONLY entry names, or None when the filter is unset."""
+    only = os.environ.get("SPARK_GRAFT_ONLY")
+    return None if only is None else set(only.split(","))
+
 def load_oracle(outdir):
     """oracle_sql.json, narrowed to the SPARK_GRAFT_ONLY entries when that
     comma-separated filter is set — the subset graft.Verify dumped."""
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-    only = os.environ.get("SPARK_GRAFT_ONLY")
-    if only is None:
+    names = only_names()
+    if names is None:
         return oracle
-    names = set(only.split(","))
     return {n: sql for n, sql in oracle.items() if n in names}
 
 def main(outdir, sfdir):
@@ -75,6 +80,16 @@ def main(outdir, sfdir):
         else:
             print(f"OK   {name} ({len(wrows)} rows)")
             n_ok += 1
+    # filtered entries without an oracle: graft.Verify still dumps them, so
+    # a missing dump means the entry threw
+    for name in sorted((only_names() or set()) - set(oracle)):
+        try:
+            n = con.execute(
+                f"SELECT count(*) FROM '{outdir}/{name}/*.parquet'").fetchone()[0]
+            print(f"NOORACLE {name} ({n} rows)")
+        except Exception as e:
+            print(f"FAIL {name}: spark output missing: {e}")
+            n_bad += 1
     print(f"\n{n_ok} ok, {n_bad} failed")
     return 1 if n_bad else 0
 
