@@ -3278,9 +3278,10 @@ object SparkEntry {
               |  FROM exr e LEFT JOIN apr a ON e.qid = a.qid AND e.vec_id = a.vec_id
               |  GROUP BY e.qid),
               |ax AS (SELECT qid, CAST(count(*) AS BIGINT) AS n_approx FROM apr GROUP BY qid)
-              |SELECT qid AS query_id, n_exact, n_approx, n_hit,
+              |SELECT qid AS query_id, n_exact,
+              |  CAST(coalesce(n_approx, 0) AS BIGINT) AS n_approx, n_hit,
               |  ROUND(CAST(n_hit AS DOUBLE) / CAST(n_exact AS DOUBLE), 6) AS recall
-              |FROM hx JOIN ax USING (qid) ORDER BY query_id""".stripMargin)),
+              |FROM hx LEFT JOIN ax USING (qid) ORDER BY query_id""".stripMargin)),
 
     Q("sim_ivfpq_recall",
       // the composed-index justification row: recall@10 of plain IVF

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (`Array[Float]`).
@@ -64,10 +65,93 @@ object Similarity {
 
   def toDoubleArray(c: Column): Column = transform(c, x => x.cast("double"))
 
-  /** `(vec_id, v, nrm)`: an embedding table as DOUBLE vectors with norms. */
-  private def vectors(emb: DataFrame): DataFrame =
-    emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
+  // ------------------------------------------------------------------
+  // The exact-cosine kernel. Every exact-cosine search in this file —
+  // single query, query panel, recall harness, pair verify — builds its
+  // vectors, centroids and scores through these, so a convention (the
+  // norm column, the ROUND(6) score, the `cos DESC, vec_id` tie-break,
+  // the bounded-heap panel tail) lives in one place.
+  // ------------------------------------------------------------------
+
+  /** `(vec_id, keep…, v, nrm)`: an embedding table as DOUBLE vectors with
+    * norms. `v` is the full embedding unless the caller ranks another
+    * vector (an MRL prefix, a whitened vector). */
+  private def vectors(emb: DataFrame, v: Column = toDoubleArray(col("embedding")),
+                      keep: Seq[Column] = Nil): DataFrame =
+    emb.select((col("vec_id") +: keep) :+ v.as("v"): _*)
       .withColumn("nrm", normFast(col("v")))
+
+  /** `e` with every `v` checked to be `dim` long: another length fails the
+    * job naming the vec_id. The native dot is NULL on a length mismatch,
+    * so an unchecked vector would land silently in bucket or code 0. */
+  private def dimChecked(e: DataFrame, dim: Int): DataFrame =
+    e.withColumn("v", when(size(col("v")) =!= dim,
+      raise_error(concat(lit("vector "), col("vec_id").cast("string"),
+        lit(" has "), size(col("v")).cast("string"),
+        lit(s" dims, the index has dim = $dim"))))
+      .otherwise(col("v")))
+
+  /** Centroids `(cell LONG, cv, cnrm)` from a `(cell, cv)` frame. */
+  private def centroids(centsIn: DataFrame): DataFrame =
+    centsIn.select(col("cell").cast("long").as("cell"), col("cv"),
+      normFast(col("cv")).as("cnrm"))
+
+  /** Query rows `(extra…, qv, qnrm)`: the rows of vector frame `e` that
+    * `pick` selects. */
+  private def queries(e: DataFrame, pick: Column, extra: Column*): DataFrame =
+    e.filter(pick).select(extra ++ Seq(col("v").as("qv"), col("nrm").as("qnrm")): _*)
+
+  /** The ROUND(6) cosine of `(v, nrm)` against `(qv, qnrm)`: rounded
+    * before any rank, so the k-boundary is the same on both engines. */
+  private def qcos: Column =
+    round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6)
+
+  /** Single-query rank tail: `cands` (carrying `v`, `nrm`) joined to the
+    * broadcast query row `q` — on `on`, or crossed with it — scored and
+    * cut to the top `k` by `cos DESC, vec_id`. Returns
+    * `(vec_id, keep…, cos)`. */
+  private def rankTail(cands: DataFrame, q: DataFrame, on: Option[Column],
+                       keep: Seq[Column], k: Int): DataFrame =
+    on.fold(cands.crossJoin(broadcast(q)))(cands.join(broadcast(q), _))
+      .select((col("vec_id") +: keep) :+ qcos.as("cos"): _*)
+      .orderBy(col("cos").desc, col("vec_id"))
+      .limit(k)
+
+  /** Panel rank tail: `joined` pairs of a corpus vector and a panel query
+    * `(query_id, v, nrm, qv, qnrm)`, scored, optionally filtered by
+    * `keepIf`, and reduced per query through the native bounded-heap
+    * aggregate ([[graft.plans.TopK.topKByScore]]): partial heaps cap the
+    * shuffle at k rows per (task, query) where a window rank would
+    * shuffle and sort every scored row. Returns
+    * `(query_id, rank, vec_id, cos)`. */
+  private def panelTail(joined: DataFrame, k: Int,
+                        keepIf: Option[Column] = None): DataFrame = {
+    val scored = joined.select(col("query_id"), col("vec_id"), qcos.as("cos"))
+    keepIf.fold(scored)(scored.filter)
+      .groupBy("query_id")
+      .agg(graft.plans.TopK.topKByScore(col("cos"), col("vec_id"),
+        struct(col("vec_id"), col("cos")), k).as("top"))
+      .select(col("query_id"), posexplode(col("top")))
+      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
+        col("col.vec_id").as("vec_id"), col("col.cos").as("cos"))
+      .orderBy("query_id", "rank")
+  }
+
+  /** Pair verify: `pairs` forms candidate pairs from the two sides of
+    * vector frame `e`, `(keep…, id_a, va, na)` and `(keep…, id_b, vb, nb)`;
+    * the pairs whose exact cosine exceeds `threshold` come back as
+    * `(id_a, id_b, cos)`, cos ROUND(6)ed after the unrounded threshold
+    * compare. Norms come from the vector frame: once per vector, not per
+    * pair. */
+  private def verifyPairs(e: DataFrame, threshold: Double, keep: String*)(
+      pairs: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    def side(s: String) = e.select(keep.map(col) ++ Seq(col("vec_id").as(s"id_$s"),
+      col("v").as(s"v$s"), col("nrm").as(s"n$s")): _*)
+    pairs(side("a"), side("b"))
+      .withColumn("cos", dotFast(col("va"), col("vb")) / (col("na") * col("nb")))
+      .filter(col("cos") > threshold)
+      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
+  }
 
   /** Per-vector symmetric scalar quantization report (the int8 compression
     * every large ANN deployment applies before indexing — FAISS
@@ -124,41 +208,28 @@ object Similarity {
     // scan floor: the quantize+scan stage is compute-bound on the scan
     // side and the bench tables are single-row-group (one split) —
     // measured sf1 solo 4.8 s -> 0.6 s; identity on fan-out inputs
-    val e = graft.Tables.scanFloor(emb)
-      .select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-    val coded = e.select(col("vec_id"), col("v"),
-        (array_max(transform(col("v"), x => abs(x))) / lit(127.0)).as("scale"))
+    val e = vectors(graft.Tables.scanFloor(emb))
+    val q = queries(e, col("vec_id") === queryId)
+    val short = e.filter(col("vec_id") =!= queryId)
+      .withColumn("scale", array_max(transform(col("v"), x => abs(x))) / lit(127.0))
       .filter(col("scale") > 0.0)
       .withColumn("c", transform(col("v"), x => round(x / col("scale"), 0)))
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), normFast(col("v")).as("qnrm"))
-    coded.filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .withColumn("adc_cos", round(
         dotFast(col("c"), col("qv")) / (normFast(col("c")) * col("qnrm")), 6))
       .orderBy(col("adc_cos").desc, col("vec_id"))
       .limit(shortlist)
-      .select(col("vec_id"),
-        round(dotFast(col("v"), col("qv")) /
-          (normFast(col("v")) * col("qnrm")), 6).as("cos"),
-        col("adc_cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+      .select(col("vec_id"), col("v"), col("nrm"), col("adc_cos"))
+    rankTail(short, q, None, Seq(col("adc_cos")), k)
+      .select(col("vec_id"), col("cos"), col("adc_cos"))
   }
 
   /** Exact brute-force cosine top-k against one query vector (broadcast —
     * the corpus side streams, nothing shuffles). */
   def bruteForceTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("nrm").as("qnrm"))
-    e.filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    val e = vectors(emb)
+    rankTail(e.filter(col("vec_id") =!= queryId),
+      queries(e, col("vec_id") === queryId), None, Nil, k)
   }
 
   /** Deterministic pseudo-random hyperplane weights for LSH plane `j`
@@ -180,21 +251,19 @@ object Similarity {
 
   /** ANN top-k: probe only the query vector's LSH bucket, exact cosine
     * rank within it. At scale the bucket column is a partition/bucketing
-    * key, so the probe reads one bucket. */
+    * key, so the probe reads one bucket. A vector that is not `dim` long
+    * fails the search. */
   def lshTopK(emb: DataFrame, queryId: Long, k: Int, planes: Int = 12,
               dim: Int = 64): DataFrame = {
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("bucket", lshBucket(col("v"), planes, dim))
-      .withColumn("nrm", normFast(col("v")))
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("nrm").as("qnrm"), col("bucket").as("qbucket"))
-    e.filter(col("vec_id") =!= queryId)
-      .join(broadcast(q), col("bucket") === col("qbucket"))
-      .select(col("vec_id"), col("bucket"),
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    val e = lshVectors(emb, planes, dim)
+    rankTail(e.filter(col("vec_id") =!= queryId),
+      queries(e, col("vec_id") === queryId, col("bucket").as("qbucket")),
+      Some(col("bucket") === col("qbucket")), Seq(col("bucket")), k)
   }
+
+  /** The dim-checked vector frame with each vector's LSH `bucket`. */
+  private def lshVectors(emb: DataFrame, planes: Int, dim: Int): DataFrame =
+    dimChecked(vectors(emb), dim).withColumn("bucket", lshBucket(col("v"), planes, dim))
 
   /** Multiprobe ANN: probe the query's bucket plus every Hamming-1
     * neighbor bucket (one sign bit flipped — the planes whose projection
@@ -202,24 +271,16 @@ object Similarity {
     * recover most of the recall single-probe loses). `planes`+1 buckets
     * scanned instead of 1: still bucket-pruned at 100 TB (partition
     * pruning reads planes+1 of 2^planes partitions), recall strictly >=
-    * [[lshTopK]] since the candidate set is a superset. */
+    * [[lshTopK]] since the candidate set is a superset. A vector that is
+    * not `dim` long fails the search. */
   def lshTopKMultiprobe(emb: DataFrame, queryId: Long, k: Int,
                         planes: Int = 12, dim: Int = 64): DataFrame = {
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("bucket", lshBucket(col("v"), planes, dim))
-      .withColumn("nrm", normFast(col("v")))
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("nrm").as("qnrm"), col("bucket").as("qbucket"))
-    val probes = q.select(col("qv"), col("qnrm"),
-        explode(array(col("qbucket") +:
-          (0 until planes).map(j => col("qbucket").bitwiseXOR(lit(1L << j))): _*))
-          .as("pb"))
-    e.filter(col("vec_id") =!= queryId)
-      .join(broadcast(probes), col("bucket") === col("pb"))
-      .select(col("vec_id"), col("bucket"),
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    val e = lshVectors(emb, planes, dim)
+    val probes = queries(e, col("vec_id") === queryId,
+      explode(array(col("bucket") +:
+        (0 until planes).map(j => col("bucket").bitwiseXOR(lit(1L << j))): _*)).as("pb"))
+    rankTail(e.filter(col("vec_id") =!= queryId), probes,
+      Some(col("bucket") === col("pb")), Seq(col("bucket")), k)
   }
 
   /** Cell assignment — argmax centroid cosine, ties to the LOWEST cell —
@@ -264,50 +325,45 @@ object Similarity {
   }
 
   /** IVF-style ANN (nprobe=1): coarse-quantize every vector to its
-    * nearest of `nCells` centroid vectors (here the deterministic choice:
-    * the vectors with vec_id < nCells — a real deployment would train
-    * them with KMeans), probe only the query's cell, exact-rank inside.
-    * The cell id is a column: at 100 TB the corpus is written
-    * `partitionBy(cell)` and a probe is one partition's scan + heap. */
-  def ivfTopK(emb: DataFrame, queryId: Long, k: Int, nCells: Int = 16): DataFrame = {
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val cents = e.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell"), col("v").as("cv"), col("nrm").as("cnrm"))
-    // assign: argmax cosine to centroid, ties to lowest cell id
-    val assigned = assignCells(e, cents)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-    val q = assigned.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("nrm").as("qnrm"), col("cell").as("qcell"))
-    assigned.filter(col("vec_id") =!= queryId)
-      .join(broadcast(q), col("cell") === col("qcell"))
-      .select(col("vec_id"), col("cell"),
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    * nearest of `nCells` centroid vectors ([[deterministicCentroids]], the
+    * first `nCells` vectors — [[ivfTopKWith]] takes trained ones), probe
+    * only the query's cell, exact-rank inside. The cell id is a column:
+    * at 100 TB the corpus is written `partitionBy(cell)` and a probe is
+    * one partition's scan + heap. Returns `(vec_id, cell, cos)`. */
+  def ivfTopK(emb: DataFrame, queryId: Long, k: Int, nCells: Int = 16): DataFrame =
+    ivfProbe(emb, deterministicCentroids(emb, nCells), queryId, k)
+
+  /** The nprobe=1 IVF probe behind [[ivfTopK]], [[ivfTopKWith]] and
+    * [[ivfFilteredTopK]]: cosine-argmax cell assignment against `centsIn`
+    * (ties to the lowest cell), then the query's cell — its vectors that
+    * pass `pred` — ranked exactly. `meta` columns ride through to `pred`
+    * and the output `(vec_id, meta…, cell, cos)`. */
+  private def ivfProbe(emb: DataFrame, centsIn: DataFrame, queryId: Long, k: Int,
+                       meta: Seq[Column] = Nil,
+                       pred: Option[Column] = None): DataFrame = {
+    val assigned = assignCells(vectors(emb, keep = meta), centroids(centsIn))
+    val cands = assigned.filter(col("vec_id") =!= queryId)
+    rankTail(pred.fold(cands)(cands.filter),
+      queries(assigned, col("vec_id") === queryId, col("cell").as("qcell")),
+      Some(col("cell") === col("qcell")), meta :+ col("cell"), k)
   }
 
-  /** The deterministic first-`nCells` centroid frame `(cell, cv, cnrm)` —
-    * [[ivfTopK]]'s convention factored out so INCREMENTAL maintenance can
-    * pin the coarse quantizer at index-build time and reuse it for every
-    * ingest batch (retraining the quantizer per batch would invalidate
-    * every stored assignment — no production index does that). */
+  /** The [[deterministicCentroids]] frame with norms, `(cell, cv, cnrm)`:
+    * the quantizer INCREMENTAL maintenance pins at index-build time and
+    * reuses for every ingest batch ([[ivfAssignments]],
+    * [[ivfTopKIndexed]]) — retraining the quantizer per batch would
+    * invalidate every stored assignment, and no production index does
+    * that. */
   def ivfCentroids(emb: DataFrame, nCells: Int = 16): DataFrame =
-    emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell"), col("v").as("cv"),
-        normFast(col("v")).as("cnrm"))
+    centroids(deterministicCentroids(emb, nCells))
 
   /** Cell assignments `(vec_id, cell)` of `emb` against an explicit
     * (broadcast) centroid frame — the UPDATE step of incremental IVF
     * maintenance: cost is O(|batch| · nCells) with no shuffle of the
     * base index, so appending a micro-batch to a billion-vector index
     * never rescans the corpus. */
-  def ivfAssignments(emb: DataFrame, cents: DataFrame): DataFrame = {
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    assignCells(e, cents).select(col("vec_id"), col("cell"))
-  }
+  def ivfAssignments(emb: DataFrame, cents: DataFrame): DataFrame =
+    assignCells(vectors(emb), centroids(cents)).select(col("vec_id"), col("cell"))
 
   /** IVF probe over an externally-MAINTAINED index `(vec_id, cell)` —
     * the serving half of incremental IVF: assignments come from the
@@ -317,17 +373,10 @@ object Similarity {
     * the probe's cell filter prunes to one partition's scan + heap. */
   def ivfTopKIndexed(vecs: DataFrame, index: DataFrame,
                      queryId: Long, k: Int): DataFrame = {
-    val e = vecs.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val assigned = e.join(index, Seq("vec_id"))
-    val q = assigned.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("nrm").as("qnrm"), col("cell").as("qcell"))
-    assigned.filter(col("vec_id") =!= queryId)
-      .join(broadcast(q), col("cell") === col("qcell"))
-      .select(col("vec_id"), col("cell"),
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    val assigned = vectors(vecs).join(index, Seq("vec_id"))
+    rankTail(assigned.filter(col("vec_id") =!= queryId),
+      queries(assigned, col("vec_id") === queryId, col("cell").as("qcell")),
+      Some(col("cell") === col("qcell")), Seq(col("cell")), k)
   }
 
   /** Filtered vector search ([[ivfTopK]] with a metadata predicate pushed
@@ -342,26 +391,9 @@ object Similarity {
     * remedy is more probes, the [[lshTopKMultiprobe]] pattern.
     * `metaCols` ride through assignment so `pred` can reference them. */
   def ivfFilteredTopK(emb: DataFrame, queryId: Long, k: Int, pred: Column,
-                      metaCols: Seq[String], nCells: Int = 16): DataFrame = {
-    val meta = metaCols.map(col)
-    val e = emb.select(col("vec_id") +: meta :+
-      toDoubleArray(col("embedding")).as("v"): _*)
-      .withColumn("nrm", normFast(col("v")))
-    val cents = e.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell"), col("v").as("cv"), col("nrm").as("cnrm"))
-    val assigned = assignCells(e, cents)
-      .select(col("vec_id") +: meta :+ col("v") :+ col("nrm") :+ col("cell"): _*)
-    val q = assigned.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("nrm").as("qnrm"), col("cell").as("qcell"))
-    assigned.filter(col("vec_id") =!= queryId)
-      .filter(pred)
-      .join(broadcast(q), col("cell") === col("qcell"))
-      .select(col("vec_id") +: meta :+ col("cell") :+
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6)
-          .as("cos"): _*)
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-  }
+                      metaCols: Seq[String], nCells: Int = 16): DataFrame =
+    ivfProbe(emb, deterministicCentroids(emb, nCells), queryId, k,
+      metaCols.map(col), Some(pred))
 
   /** Per-dimension embedding health statistics: mean, sample stddev, min,
     * max over every dimension — the audit that catches dead dimensions
@@ -411,23 +443,13 @@ object Similarity {
     * the [[bruteForceTopK]] determinism convention. */
   def whitenedTopK(emb: DataFrame, queryId: Long, k: Int): DataFrame = {
     val stats = whitenStats(emb).collect() // O(dims) rows
-    val mus = stats.map(_.getAs[Double]("mu"))
-    val sds = stats.map(_.getAs[Double]("sd"))
-    val musLit = typedLit(mus)
-    val sdsLit = typedLit(sds)
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("w", transform(col("v"), (x, i) =>
-        (x - element_at(musLit, (i + 1).cast("int"))) /
-          element_at(sdsLit, (i + 1).cast("int"))))
-      .withColumn("nrm", normFast(col("w")))
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("w").as("qw"), col("nrm").as("qnrm"))
-    e.filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(dotFast(col("w"), col("qw")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    val musLit = typedLit(stats.map(_.getAs[Double]("mu")))
+    val sdsLit = typedLit(stats.map(_.getAs[Double]("sd")))
+    val e = vectors(emb, transform(toDoubleArray(col("embedding")), (x, i) =>
+      (x - element_at(musLit, (i + 1).cast("int"))) /
+        element_at(sdsLit, (i + 1).cast("int"))))
+    rankTail(e.filter(col("vec_id") =!= queryId),
+      queries(e, col("vec_id") === queryId), None, Nil, k)
   }
 
   // ------------------------------------------------------------------
@@ -609,56 +631,86 @@ object Similarity {
     * rank the exact brute-force cosine top-k AND the IVF (nprobe=1,
     * [[ivfTopK]] semantics) top-k, and report how much of the exact set
     * the index recovered (`recall = n_hit / n_exact`). Returns one row
-    * per query: `(query_id, n_exact, n_approx, n_hit, recall)`.
+    * per query: `(query_id, n_exact, n_approx, n_hit, recall)`; a query
+    * alone in its cell reports `n_approx = 0`, and a panel id that is not
+    * in the corpus fails the call ([[recallArms]]).
     *
     * Scale shape: the IVF assignment is computed ONCE and persisted (the
     * [[Dedup]] shingle-stream convention — it feeds the query set, the
     * exact side and the probe side; released before returning). The
     * query set is a broadcast of |queryIds| rows; the exact side is the
     * deliberate corpus×queries stream (an EVAL harness over a handful of
-    * queries — rank windows partition by query id, so no global sort);
-    * the probe side touches only the queries' cells. Cosines are
-    * ROUND(6)ed BEFORE ranking with vec_id tiebreak — the k-boundary is
-    * engine-deterministic ([[bruteForceTopK]] convention). */
+    * queries); the probe side touches only the queries' cells. */
   def annRecallIvf(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                   nCells: Int = 16): DataFrame = {
+                   nCells: Int = 16): DataFrame =
+    recallArms(emb, ivfCentroids(emb, nCells), queryIds, k) { r =>
+      r.hits("hit" -> r.ivf)
+        .groupBy("qid")
+        .agg(count(lit(1)).as("n_exact"), nHit("hit").as("n_hit"))
+        // a query alone in its cell has no IVF candidate: n_approx 0
+        .join(r.ivf.groupBy("qid").agg(count(lit(1)).as("n_approx")), Seq("qid"), "left")
+        .select(col("qid").as("query_id"), col("n_exact"),
+          coalesce(col("n_approx"), lit(0L)).as("n_approx"), col("n_hit"),
+          recall("n_hit").as("recall"))
+    }
+
+  /** The recall harnesses' shared arms. `assigned` is the persisted cell
+    * assignment `(vec_id, v, nrm, cell)` against the recall harness's
+    * centroids; `qs` the panel `(qid, qcell, qv, qnrm)`; `exact` every
+    * panel query's top-k over the whole corpus and `ivf` its nprobe=1
+    * top-k within its own cell, both `(qid, vec_id, cos, rk)`; `rank`
+    * cuts any `(qid, vec_id, v, nrm, qv, qnrm)` frame to that shape. */
+  private final case class RecallArms(assigned: DataFrame, qs: DataFrame,
+                                      exact: DataFrame, ivf: DataFrame,
+                                      rank: DataFrame => DataFrame) {
+    /** `exact` left-joined to each named arm: the flag is true on the
+      * exact members that arm also found. */
+    def hits(arms: (String, DataFrame)*): DataFrame =
+      arms.foldLeft(exact) { case (acc, (flag, arm)) =>
+        acc.join(arm.select(col("qid"), col("vec_id"), lit(true).as(flag)),
+          Seq("qid", "vec_id"), "left")
+      }
+  }
+
+  /** Hits counted from a [[RecallArms.hits]] flag. */
+  private def nHit(flag: String): Column = coalesce(sum(when(col(flag), 1L)), lit(0L))
+
+  /** `nHit / n_exact`, ROUND(6). */
+  private def recall(nHit: String): Column =
+    round(col(nHit).cast("double") / col("n_exact").cast("double"), 6)
+
+  /** Build the [[RecallArms]] over `emb` assigned against `cents` `(cell,
+    * cv, cnrm)` and roll them up with `report` into one row per panel
+    * query, `query_id` first. The result is materialized before the
+    * assignment is released. A panel id with no row — one that is not in
+    * the corpus — fails the call instead of dropping out of a mean over
+    * the rows. The rank windows partition by query id, so no global sort
+    * forms; cosines ROUND(6) before every rank. */
+  private def recallArms(emb: DataFrame, cents: DataFrame, queryIds: Seq[Long],
+                         k: Int)(report: RecallArms => DataFrame): DataFrame = {
     require(queryIds.nonEmpty, "queryIds must be non-empty")
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val cents = e.filter(col("vec_id") < nCells)
-      .select(col("vec_id").as("cell"), col("v").as("cv"), col("nrm").as("cnrm"))
-    val assigned = assignCells(e, cents)
+    val assigned = assignCells(vectors(emb), cents)
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
       .persist()
     try {
-      val qs = assigned.filter(col("vec_id").isin(queryIds: _*))
-        .select(col("vec_id").as("qid"), col("v").as("qv"),
-          col("nrm").as("qnrm"), col("cell").as("qcell"))
-      val qcos = round(
-        dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6)
-      val rank = org.apache.spark.sql.expressions.Window
-        .partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      val exact = assigned.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"), qcos.as("cos"))
-        .withColumn("rk", row_number().over(rank)).filter(col("rk") <= k)
-      val approx = assigned.join(broadcast(qs),
-          col("cell") === col("qcell") && col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"), qcos.as("cos"))
-        .withColumn("rk", row_number().over(rank)).filter(col("rk") <= k)
-      exact
-        .join(approx.select(col("qid"), col("vec_id"), lit(true).as("hit")),
-          Seq("qid", "vec_id"), "left")
-        .groupBy("qid")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(when(col("hit"), 1L)), lit(0L)).as("n_hit"))
-        .join(approx.groupBy("qid").agg(count(lit(1)).as("n_approx")), Seq("qid"))
-        .select(col("qid").as("query_id"), col("n_exact"), col("n_approx"),
-          col("n_hit"),
-          round(col("n_hit").cast("double") / col("n_exact").cast("double"), 6)
-            .as("recall"))
+      val qs = queries(assigned, col("vec_id").isin(queryIds: _*),
+        col("vec_id").as("qid"), col("cell").as("qcell"))
+      val byQuery = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
+      def rank(joined: DataFrame): DataFrame =
+        joined.select(col("qid"), col("vec_id"), qcos.as("cos"))
+          .withColumn("rk", row_number().over(byQuery)).filter(col("rk") <= k)
+      val exact = rank(assigned.crossJoin(broadcast(qs))
+        .filter(col("vec_id") =!= col("qid")))
+      val ivf = rank(assigned.join(broadcast(qs),
+        col("cell") === col("qcell") && col("vec_id") =!= col("qid")))
+      val out = report(RecallArms(assigned, qs, exact, ivf, rank))
         .orderBy("query_id")
         .localCheckpoint(eager = true)
+      val missing = queryIds.distinct
+        .diff(out.select("query_id").collect().map(_.getLong(0)).toSeq)
+      if (missing.nonEmpty) throw new IllegalArgumentException(
+        s"panel ids ${missing.mkString(", ")} have no recall row: not in the corpus")
+      out
     } finally assigned.unpersist()
   }
 
@@ -669,11 +721,11 @@ object Similarity {
     * PQ-compressed multi-cell probe should recover at least the recall
     * of one cell of floats. Returns
     * `(query_id, n_exact, n_hit_ivf, recall_ivf, n_hit_ivfpq,
-    * recall_ivfpq)`.
+    * recall_ivfpq)`; a panel id that is not in the corpus fails the call.
     *
-    * Same harness shape as [[annRecallIvf]]: the assignment is computed
-    * once and persisted; the query panel, probe sets, ADC tables and
-    * shortlist boundaries are all broadcast-sized; every rank window
+    * Same harness as [[annRecallIvf]] ([[recallArms]]): the assignment is
+    * computed once and persisted; the query panel, probe sets, ADC tables
+    * and shortlist boundaries are all broadcast-sized; every rank window
     * partitions by query id. Cosines and ADC distances ROUND(6) before
     * their rank boundaries (vec_id tiebreak) so both engines agree. */
   def annRecallIvfPq(emb: DataFrame, queryIds: Seq[Long], k: Int,
@@ -706,46 +758,26 @@ object Similarity {
                          codebookIn: DataFrame, queryIds: Seq[Long], k: Int,
                          nprobe: Int = 4, m: Int = 8, shortlist: Int = 50,
                          dim: Int = 64, residual: Boolean = false): DataFrame = {
-    require(queryIds.nonEmpty, "queryIds must be non-empty")
     require(dim % m == 0, "m must divide dim")
-    val W = org.apache.spark.sql.expressions.Window
-    val cents = centsIn
-      .select(col("cell"), col("cv"), normFast(col("cv")).as("cnrm"))
-    val codebook = codebookIn.select(col("s"), col("code"), col("cw"))
-    val assigned = assignCells(vectors(emb), cents)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-      .persist()
-    try {
-      val qs = assigned.filter(col("vec_id").isin(queryIds: _*))
-        .select(col("vec_id").as("qid"), col("v").as("qv"),
-          col("nrm").as("qnrm"), col("cell").as("qcell"))
-      val qcos = round(
-        dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6)
-      val rank = W.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-      val exact = assigned.crossJoin(broadcast(qs))
-        .filter(col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"), qcos.as("cos"))
-        .withColumn("rk", row_number().over(rank)).filter(col("rk") <= k)
-      val ivf = assigned.join(broadcast(qs),
-          col("cell") === col("qcell") && col("vec_id") =!= col("qid"))
-        .select(col("qid"), col("vec_id"), qcos.as("cos"))
-        .withColumn("rk", row_number().over(rank)).filter(col("rk") <= k)
+    val (cents, codebook) = quantizers(centsIn, codebookIn)
+    recallArms(emb, cents, queryIds, k) { r =>
       // ---- IVF-PQ arm (ivfPqRank conventions, per query id) ----
-      val probed = cents.crossJoin(broadcast(qs.select("qid", "qv", "qnrm")))
+      val qvecs = r.qs.select("qid", "qv", "qnrm")
+      val probed = cents.crossJoin(broadcast(qvecs))
         .withColumn("qccos",
           dotFast(col("cv"), col("qv")) / (col("cnrm") * col("qnrm")))
         .withColumn("pr", row_number().over(
-          W.partitionBy("qid").orderBy(col("qccos").desc, col("cell"))))
+          Window.partitionBy("qid").orderBy(col("qccos").desc, col("cell"))))
         .filter(col("pr") <= nprobe)
         .select(col("qid"), col("cell"))
-      val slices = encodedSlices(assigned, cents, m, dim, residual)
-      val cand = assigned.join(broadcast(probed), Seq("cell"))
+      val slices = encodedSlices(r.assigned, cents, m, dim, residual)
+      val cand = r.assigned.join(broadcast(probed), Seq("cell"))
         .filter(col("vec_id") =!= col("qid"))
         .select(col("qid"), col("cell"), col("vec_id"))
         .join(nearestCodes(slices, codebook), Seq("vec_id"))
       val joined =
         if (!residual) {
-          val qsl = slices.join(broadcast(qs.select(col("qid"))),
+          val qsl = slices.join(broadcast(r.qs.select(col("qid"))),
               col("vec_id") === col("qid"))
             .select(col("qid"), col("s"), col("vs").as("qvs"))
           cand.join(broadcast(adcTable(codebook, qsl, col("qid"))),
@@ -753,7 +785,7 @@ object Similarity {
         } else {
           // per-probed-cell table: the query's residual differs per cell
           val qsl = probed
-            .join(broadcast(qs.select(col("qid"), col("qv"))), Seq("qid"))
+            .join(broadcast(r.qs.select(col("qid"), col("qv"))), Seq("qid"))
             .join(broadcast(cents.select(col("cell"), col("cv"))), Seq("cell"))
             .select(col("qid"), col("cell").as("qcell"),
               subVectors(minus(col("qv"), col("cv")), m, dim).as(Seq("s", "qvs")))
@@ -767,34 +799,20 @@ object Similarity {
         .groupBy(col("qid"), col("vec_id"))
         .agg(round(sum(col("qd2")), 6).as("adc_dist"))
         .withColumn("sk", row_number().over(
-          W.partitionBy("qid").orderBy(col("adc_dist"), col("vec_id"))))
+          Window.partitionBy("qid").orderBy(col("adc_dist"), col("vec_id"))))
         .filter(col("sk") <= shortlist)
         .select(col("qid"), col("vec_id"))
-      val ivfpq = short
-        .join(assigned.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
-        .join(broadcast(qs.select("qid", "qv", "qnrm")), Seq("qid"))
-        .select(col("qid"), col("vec_id"), qcos.as("cos"))
-        .withColumn("rk", row_number().over(rank)).filter(col("rk") <= k)
-      // ---- recall rollup ----
-      val hits = exact
-        .join(ivf.select(col("qid"), col("vec_id"), lit(true).as("h_ivf")),
-          Seq("qid", "vec_id"), "left")
-        .join(ivfpq.select(col("qid"), col("vec_id"), lit(true).as("h_pq")),
-          Seq("qid", "vec_id"), "left")
+      val ivfpq = r.rank(short
+        .join(r.assigned.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
+        .join(broadcast(qvecs), Seq("qid")))
+      r.hits("h_ivf" -> r.ivf, "h_pq" -> ivfpq)
         .groupBy("qid")
-        .agg(count(lit(1)).as("n_exact"),
-          coalesce(sum(when(col("h_ivf"), 1L)), lit(0L)).as("n_hit_ivf"),
-          coalesce(sum(when(col("h_pq"), 1L)), lit(0L)).as("n_hit_ivfpq"))
-      hits.select(col("qid").as("query_id"), col("n_exact"),
-          col("n_hit_ivf"),
-          round(col("n_hit_ivf").cast("double") / col("n_exact").cast("double"), 6)
-            .as("recall_ivf"),
-          col("n_hit_ivfpq"),
-          round(col("n_hit_ivfpq").cast("double") / col("n_exact").cast("double"), 6)
-            .as("recall_ivfpq"))
-        .orderBy("query_id")
-        .localCheckpoint(eager = true)
-    } finally assigned.unpersist()
+        .agg(count(lit(1)).as("n_exact"), nHit("h_ivf").as("n_hit_ivf"),
+          nHit("h_pq").as("n_hit_ivfpq"))
+        .select(col("qid").as("query_id"), col("n_exact"),
+          col("n_hit_ivf"), recall("n_hit_ivf").as("recall_ivf"),
+          col("n_hit_ivfpq"), recall("n_hit_ivfpq").as("recall_ivfpq"))
+    }
   }
 
   /** Bucket id of band `b` (planes `[b*r, (b+1)*r)`) — the banded split of
@@ -816,13 +834,13 @@ object Similarity {
     * Approximate by design: pairs above threshold that collide on no band
     * are missed — [[cosineNearDupPairs]] is the exact baseline the unit
     * tests measure recall against. At 100 TB the banded stream is written
-    * bucketed-by (band, bucket) and the candidate join is co-located. */
+    * bucketed-by (band, bucket) and the candidate join is co-located. A
+    * vector that is not `dim` long fails the job. */
   def lshNearDupPairs(emb: DataFrame, threshold: Double, planes: Int = 12,
                       bands: Int = 4, dim: Int = 64): DataFrame = {
     require(planes % bands == 0, "bands must divide planes")
     val r = planes / bands
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
+    val e = dimChecked(vectors(emb), dim)
     val banded = e.select(col("vec_id"),
         posexplode(array((0 until bands).map(b => bandBucket(col("v"), b, r, dim)): _*)))
       .select(col("vec_id"), col("pos").as("band"), col("col").as("bucket"))
@@ -831,29 +849,20 @@ object Similarity {
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
       .distinct()
-    cand
-      .join(e.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("nrm_a")), Seq("id_a"))
-      .join(e.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nrm_b")), Seq("id_b"))
-      .withColumn("cos", dotFast(col("va"), col("vb")) / (col("nrm_a") * col("nrm_b")))
-      .filter(col("cos") > threshold)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
-      .orderBy("id_a", "id_b")
+    verifyPairs(e, threshold)((a, b) =>
+      cand.join(a, Seq("id_a")).join(b, Seq("id_b"))).orderBy("id_a", "id_b")
   }
 
   /** Batched exact top-k — ONE corpus scan serves a whole query panel
     * (the offline-scoring shape: score every eval/benchmark query in one
     * pass instead of |panel| separate corpus scans): the panel broadcasts
     * (q rows), every corpus row scores against all q queries row-locally,
-    * and the per-query top-k reduces through the native bounded-heap
-    * aggregate ([[graft.plans.TopK.topKByScore]]) — partial heaps cap the
-    * shuffle at k rows per (task, query) where a window rank would
-    * shuffle and sort all |corpus|·q scored rows. Cosines ROUND(6)ed
-    * before ranking with vec_id tiebreak (the [[bruteForceTopK]]
-    * determinism convention). Returns `(query_id, rank, vec_id, cos)`. */
+    * and the per-query top-k reduces through the bounded-heap
+    * [[panelTail]]. Cosines ROUND(6)ed before ranking with vec_id
+    * tiebreak (the [[bruteForceTopK]] determinism convention). Returns
+    * `(query_id, rank, vec_id, cos)`. */
   def batchTopK(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame =
-    batchTopKImpl(
-      emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v")),
-      queryIds, k)
+    batchTopKImpl(vectors(emb), queryIds, k)
 
   /** [[batchTopK]] over the first `prefixDim` dims re-normalized — the
     * Matryoshka cheap pass ([[mrlTopK]]) batched over a query panel.
@@ -862,9 +871,7 @@ object Similarity {
     * so the scan prunes to `prefixDim/dim` of the vector bytes). */
   def mrlBatchTopK(emb: DataFrame, queryIds: Seq[Long], k: Int,
                    prefixDim: Int = 16): DataFrame =
-    batchTopKImpl(
-      emb.select(col("vec_id"),
-        toDoubleArray(slice(col("embedding"), 1, prefixDim)).as("v")),
+    batchTopKImpl(vectors(emb, toDoubleArray(slice(col("embedding"), 1, prefixDim))),
       queryIds, k)
 
   /** Two-stage Matryoshka funnel: the prefix-dim cheap pass shortlists
@@ -883,40 +890,22 @@ object Similarity {
     require(shortlist >= k, "shortlist must be >= k")
     val short = mrlBatchTopK(emb, queryIds, shortlist, prefixDim)
       .select(col("query_id"), col("vec_id"))
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val q = e.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    e.join(broadcast(short), Seq("vec_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .groupBy("query_id")
-      .agg(graft.plans.TopK.topKByScore(col("cos"), col("vec_id"),
-        struct(col("vec_id"), col("cos")), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.vec_id").as("vec_id"), col("col.cos").as("cos"))
-      .orderBy("query_id", "rank")
+    val e = vectors(emb)
+    panelTail(e.join(broadcast(short), Seq("vec_id"))
+      .join(broadcast(panel(e, queryIds)), Seq("query_id")), k)
   }
 
-  private def batchTopKImpl(ev: DataFrame, queryIds: Seq[Long],
-                            k: Int): DataFrame = {
+  /** Panel query rows `(query_id, qv, qnrm)` of vector frame `e`. */
+  private def panel(e: DataFrame, queryIds: Seq[Long]): DataFrame =
+    queries(e, col("vec_id").isin(queryIds: _*), col("vec_id").as("query_id"))
+
+  /** Every vector of `e` against the broadcast panel, itself excluded,
+    * through [[panelTail]]. */
+  private def batchTopKImpl(e: DataFrame, queryIds: Seq[Long], k: Int,
+                            keepIf: Option[Column] = None): DataFrame = {
     require(queryIds.nonEmpty, "queryIds must be non-empty")
-    val e = ev.withColumn("nrm", normFast(col("v")))
-    val q = e.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .groupBy("query_id")
-      .agg(graft.plans.TopK.topKByScore(col("cos"), col("vec_id"),
-        struct(col("vec_id"), col("cos")), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.vec_id").as("vec_id"), col("col.cos").as("cos"))
-      .orderBy("query_id", "rank")
+    panelTail(e.crossJoin(broadcast(panel(e, queryIds)))
+      .filter(col("vec_id") =!= col("query_id")), k, keepIf)
   }
 
   /** Hard-negative mining for contrastive training — per panel query,
@@ -931,25 +920,8 @@ object Similarity {
     * compares the ROUND(6)ed cosine so the band boundary is deterministic
     * on both engines. Returns `(query_id, rank, vec_id, cos)`. */
   def hardNegatives(emb: DataFrame, queryIds: Seq[Long], k: Int,
-                    maxCos: Double): DataFrame = {
-    require(queryIds.nonEmpty, "queryIds must be non-empty")
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val q = e.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))
-    e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .filter(col("cos") < maxCos)
-      .groupBy("query_id")
-      .agg(graft.plans.TopK.topKByScore(col("cos"), col("vec_id"),
-        struct(col("vec_id"), col("cos")), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("col.vec_id").as("vec_id"), col("col.cos").as("cos"))
-      .orderBy("query_id", "rank")
-  }
+                    maxCos: Double): DataFrame =
+    batchTopKImpl(vectors(emb), queryIds, k, Some(col("cos") < maxCos))
 
   /** Maximal Marginal Relevance diverse top-k (Carbonell & Goldstein
     * 1998): greedily pick `k` results maximizing
@@ -975,9 +947,7 @@ object Similarity {
     val session = emb.sparkSession
     val mu = 1.0 - lambda
     val pool = bruteForceTopK(emb, queryId, poolSize) // (vec_id, cos)
-    val pv = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .join(broadcast(pool.select("vec_id")), Seq("vec_id"))
-      .withColumn("nrm", normFast(col("v")))
+    val pv = vectors(emb.join(broadcast(pool.select("vec_id")), Seq("vec_id")))
     val pairs = pv.as("a").crossJoin(broadcast(pv.as("b")))
       .filter(col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"),
@@ -1153,24 +1123,15 @@ object Similarity {
     * [[trainCentroids]] output (the production fit) — same plan either
     * way, one broadcast table swaps. */
   def cellNearDupPairs(emb: DataFrame, centsIn: DataFrame,
-                       threshold: Double): DataFrame = {
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val cents = centsIn
-      .select(col("cell"), col("cv"), normFast(col("cv")).as("cnrm"))
-    val assigned = assignCells(e, cents)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-    val a = assigned.select(col("cell"), col("vec_id").as("id_a"),
-      col("v").as("va"), col("nrm").as("na"))
-    val b = assigned.select(col("cell"), col("vec_id").as("id_b"),
-      col("v").as("vb"), col("nrm").as("nb"))
-    a.join(b, Seq("cell"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos", dotFast(col("va"), col("vb")) / (col("na") * col("nb")))
-      .filter(col("cos") > threshold)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
+                       threshold: Double): DataFrame =
+    withinCellPairs(assignCells(vectors(emb), centroids(centsIn)), threshold)
       .orderBy("id_a", "id_b")
-  }
+
+  /** [[verifyPairs]] over the pairs of `assigned` vectors sharing a cell
+    * (a cell equi-join, never all-pairs). */
+  private def withinCellPairs(assigned: DataFrame, threshold: Double): DataFrame =
+    verifyPairs(assigned, threshold, "cell")((a, b) =>
+      a.join(b, Seq("cell")).filter(col("id_a") < col("id_b")))
 
   /** [[cellNearDupPairs]] with data-sized cell count and the
     * deterministic first-nCells centroid convention — the oracle-
@@ -1182,13 +1143,10 @@ object Similarity {
                            targetOccupancy: Int = 64): DataFrame = {
     val n = emb.count()
     val nCells = math.max(16L, (n + targetOccupancy - 1) / targetOccupancy).toInt
-    val e0 = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
     // scan floor on the ASSIGNMENT pass only (the count above is a cheap
     // metadata-ish scan; the O(n·cells·dim) argmax is the heavy stage) —
     // measured sf1 solo 2.5 s -> 0.9 s
-    cellNearDupPairs(graft.Tables.scanFloor(emb),
-      e0.filter(col("vec_id") < nCells)
-        .select(col("vec_id").as("cell"), col("v").as("cv")),
+    cellNearDupPairs(graft.Tables.scanFloor(emb), deterministicCentroids(emb, nCells),
       threshold)
   }
 
@@ -1219,16 +1177,15 @@ object Similarity {
     * rows reach the float cosine re-rank (at 100 TB the signatures live
     * as their own slim column/table and the shortlist's float vectors are
     * point lookups). Ties at both boundaries break by vec_id, so the
-    * result is deterministic. */
+    * result is deterministic. A vector that is not `dim` long fails the
+    * search. */
   def binaryTopK(emb: DataFrame, queryId: Long, k: Int,
                  shortlist: Int = 50, dim: Int = 64): DataFrame = {
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
     val (lo, hi) = binarySignature(col("v"), dim)
-    val sig = e.select(col("vec_id"), col("v"),
-      lo.as("bq_lo"), hi.as("bq_hi"), normFast(col("v")).as("nrm"))
-    val q = sig.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("bq_lo").as("q_lo"),
-        col("bq_hi").as("q_hi"), col("nrm").as("qnrm"))
+    val sig = dimChecked(vectors(emb), dim)
+      .withColumn("bq_lo", lo).withColumn("bq_hi", hi)
+    val q = queries(sig, col("vec_id") === queryId,
+      col("bq_lo").as("q_lo"), col("bq_hi").as("q_hi"))
     val ham = sig.filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
       .withColumn("hamming",
@@ -1236,11 +1193,8 @@ object Similarity {
           bit_count(col("bq_hi").bitwiseXOR(col("q_hi"))))
       .orderBy(col("hamming"), col("vec_id"))
       .limit(shortlist)
-    ham
-      .select(col("vec_id"), col("hamming"),
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+      .select(col("vec_id"), col("v"), col("nrm"), col("hamming"))
+    rankTail(ham, q, None, Seq(col("hamming")), k)
   }
 
   /** Matryoshka-style prefix-dimension ANN (Kusupati et al. 2022): rank
@@ -1252,17 +1206,9 @@ object Similarity {
     * DuckDB oracle replays it bit-for-bit. */
   def mrlTopK(emb: DataFrame, queryId: Long, k: Int,
               prefixDim: Int = 16): DataFrame = {
-    val e = emb.select(col("vec_id"),
-        toDoubleArray(slice(col("embedding"), 1, prefixDim)).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val q = e.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("nrm").as("qnrm"))
-    e.filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    val e = vectors(emb, toDoubleArray(slice(col("embedding"), 1, prefixDim)))
+    rankTail(e.filter(col("vec_id") =!= queryId),
+      queries(e, col("vec_id") === queryId), None, Nil, k)
   }
 
   /** SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning at
@@ -1286,13 +1232,8 @@ object Similarity {
     * every comparison boundary, ties to the lower vec_id — the DuckDB
     * oracle replays the whole pipeline. */
   def semDedup(emb: DataFrame, threshold: Double,
-               nCells: Int = 16): DataFrame = {
-    val e0 = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-    semDedupWith(emb,
-      e0.filter(col("vec_id") < nCells)
-        .select(col("vec_id").as("cell"), col("v").as("cv")),
-      threshold)
-  }
+               nCells: Int = 16): DataFrame =
+    semDedupWith(emb, deterministicCentroids(emb, nCells), threshold)
 
   /** [[semDedup]] with caller-supplied centroids `(cell, cv)` — the
     * TRAINED path (SemDeDup's own posture is a fitted k-means; the
@@ -1303,31 +1244,18 @@ object Similarity {
     * one persisted table and re-runs the same plan. */
   def semDedupWith(emb: DataFrame, centsIn: DataFrame,
                    threshold: Double): DataFrame = {
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val cents = centsIn
-      .select(col("cell"), col("cv"), normFast(col("cv")).as("cnrm"))
-    val assigned = assignCells(e, cents)
+    val assigned = assignCells(vectors(emb), centroids(centsIn))
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"),
         round(col("ccos"), 6).as("centroid_cos"))
       .persist()
     try {
-      val a = assigned.select(col("cell"), col("vec_id").as("id_a"),
-        col("v").as("va"), col("nrm").as("na"))
-      val b = assigned.select(col("cell"), col("vec_id").as("id_b"),
-        col("v").as("vb"), col("nrm").as("nb"))
-      val pairs = a.join(b, Seq("cell"))
-        .filter(col("id_a") < col("id_b"))
-        .withColumn("cos", dotFast(col("va"), col("vb")) / (col("na") * col("nb")))
-        .filter(col("cos") > threshold)
-        .select(col("id_a"), col("id_b"))
-      val groups = Dedup.canonicalComponents(pairs)
+      val groups = Dedup.canonicalComponents(
+        withinCellPairs(assigned, threshold).select(col("id_a"), col("id_b")))
       // one keeper per dup group: LOWEST centroid cosine (ROUND(6)ed),
       // ties to the lower vec_id; vectors in no group survive untouched
       val keepers = assigned.join(groups.withColumnRenamed("id", "vec_id"), Seq("vec_id"))
         .withColumn("kr", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("canonical")
-            .orderBy(col("centroid_cos"), col("vec_id"))))
+          Window.partitionBy("canonical").orderBy(col("centroid_cos"), col("vec_id"))))
         .filter(col("kr") === 1)
         .select(col("vec_id"))
       val grouped = groups.select(col("id").as("vec_id"))
@@ -1438,8 +1366,7 @@ object Similarity {
                             nCodes: Int = 16, dim: Int = 64, seed: Long = 42,
                             sampleFraction: Double = 1.0,
                             maxIter: Int = 20): DataFrame = {
-    val cents = centsIn
-      .select(col("cell"), col("cv"), normFast(col("cv")).as("cnrm"))
+    val cents = centroids(centsIn)
     fitSubspaces(encodedVectors(assignCells(vectors(emb), cents), cents, residual = true),
       m, nCodes, dim, seed, sampleFraction, maxIter)
   }
@@ -1476,26 +1403,10 @@ object Similarity {
   }
 
   /** [[ivfTopK]] with caller-supplied centroids `(cell, cv)` — the
-    * trained probe path. Identical dataflow: cosine-argmax assignment
-    * (ties to the lowest cell), probe the query's cell, exact rank
-    * inside. */
+    * trained probe path, the same [[ivfProbe]]. */
   def ivfTopKWith(emb: DataFrame, centsIn: DataFrame, queryId: Long,
-                  k: Int): DataFrame = {
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val cents = centsIn
-      .select(col("cell"), col("cv"), normFast(col("cv")).as("cnrm"))
-    val assigned = assignCells(e, cents)
-      .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
-    val q = assigned.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("nrm").as("qnrm"), col("cell").as("qcell"))
-    assigned.filter(col("vec_id") =!= queryId)
-      .join(broadcast(q), col("cell") === col("qcell"))
-      .select(col("vec_id"), col("cell"),
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
-  }
+                  k: Int): DataFrame =
+    ivfProbe(emb, centsIn, queryId, k)
 
   /** [[ivfPqTopK]] (raw encoding) over caller-supplied centroids `(cell,
     * cv)` and codebook `(s, code, cw)` — the trained billion-vector
@@ -1540,12 +1451,7 @@ object Similarity {
     // scan floor: with occupancy-sized cell counts the argmax assignment
     // is O(n·cells·dim) over a one-split scan (entry-level measurement
     // in SCALE.md round 13); identity on fan-out inputs
-    val e = graft.Tables.scanFloor(emb)
-      .select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
-    val cents = centsIn
-      .select(col("cell"), col("cv"), normFast(col("cv")).as("cnrm"))
-    val n = assignCells(e, cents)
+    val n = assignCells(vectors(graft.Tables.scanFloor(emb)), centroids(centsIn))
       .groupBy("cell").agg(count(lit(1)).as("n_vecs"))
     n.crossJoin(broadcast(n.agg(sum(col("n_vecs")).as("__t"))))
       .select(col("cell"), col("n_vecs"),
@@ -1574,8 +1480,9 @@ object Similarity {
   // needs nothing outside the index.
   // ------------------------------------------------------------------
 
-  /** The deterministic-convention centroid table: the first `nCells`
-    * vectors (the IVF convention every sim_* oracle replays). */
+  /** The deterministic-convention centroid table `(cell, cv)`: the first
+    * `nCells` vectors (the IVF convention every sim_* oracle replays).
+    * Every first-`nCells` caller builds its centroids here. */
   def deterministicCentroids(emb: DataFrame, nCells: Int = 16): DataFrame =
     emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
       .filter(col("vec_id") < nCells)
@@ -1601,8 +1508,7 @@ object Similarity {
   def residualCodebook(emb: DataFrame, nCells: Int = 16, nCodes: Int = 16,
                        m: Int = 8, dim: Int = 64): DataFrame = {
     require(dim % m == 0, "m must divide dim")
-    val cents = deterministicCentroids(emb, nCells)
-      .select(col("cell"), col("cv"), normFast(col("cv")).as("cnrm"))
+    val cents = ivfCentroids(emb, nCells)
     firstCodes(encodedSlices(assignCells(vectors(emb), cents), cents, m, dim,
       residual = true), nCodes)
   }
@@ -1620,8 +1526,7 @@ object Similarity {
     * centroids `(cell LONG, cv, cnrm)`, codebook `(s INT, code INT, cw)`. */
   private def quantizers(centsIn: DataFrame,
                          codebookIn: DataFrame): (DataFrame, DataFrame) =
-    (centsIn.select(col("cell").cast("long").as("cell"), col("cv"),
-      normFast(col("cv")).as("cnrm")),
+    (centroids(centsIn),
       codebookIn.select(col("s").cast("int").as("s"),
         col("code").cast("int").as("code"), col("cw")))
 
@@ -1689,12 +1594,7 @@ object Similarity {
   private def encodePostings(e: DataFrame, cents: DataFrame,
                              codebook: DataFrame, m: Int, dim: Int,
                              residual: Boolean): DataFrame = {
-    val checked = e.withColumn("v", when(size(col("v")) =!= dim,
-      raise_error(concat(lit("vector "), col("vec_id").cast("string"),
-        lit(" has "), size(col("v")).cast("string"),
-        lit(s" dims, the index has dim = $dim"))))
-      .otherwise(col("v")))
-    val assigned = assignCells(checked, cents)
+    val assigned = assignCells(dimChecked(e, dim), cents)
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"))
     val codes = nearestCodes(encodedSlices(assigned, cents, m, dim, residual), codebook)
       // codes as ONE array ordered by subspace (collect_list order is
@@ -1903,9 +1803,8 @@ object Similarity {
                         codebook: DataFrame, m: Int, dim: Int,
                         residual: Boolean, queryId: Long, k: Int,
                         nprobe: Int, shortlist: Int): DataFrame = {
-    val q = postings.filter(col("vec_id") === queryId)
-      .select(col("v").as("qv"), col("nrm").as("qnrm"))
-    val probed = cents.select(col("cell"), col("cv"), normFast(col("cv")).as("cnrm"))
+    val q = queries(postings, col("vec_id") === queryId)
+    val probed = centroids(cents)
       .crossJoin(broadcast(q))
       .withColumn("qccos",
         dotFast(col("cv"), col("qv")) / (col("cnrm") * col("qnrm")))
@@ -1937,14 +1836,17 @@ object Similarity {
       .agg(round(sum(col("qd2")), 6).as("adc_dist"))
       .orderBy(col("adc_dist"), col("vec_id"))
       .limit(shortlist)
-    short
-      .join(postings.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id"))
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("cell"), col("adc_dist"),
-        round(dotFast(col("v"), col("qv")) / (col("nrm") * col("qnrm")), 6).as("cos"))
-      .orderBy(col("cos").desc, col("vec_id"))
-      .limit(k)
+    rankTail(short.join(postings.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id")),
+      q, None, Seq(col("cell"), col("adc_dist")), k)
   }
+
+  /** A selected center `(c_id, cv, cnrm)` from a vector frame's row. */
+  private def asCenter: Seq[Column] =
+    Seq(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cnrm"))
+
+  /** Cosine distance `1 − cos` of the row's `(v, nrm)` to a center. */
+  private def centerDist(cv: Column, cnrm: Column): Column =
+    lit(1.0) - dotFast(col("v"), cv) / (col("nrm") * cnrm)
 
   /** Greedy k-center coreset selection (farthest-point sampling,
     * Gonzalez 1985) over an embedding corpus — the standard geometric
@@ -1979,11 +1881,9 @@ object Similarity {
     // one-split small-SF parquet layout would serialize every round —
     // the scan-floor fan-out pays for itself k times over (the SQ/PQ
     // code-scan measurement in SCALE.md round 13; identity at scale)
-    val en = graft.Tables.scanFloor(emb)
-      .select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
+    val en = vectors(graft.Tables.scanFloor(emb))
     val seed = en.orderBy("vec_id").limit(1)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cnrm"))
+      .select(asCenter: _*)
       .transform(Iter.checkpoint)
     var picks = seed.select(lit(1).as("sel_rank"), col("c_id").as("vec_id"),
       lit(null).cast("double").as("radius"))
@@ -1993,21 +1893,17 @@ object Similarity {
     // tiny residual agrees bit-for-bit and never perturbs the argmax)
     var st = en.crossJoin(broadcast(seed))
       .select(col("vec_id"), col("v"), col("nrm"),
-        (lit(1.0) - dotFast(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
-          .as("mind"))
+        centerDist(col("cv"), col("cnrm")).as("mind"))
       .transform(Iter.checkpoint)
     for (r <- 2 to k) {
       val top = st.orderBy(col("mind").desc, col("vec_id")).limit(1)
-        .select(col("vec_id").as("c_id"), col("v").as("cv"),
-          col("nrm").as("cnrm"), col("mind").as("mrad"))
+        .select(asCenter :+ col("mind").as("mrad"): _*)
         .transform(Iter.checkpoint)
       picks = picks.unionByName(top.select(lit(r).as("sel_rank"),
         col("c_id").as("vec_id"), round(col("mrad"), 6).as("radius")))
       if (r < k) st = st.crossJoin(broadcast(top.select("c_id", "cv", "cnrm")))
         .select(col("vec_id"), col("v"), col("nrm"),
-          least(col("mind"),
-            lit(1.0) - dotFast(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
-            .as("mind"))
+          least(col("mind"), centerDist(col("cv"), col("cnrm"))).as("mind"))
         .transform(Iter.checkpoint)
     }
     picks.orderBy("sel_rank")
@@ -2029,18 +1925,14 @@ object Similarity {
     * `percentile` pairs with DuckDB `quantile_cont` (the ev_time_deltas
     * convention). */
   def selectionCoverage(emb: DataFrame, centers: DataFrame): DataFrame = {
-    val en = graft.Tables.scanFloor(emb)
-      .select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
+    val en = vectors(graft.Tables.scanFloor(emb))
     val cvecs = centers.select("vec_id").join(en, Seq("vec_id"))
-      .agg(sort_array(collect_list(struct(col("vec_id").as("c_id"),
-        col("v").as("cv"), col("nrm").as("cnrm")))).as("cents"),
+      .agg(sort_array(collect_list(struct(asCenter: _*))).as("cents"),
         count(lit(1)).as("k"))
       .localCheckpoint()
     en.crossJoin(broadcast(cvecs))
       .select(col("k"), array_min(transform(col("cents"), c =>
-        lit(1.0) - dot(col("v"), c.getField("cv"))
-          / (col("nrm") * c.getField("cnrm")))).as("d"))
+        centerDist(c.getField("cv"), c.getField("cnrm")))).as("d"))
       // k is constant across rows — grouping on it carries it to the
       // output without a second broadcast join
       .groupBy("k")
@@ -2088,17 +1980,14 @@ object Similarity {
                           ell: Int = 8): DataFrame = {
     require(rounds >= 1, "kMeansParOversample needs at least one round")
     require(ell >= 1, "oversampling factor ell must be >= 1")
-    val en = graft.Tables.scanFloor(emb)
-      .select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
+    val en = vectors(graft.Tables.scanFloor(emb))
       .transform(Iter.checkpoint)
     val seed = en.orderBy("vec_id").limit(1)
-      .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cnrm"))
+      .select(asCenter: _*)
       .transform(Iter.checkpoint)
     var st = en.crossJoin(broadcast(seed))
       .select(col("vec_id"), col("v"), col("nrm"),
-        (lit(1.0) - dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
-          .as("mind"))
+        centerDist(col("cv"), col("cnrm")).as("mind"))
       .transform(Iter.checkpoint)
     var cands = seed.select(lit(0).as("sel_round"), col("c_id").as("vec_id"),
       lit(null).cast("double").as("dist"))
@@ -2120,26 +2009,22 @@ object Similarity {
       // an adversarial round can draw zero candidates (every u above its
       // threshold): the coalesce keeps mind, the round records no rows
       if (r < rounds) st = st.crossJoin(broadcast(pick.agg(
-          sort_array(collect_list(struct(col("vec_id").as("c_id"),
-            col("v").as("cv"), col("nrm").as("cnrm")))).as("cents"))))
+          sort_array(collect_list(struct(asCenter: _*))).as("cents"))))
         .select(col("vec_id"), col("v"), col("nrm"),
           least(col("mind"), coalesce(
             array_min(transform(col("cents"), c =>
-              lit(1.0) - dot(col("v"), c.getField("cv"))
-                / (col("nrm") * c.getField("cnrm")))),
+              centerDist(c.getField("cv"), c.getField("cnrm")))),
             col("mind"))).as("mind"))
         .transform(Iter.checkpoint)
     }
     // weighting: nearest candidate per point ((d, id) struct-min — ties
     // to the lower candidate id), then one count aggregation
     val cvecs = cands.select("vec_id").join(en, Seq("vec_id"))
-      .agg(sort_array(collect_list(struct(col("vec_id").as("c_id"),
-        col("v").as("cv"), col("nrm").as("cnrm")))).as("cents"))
+      .agg(sort_array(collect_list(struct(asCenter: _*))).as("cents"))
       .transform(Iter.checkpoint)
     val weights = en.crossJoin(broadcast(cvecs))
       .select(array_min(transform(col("cents"), c => struct(
-          (lit(1.0) - dot(col("v"), c.getField("cv"))
-            / (col("nrm") * c.getField("cnrm"))).as("d"),
+          centerDist(c.getField("cv"), c.getField("cnrm")).as("d"),
           c.getField("c_id").as("c_id")))).getField("c_id").as("c_id"))
       .groupBy("c_id").agg(count(lit(1)).as("weight"))
     cands.join(weights, cands("vec_id") === weights("c_id"), "left")
@@ -2186,12 +2071,9 @@ object Similarity {
     * seed), and its input weight. */
   def kMeansParReduce(emb: DataFrame, cands: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "kMeansParReduce needs at least one center")
-    import org.apache.spark.sql.expressions.Window
     val cum = Window.orderBy("vec_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val en = graft.Tables.scanFloor(emb)
-      .select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v")))
+    val en = vectors(graft.Tables.scanFloor(emb))
     // the candidate working set: vec_id, vector, weight — checkpointed
     // ONCE so the k reduction rounds never re-execute the oversample
     // plan. Round 16: coalesced to ONE partition first — the set is
@@ -2239,29 +2121,25 @@ object Similarity {
       // round 1: seed ∝ weight (integer potentials already)
       val seed = Iter.checkpoint(drawOne(
         st.withColumn("qi", col("w")).withColumn("u", lit(uVal(1))))
-        .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cnrm")))
+        .select(asCenter: _*))
       var acc = seed.select(lit(1).as("sel_rank"), col("c_id").as("vec_id"),
         lit(null).cast("double").as("dist"))
       st = Iter.checkpoint(st.crossJoin(broadcast(seed))
         .select(col("vec_id"), col("v"), col("nrm"), col("w"),
-          (lit(1.0) - dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
-            .as("mind")))
+          centerDist(col("cv"), col("cnrm")).as("mind")))
       for (r <- 2 to k) {
         // fixed-point quantized potential: floor(w·mind·1e6) as BIGINT
         val q = st.withColumn("qi",
           floor(col("w").cast("double") * col("mind") * lit(1000000.0)).cast("long"))
           .withColumn("u", lit(uVal(r)))
         val pick = Iter.checkpoint(drawOne(q)
-          .select(col("vec_id").as("c_id"), col("v").as("cv"),
-            col("nrm").as("cnrm"), col("mind").as("mrad")))
+          .select(asCenter :+ col("mind").as("mrad"): _*))
         acc = acc.unionByName(pick.select(lit(r).as("sel_rank"),
           col("c_id").as("vec_id"), round(col("mrad"), 6).as("dist")))
         if (r < k) st = Iter.checkpoint(
           st.crossJoin(broadcast(pick.select("cv", "cnrm")))
             .select(col("vec_id"), col("v"), col("nrm"), col("w"),
-              least(col("mind"),
-                lit(1.0) - dot(col("v"), col("cv")) / (col("nrm") * col("cnrm")))
-                .as("mind")))
+              least(col("mind"), centerDist(col("cv"), col("cnrm"))).as("mind")))
       }
       acc
     }
@@ -2273,16 +2151,7 @@ object Similarity {
   /** Embedding-cosine near-duplicate pairs: exact all-pairs baseline —
     * kept as the recall oracle for [[lshNearDupPairs]] (unit tests only;
     * at 100 TB you never run all-pairs). */
-  def cosineNearDupPairs(emb: DataFrame, threshold: Double): DataFrame = {
-    val e = emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .withColumn("nrm", normFast(col("v"))) // norms once per vector, not per pair
-    val a = e.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("nrm_a"))
-    val b = e.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nrm_b"))
-    a.crossJoin(b)
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("cos", dotFast(col("va"), col("vb")) / (col("nrm_a") * col("nrm_b")))
-      .filter(col("cos") > threshold)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cos"))
-      .orderBy("id_a", "id_b")
-  }
+  def cosineNearDupPairs(emb: DataFrame, threshold: Double): DataFrame =
+    verifyPairs(vectors(emb), threshold)((a, b) =>
+      a.crossJoin(b).filter(col("id_a") < col("id_b"))).orderBy("id_a", "id_b")
 }

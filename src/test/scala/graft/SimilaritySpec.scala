@@ -1086,4 +1086,80 @@ class SimilaritySpec extends SparkSpec {
     assert(out.length >= vecs.size) // seed + all positive-mind points
     assert(out.map(_.getLong(3)).sum == vecs.size)
   }
+
+  private def ranked(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double)] =
+    df.select("vec_id", "cos").collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  test("exact-cosine kernel: every caller with a whole-corpus candidate set equals brute force") {
+    val emb = Tables.embeddings(spark, sf0001)
+    val n = emb.count().toInt
+    val want = ranked(Similarity.bruteForceTopK(emb, queryId = 20, k = 10))
+    val oneCentroid = emb.filter(col("vec_id") === 0L)
+      .select(lit(0L).as("cell"), Similarity.toDoubleArray(col("embedding")).as("cv"))
+    val cases = Seq(
+      "ivfTopK(nCells = 1)" -> Similarity.ivfTopK(emb, 20, 10, nCells = 1),
+      "ivfTopKWith(one centroid)" -> Similarity.ivfTopKWith(emb, oneCentroid, 20, 10),
+      "ivfFilteredTopK(lit(true), nCells = 1)" ->
+        Similarity.ivfFilteredTopK(emb, 20, 10, lit(true), Nil, nCells = 1),
+      "ivfTopKIndexed(every vector in cell 0)" -> Similarity.ivfTopKIndexed(emb,
+        emb.select(col("vec_id"), lit(0L).as("cell")), 20, 10),
+      // one plane: the query bucket and its one-bit flip are both buckets
+      "lshTopKMultiprobe(planes = 1)" ->
+        Similarity.lshTopKMultiprobe(emb, 20, 10, planes = 1),
+      "binaryTopK(shortlist = n)" -> Similarity.binaryTopK(emb, 20, 10, shortlist = n))
+    assert(want.length == 10)
+    for ((name, got) <- cases) assert(ranked(got) == want, name)
+  }
+
+  test("whitenedTopK equals a driver-side whitened brute-force ranking") {
+    val emb = Tables.embeddings(spark, sf0001)
+    val stats = Similarity.whitenStats(emb).collect()
+    val mus = stats.map(_.getAs[Double]("mu"))
+    val sds = stats.map(_.getAs[Double]("sd"))
+    val all = emb.select("vec_id", "embedding").collect().map(r => r.getLong(0) ->
+      r.getSeq[Float](1).map(_.toDouble).zipWithIndex
+        .map { case (x, i) => (x - mus(i)) / sds(i) }.toArray)
+    // the engine's ascending left fold
+    def dot(a: Array[Double], b: Array[Double]): Double = {
+      var acc = 0.0
+      var i = 0
+      while (i < a.length) { acc += a(i) * b(i); i += 1 }
+      acc
+    }
+    val q = all.find(_._1 == 20L).get._2
+    val want = all.filter(_._1 != 20L)
+      .map { case (id, w) => id -> BigDecimal(dot(w, q) /
+        (math.sqrt(dot(w, w)) * math.sqrt(dot(q, q))))
+        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble }
+      .sortBy { case (id, c) => (-c, id) }.take(10).toSeq
+    assert(ranked(Similarity.whitenedTopK(emb, queryId = 20, k = 10)) == want)
+  }
+
+  test("LSH and binary search fail on vectors that are not dim long") {
+    val short = Tables.embeddings(spark, sf0001)
+      .select(col("vec_id"), slice(col("embedding"), 1, 32).as("embedding"))
+    val searches = Seq[(String, () => Unit)](
+      "lshTopK" -> (() => Similarity.lshTopK(short, 20, 10).collect()),
+      "lshTopKMultiprobe" -> (() => Similarity.lshTopKMultiprobe(short, 20, 10).collect()),
+      "lshNearDupPairs" -> (() => Similarity.lshNearDupPairs(short, threshold = -2).collect()),
+      "binaryTopK" -> (() => Similarity.binaryTopK(short, 20, 10).collect()))
+    for ((name, run) <- searches) {
+      val msg = messages(intercept[Exception](run()))
+      assert(msg.contains("has 32 dims") && msg.contains("dim = 64"), s"$name: $msg")
+    }
+  }
+
+  test("recall harnesses fail on a panel id that is not in the corpus") {
+    val emb = Tables.embeddings(spark, sf0001)
+    val harnesses = Seq[(String, Seq[Long] => Unit)](
+      "annRecallIvf" -> (ids => Similarity.annRecallIvf(emb, ids, k = 10)),
+      "annRecallIvfPq" -> (ids => Similarity.annRecallIvfPq(emb, ids, k = 10)))
+    for ((name, harness) <- harnesses) {
+      val err = intercept[IllegalArgumentException](harness(Seq(20L, 999999L)))
+      assert(err.getMessage.contains("999999"), s"$name: ${err.getMessage}")
+    }
+  }
 }
