@@ -2975,7 +2975,8 @@ object SparkEntry {
       // compaction ≡ from-scratch rebuild; IndexCompactSpec additionally
       // pins layout equality vs writeIvfPqIndex over the merged corpus,
       // v=1 reader isolation mid-compaction, upsert (delta-wins)
-      // semantics, and DPP firing on the compacted postings scan
+      // semantics, and the compacted postings scan reading only the
+      // probed cells' partitions
       (s, d) => {
         val dir = ivfPqIndexShared(s, d)
         if (!new java.io.File(s"$dir/v=2/manifest/_SUCCESS").exists) {
@@ -3000,11 +3001,11 @@ object SparkEntry {
       // compactIvfPqIndex later applies, so the SAME oracle as
       // sim_index_compact hash-proves compaction is transparent to
       // readers: query(base ∪ delta) ≡ query(compacted v=2) ≡
-      // from-scratch rebuild. The delta vec_id set broadcasts into the
-      // base anti-join (the delta is one ingest window, O(batch)); the
-      // corpus-sized base scan stays partition-pruned by the nprobe
-      // probe (IndexCompactSpec pins the dynamicpruning evidence on
-      // the unioned scan)
+      // from-scratch rebuild. The delta's vec_id set is read once at
+      // open and drops the replaced base rows as a literal set (the
+      // delta is one ingest window, O(batch)); the probe's literal
+      // `cell IN (…)` prunes both branches of the unioned scan when the
+      // plan is built (IndexCompactSpec pins the partitions read)
       (s, d) => {
         val dir = ivfPqIndexShared(s, d)
         // same ingest batch as sim_index_compact; guarded + idempotent

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.plans.VectorExpressions.refLit
 
 /** Similarity search over embedding columns (`Array[Float]`).
   *
@@ -19,7 +20,8 @@ import org.apache.spark.sql.functions._
   * ingest pass and is persisted + bucketed-by; queries then touch one
   * bucket (partition pruning), not the corpus.
   *
-  * Operators returning `localCheckpoint(eager = true)` follow the
+  * Operators returning `localCheckpoint(eager = true)`, and the IVF-PQ
+  * top-k searches, which return a local frame, follow the
   * eager-materialization contract documented on [[MLEval]]: executed at
   * call time, lineage truncated, not lazily composable.
   */
@@ -466,6 +468,29 @@ object Similarity {
   private def l2sq(a: Column, b: Column): Column =
     dotFast(a, a) + dotFast(b, b) - lit(2.0) * dotFast(a, b)
 
+  /** Driver-side [[dotFast]] over equal-length arrays: the same ascending
+    * fold, so a score computed on the driver is bit-identical to the
+    * column form. The norm is `sqrt(dotArr(a, a))`, as [[normFast]]. */
+  private def dotArr(a: Array[Double], b: Array[Double]): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < a.length) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
+  /** Driver-side [[l2sq]]: `a·a + b·b − 2·a·b` over [[dotArr]]. */
+  private def l2sqArr(a: Array[Double], b: Array[Double]): Double =
+    dotArr(a, a) + dotArr(b, b) - 2.0 * dotArr(a, b)
+
+  /** `xs` ordered as Spark orders `score DESC, id`: NaN above +∞, −0.0
+    * equal to 0.0 (Spark's double ordering), ties to the lower id. */
+  private def rankDesc[T](xs: Array[T])(score: T => Double, id: T => Long): Array[T] =
+    xs.sortWith { (a, b) =>
+      val (sa, sb) = (score(a), score(b))
+      val o = if (sa == sb) 0 else java.lang.Double.compare(sb, sa)
+      o < 0 || (o == 0 && id(a) < id(b))
+    }
+
   /** Sub-vector `s` (0-based) of a `dim`-vector split into `m` equal
     * subspaces. */
   private def subVector(v: Column, s: Int, m: Int, dim: Int): Column =
@@ -573,8 +598,11 @@ object Similarity {
     * `residual`, of their assigned-cell residuals ([[residualCodebook]]).
     * The corpus is encoded in memory and ranked by the one IVF-PQ kernel
     * that also serves [[ivfPqTopKWith]] and [[ivfPqTopKFromIndex]] — see
-    * [[ivfPqRank]] for the probe, ADC, shortlist and re-rank. The catalog
-    * pins both encodings (`sim_ivfpq_ann`, `sim_ivfpq_res_ann`). */
+    * [[IvfPqKernel]] for the probe, ADC, shortlist and re-rank; the
+    * result is computed when the call runs and returned as a local frame.
+    * A `queryId` that is not in `emb` fails with an
+    * `IllegalArgumentException`. The catalog pins both encodings
+    * (`sim_ivfpq_ann`, `sim_ivfpq_res_ann`). */
   def ivfPqTopK(emb: DataFrame, queryId: Long, k: Int, nCells: Int = 16,
                 nprobe: Int = 4, m: Int = 8, nCodes: Int = 16,
                 shortlist: Int = 50, dim: Int = 64,
@@ -749,7 +777,7 @@ object Similarity {
     * shuffle, no join strategy, and no determinism convention (ties still
     * break to the lowest cell/code id).
     *
-    * The IVF-PQ arm is [[ivfPqRank]]'s dataflow batched over the query
+    * The IVF-PQ arm is [[IvfPqKernel]]'s ranking batched over the query
     * panel (every rank window partitions by query id). `residual = true`
     * encodes `v − centroid(cell(v))` and builds the ADC table per probed
     * cell; the codebook passed in must then be residual-trained
@@ -761,7 +789,7 @@ object Similarity {
     require(dim % m == 0, "m must divide dim")
     val (cents, codebook) = quantizers(centsIn, codebookIn)
     recallArms(emb, cents, queryIds, k) { r =>
-      // ---- IVF-PQ arm (ivfPqRank conventions, per query id) ----
+      // ---- IVF-PQ arm (IvfPqKernel conventions, per query id) ----
       val qvecs = r.qs.select("qid", "qv", "qnrm")
       val probed = cents.crossJoin(broadcast(qvecs))
         .withColumn("qccos",
@@ -1413,9 +1441,10 @@ object Similarity {
     * serving shape: fitted coarse cells for the probe, fitted PQ
     * codewords for the ADC rank, exact re-rank of the shortlist. The
     * corpus is encoded in memory exactly as [[writeIvfPqIndex]] encodes
-    * its postings and ranked by the same [[ivfPqRank]] kernel, so this
-    * equals [[ivfPqTopKFromIndex]] over a layout exported with the same
-    * quantizers. */
+    * its postings and ranked by the same [[IvfPqKernel]], so this equals
+    * [[ivfPqTopKFromIndex]] over a layout exported with the same
+    * quantizers. Eager, local result; a `queryId` that is not in `emb`
+    * fails with an `IllegalArgumentException`. */
   def ivfPqTopKWith(emb: DataFrame, centsIn: DataFrame, codebookIn: DataFrame,
                     queryId: Long, k: Int, nprobe: Int = 4, m: Int = 8,
                     shortlist: Int = 50, dim: Int = 64): DataFrame =
@@ -1423,16 +1452,19 @@ object Similarity {
       queryId, k, nprobe, shortlist)
 
   /** Encode `emb` in memory against the given quantizers (the
-    * [[writeIvfPqIndex]] postings, never written) and rank them with
-    * [[ivfPqRank]]: the body of [[ivfPqTopK]] and [[ivfPqTopKWith]]. */
+    * [[writeIvfPqIndex]] postings, never written) and rank them with the
+    * [[IvfPqKernel]], the query row taken from `emb`'s vector frame: the
+    * body of [[ivfPqTopK]] and [[ivfPqTopKWith]]. */
   private def ivfPqInMemory(emb: DataFrame, centsIn: DataFrame,
                             codebookIn: DataFrame, m: Int, dim: Int,
                             residual: Boolean, queryId: Long, k: Int,
                             nprobe: Int, shortlist: Int): DataFrame = {
     require(dim % m == 0, "m must divide dim")
+    val e = vectors(emb)
     val (cents, codebook) = quantizers(centsIn, codebookIn)
-    ivfPqRank(encodePostings(vectors(emb), cents, codebook, m, dim, residual),
-      cents, codebook, m, dim, residual, queryId, k, nprobe, shortlist)
+    IvfPqKernel(encodePostings(e, cents, codebook, m, dim, residual), e, cents,
+      codebook, m, dim, residual, "the embedding table")
+      .topK(queryId, k, nprobe, shortlist)
   }
 
   /** Per-cell occupancy audit — the PRE-JOIN guard the cell-bucketed
@@ -1558,7 +1590,6 @@ object Similarity {
                       dim: Int = 64, residual: Boolean = false): Unit = {
     require(dim % m == 0, "m must divide dim")
     val base = s"$dir/v=$version"
-    val e = vectors(emb)
     val (cents, codebook) = quantizers(centsIn, codebookIn)
     // the aggregates the manifest needs anyway, widened to carry the
     // geometry check (no extra job)
@@ -1576,10 +1607,13 @@ object Similarity {
     cents.select(col("cell"), col("cv")).write.mode("overwrite")
       .parquet(s"$base/centroids")
     codebook.write.mode("overwrite").parquet(s"$base/codebook")
-    encodePostings(e, cents, codebook, m, dim, residual)
+    encodePostings(vectors(emb), cents, codebook, m, dim, residual)
       .write.mode("overwrite").partitionBy("cell").parquet(s"$base/postings")
-    writeManifest(emb.sparkSession, base, version, dim, m, cb.getInt(0) + 1,
-      ct.getLong(0), e.count(), residual)
+    // the count of the written postings, not of `emb`: no recompute of
+    // the input frame
+    val spark = emb.sparkSession
+    writeManifest(spark, base, version, dim, m, cb.getInt(0) + 1, ct.getLong(0),
+      readPostings(spark, s"$base/postings").count(), residual)
   }
 
   /** Assignment + PQ encoding: the postings of [[writeIvfPqIndex]] (full
@@ -1618,29 +1652,35 @@ object Similarity {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** A postings-schema parquet dir; `cell` comes back through partition
-    * discovery, which infers int — pinned to long. */
+  /** A postings-schema parquet dir (base postings or delta), read with
+    * the schema [[encodePostings]] fixes: nothing is inferred, and the
+    * `cell` partition column comes back as LONG. */
   private def readPostings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).withColumn("cell", col("cell").cast("long"))
+    spark.read.schema("vec_id BIGINT, codes ARRAY<INT>, v ARRAY<DOUBLE>, " +
+      "nrm DOUBLE, cell BIGINT").parquet(dir)
 
   /** The one manifest + quantizer reader: `dir/v=<version>`'s manifest
     * fields and centroid/codebook frames, over the given postings (append
-    * never touches the base postings, so it does not open them).
-    * Manifests written before the residual variant existed lack the
-    * `residual` column; they are all raw-encoded by construction, so the
-    * absent column reads as false (additive schema evolution). */
+    * never touches the base postings, so it does not open them). Every
+    * part is read with the schema its writer fixes, so opening a layout
+    * runs one job, the manifest read. Manifests written before the
+    * residual variant existed lack the `residual` column; they are all
+    * raw-encoded by construction, so the absent column reads as null,
+    * taken as false (additive schema evolution). */
   private def readLayout(spark: SparkSession, dir: String, version: Int,
                          postings: => DataFrame): IvfPqIndex = {
     val base = s"$dir/v=$version"
-    val mf = spark.read.parquet(s"$base/manifest").collect()(0)
+    val mf = spark.read.schema("version INT, dim INT, m INT, n_codes INT, " +
+      "n_cells BIGINT, n_vectors BIGINT, residual BOOLEAN")
+      .parquet(s"$base/manifest").collect()(0)
     IvfPqIndex(
-      version = mf.getAs[Int]("version"), dim = mf.getAs[Int]("dim"),
-      m = mf.getAs[Int]("m"), nCodes = mf.getAs[Int]("n_codes"),
-      nCells = mf.getAs[Long]("n_cells"), nVectors = mf.getAs[Long]("n_vectors"),
-      residual = mf.schema.fieldNames.contains("residual") &&
-        mf.getAs[Boolean]("residual"),
-      cents = spark.read.parquet(s"$base/centroids"),
-      codebook = spark.read.parquet(s"$base/codebook"),
+      version = mf.getInt(0), dim = mf.getInt(1), m = mf.getInt(2),
+      nCodes = mf.getInt(3), nCells = mf.getLong(4), nVectors = mf.getLong(5),
+      residual = !mf.isNullAt(6) && mf.getBoolean(6),
+      cents = spark.read.schema("cell BIGINT, cv ARRAY<DOUBLE>")
+        .parquet(s"$base/centroids"),
+      codebook = spark.read.schema("s INT, code INT, cw ARRAY<DOUBLE>")
+        .parquet(s"$base/codebook"),
       postings = postings)
   }
 
@@ -1720,7 +1760,7 @@ object Similarity {
     from.codebook.write.mode("overwrite").parquet(s"$to/codebook")
     from.postings.write.mode("overwrite").partitionBy("cell").parquet(s"$to/postings")
     writeManifest(spark, to, toVersion, from.dim, from.m, from.nCodes,
-      from.nCells, spark.read.parquet(s"$to/postings").count(), from.residual)
+      from.nCells, readPostings(spark, s"$to/postings").count(), from.residual)
     toVersion
   }
 
@@ -1736,16 +1776,17 @@ object Similarity {
     * delta-wins-on-collision, the very upsert [[compactIvfPqIndex]]
     * writes out, so compaction is TRANSPARENT to readers — the
     * `sim_index_query_delta` entry hash-proves a query over this
-    * overlay equals the same query over the compacted v=N+1.
+    * overlay equals the same query over the compacted v=N+1. The query
+    * row of [[ivfPqTopKFromIndex]] comes from the overlay too, so an
+    * updated id queries with its delta vector.
     *
-    * Scale shape: the delta is one ingest window — batch-sized — so
-    * its vec_id set broadcasts into the base anti-join and its own
-    * scan is O(batch); the base postings scan stays the FIRST branch
-    * of the union, which is the branch DPP lineage tracking follows
-    * (Union exposes its first child's attributes), so the nprobe probe
-    * still partition-prunes the corpus-sized side (IndexCompactSpec
-    * pins the executed-plan evidence). No committed delta → the plain
-    * [[readIvfPqIndex]] result. */
+    * Scale shape: the delta is one ingest window — batch-sized — so its
+    * vec_id set is read once here and drops the replaced rows from the
+    * base scan as a literal set; no join remains, so a filter on `cell`
+    * prunes the partitions of both branches when the plan is built (the
+    * serving query's `cell IN (…)`; IndexCompactSpec pins the
+    * partitions read). No committed delta → the plain [[readIvfPqIndex]]
+    * result. */
   def readIvfPqIndexWithDelta(spark: SparkSession, dir: String,
                               version: Int): IvfPqIndex = {
     val base = readIvfPqIndex(spark, dir, version)
@@ -1753,91 +1794,134 @@ object Similarity {
     if (!committedDirExists(spark, deltaDir)) base
     else {
       val delta = readPostings(spark, deltaDir)
-      val overlay = base.postings
-        .join(broadcast(delta.select("vec_id")), Seq("vec_id"), "left_anti")
-        .unionByName(delta.select(base.postings.columns.map(col): _*))
-      base.copy(postings = overlay)
+      val replaced = delta.select("vec_id").collect().map(_.getLong(0))
+      base.copy(postings = base.postings
+        .filter(!col("vec_id").isin(replaced.toIndexedSeq: _*))
+        .unionByName(delta))
     }
   }
 
   /** IVF-PQ top-k replayed from an exported layout ALONE — the serving
-    * read path: [[ivfPqRank]] over the index's postings and quantizers,
-    * with the encoding taken from the manifest's `residual` flag (not a
-    * caller argument — the layout is self-describing). The postings
-    * scan is partition-pruned to the probed cells, and the exact re-rank
-    * reads the index's own raw vectors. The kernel is the one the
-    * in-memory paths rank with, so the replay equals [[ivfPqTopKWith]] /
-    * [[ivfPqTopK]] over the same quantizers; the catalog proves it by
-    * hash against the `sim_ivfpq_ann` (`sim_index_export`) and
-    * `sim_ivfpq_res_ann` (`sim_index_export_res`) oracles. */
+    * read path: the [[IvfPqKernel]] over the index's postings and
+    * quantizers, with the encoding taken from the manifest's `residual`
+    * flag (not a caller argument — the layout is self-describing) and
+    * the query row read from the postings (base ∪ delta for
+    * [[readIvfPqIndexWithDelta]]). The probe and the ADC table run on
+    * the driver; the one postings scan filters on a literal
+    * `cell IN (…)`, so it is partition-pruned to the probed cells when
+    * the plan is built, and the exact re-rank reads the index's own raw
+    * vectors. The result is computed when the call runs and returned as
+    * a local frame. A `queryId` that is not in the index fails with an
+    * `IllegalArgumentException` naming the id and the version. The
+    * kernel is the one the in-memory paths rank with, so the replay
+    * equals [[ivfPqTopKWith]] / [[ivfPqTopK]] over the same quantizers;
+    * the catalog proves it by hash against the `sim_ivfpq_ann`
+    * (`sim_index_export`) and `sim_ivfpq_res_ann`
+    * (`sim_index_export_res`) oracles. */
   def ivfPqTopKFromIndex(idx: IvfPqIndex, queryId: Long, k: Int,
                          nprobe: Int = 4, shortlist: Int = 50): DataFrame =
-    ivfPqRank(idx.postings, idx.cents, idx.codebook, idx.m, idx.dim,
-      idx.residual, queryId, k, nprobe, shortlist)
+    indexKernel(idx).topK(queryId, k, nprobe, shortlist)
 
-  /** THE IVF-PQ kernel (FAISS `IVFx,PQy` semantics) over postings `(vec_id,
-    * cell, codes, v, nrm)` — an exported layout's or the in-memory
-    * [[encodePostings]] output — and the quantizers they were encoded
-    * with, centroids `(cell, cv)` and codebook `(s, code, cw)`:
+  /** The [[IvfPqKernel]] of an exported layout: its postings, with the
+    * query row read from them. */
+  private[graft] def indexKernel(idx: IvfPqIndex): IvfPqKernel =
+    IvfPqKernel(idx.postings, idx.postings, idx.cents, idx.codebook, idx.m,
+      idx.dim, idx.residual, s"index version v=${idx.version}")
+
+  /** THE IVF-PQ kernel (FAISS `IVFx,PQy` semantics) over `postings`
+    * `(vec_id, cell, codes, v, nrm)` — an exported layout's or the
+    * in-memory [[encodePostings]] output — and the quantizers they were
+    * encoded with, centroids `(cell, cv)` and codebook `(s, code, cw)`.
+    * The query row `(v, nrm)` comes from the vector frame `qvecs`
+    * `(vec_id, v, nrm)`; `where` names that frame in the error an absent
+    * id raises. The quantizers are KBs and a query reads nprobe cells,
+    * so the query-sized work runs on the driver:
     *
-    *  1. probe: the query's `nprobe` nearest cells by centroid cosine,
-    *     ties to the lowest cell;
-    *  2. ADC: one table of squared L2 from the query's sub-vectors to
-    *     every codeword — m × nCodes rows joined on (s, code), or with
-    *     `residual` one per probed cell over the query's residual
-    *     against that cell's centroid (nprobe × m × nCodes rows joined on
-    *     (cell, s, code)); broadcast either way. Candidates are the
-    *     probed cells' postings (the query itself excluded), their codes
-    *     exploded and summed through the table;
-    *  3. shortlist: the `shortlist` lowest ADC sums, ROUND(6) with vec_id
-    *     tiebreak;
-    *  4. re-rank: exact cosine of the shortlist against the query,
-    *     ROUND(6) with vec_id tiebreak, top `k`.
+    *  1. probe (driver): the query's `nprobe` nearest cells by centroid
+    *     cosine, ties to the lowest cell;
+    *  2. ADC table (driver): squared L2 from the query's sub-vectors to
+    *     every codeword, m × nCodes entries, or with `residual` one table
+    *     per probed cell over the query's residual against that cell's
+    *     centroid;
+    *  3. shortlist (one scan): the probed cells' postings — a literal
+    *     `cell IN (…)`, so a partitioned scan is pruned when the plan is
+    *     built — the query itself excluded, each row scored with its
+    *     ROUND(6) ADC sum (its codes looked up in the table, passed as a
+    *     literal array) and its ROUND(6) exact cosine; the `shortlist`
+    *     lowest by `(adc_dist, vec_id)`;
+    *  4. re-rank (driver): the top `k` of the shortlist by
+    *     `(cos DESC, vec_id)`.
     *
-    * Returns `(vec_id, cell, adc_dist, cos)`. Both rank boundaries round
-    * before ordering, so the result is deterministic on both engines.
-    * Scale shape: a probe reads nprobe cell partitions of m-int codes
-    * (32× smaller than the float vectors: nprobe = 4 of codes ≈ 1/8 the
-    * bytes of one cell of floats) plus `shortlist` float rows. */
-  private def ivfPqRank(postings: DataFrame, cents: DataFrame,
-                        codebook: DataFrame, m: Int, dim: Int,
-                        residual: Boolean, queryId: Long, k: Int,
-                        nprobe: Int, shortlist: Int): DataFrame = {
-    val q = queries(postings, col("vec_id") === queryId)
-    val probed = centroids(cents)
-      .crossJoin(broadcast(q))
-      .withColumn("qccos",
-        dotFast(col("cv"), col("qv")) / (col("cnrm") * col("qnrm")))
-      .orderBy(col("qccos").desc, col("cell"))
-      .limit(nprobe)
-      .select(col("cell"), col("cv"))
-    val qtab =
-      if (!residual)
-        adcTable(codebook, postings.filter(col("vec_id") === queryId)
-          .select(subVectors(col("v"), m, dim).as(Seq("s", "qvs"))),
-          lit(null).cast("long").as("qcell"))
-      else {
-        val qres = probed.crossJoin(broadcast(q))
-          .select(col("cell").as("qcell"), minus(col("qv"), col("cv")).as("qr"))
-        adcTable(codebook, qres.select(col("qcell"),
-          subVectors(col("qr"), m, dim).as(Seq("s", "qvs"))), col("qcell"))
+    * The driver-side scores use the ascending folds of [[dotArr]] /
+    * [[l2sqArr]] and Spark's double ordering ([[rankDesc]]), so every
+    * score and tie-break is bit-identical to the column forms the DuckDB
+    * oracles replay. A query runs four Spark jobs — the query row, the
+    * two quantizer reads and the shortlist scan — plus whatever
+    * `postings` and `qvecs` cost to compute. The query's id and norm
+    * enter both scans by reference ([[graft.plans.ReferencedLiteral]]),
+    * so every query's scans generate the same code: compiled once, then
+    * served from Spark's codegen cache already JIT-compiled. */
+  private[graft] final case class IvfPqKernel(postings: DataFrame, qvecs: DataFrame,
+                                              cents: DataFrame, codebook: DataFrame,
+                                              m: Int, dim: Int, residual: Boolean,
+                                              where: String) {
+
+    /** Steps 1-3: fetches the query row and the quantizers, and returns
+      * the shortlist scan `(vec_id, cell, adc_dist, cos)`, not yet run. */
+    def shortlist(queryId: Long, nprobe: Int, n: Int): DataFrame = {
+      val q = qvecs.filter(col("vec_id") === refLit(queryId)).select(col("v"), col("nrm"))
+        .collect().headOption.getOrElse(throw new IllegalArgumentException(
+          s"query id $queryId is not in $where"))
+      val (qv, qnrm) = (q.getSeq[Double](0).toArray, q.getDouble(1))
+      require(qv.length == dim,
+        s"vector $queryId has ${qv.length} dims, the index has dim = $dim")
+      val cs = cents.select(col("cell").cast("long"), col("cv")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      val cb = codebook.select(col("s").cast("int"), col("code").cast("int"), col("cw"))
+        .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      val sub = dim / m
+      require(cs.forall(_._2.length == dim) && cb.nonEmpty &&
+        cb.forall { case (s, code, cw) => s >= 0 && s < m && code >= 0 && cw.length == sub },
+        s"quantizers do not fit dim = $dim split into m = $m subspaces")
+      val probed = rankDesc(cs.map { case (cell, cv) =>
+        (cell, cv, dotArr(cv, qv) / (math.sqrt(dotArr(cv, cv)) * qnrm))
+      })(_._3, _._1).take(nprobe)
+      // the ADC table of query (or residual) vector `x`, indexed
+      // s·nCodes + code; a code the codebook lacks is never looked up
+      val nCodes = cb.map(_._2).max + 1
+      def table(x: Array[Double]): Seq[Double] = {
+        val t = Array.fill(m * nCodes)(Double.NaN)
+        for ((s, code, cw) <- cb)
+          t(s * nCodes + code) = l2sqArr(x.slice(s * sub, s * sub + sub), cw)
+        t.toSeq
       }
-    val candCodes = postings.join(broadcast(probed.select("cell")), Seq("cell"))
-      .filter(col("vec_id") =!= queryId)
-      .select(col("vec_id"), col("cell"),
-        posexplode(col("codes")).as(Seq("s", "code")))
-    val joined =
-      if (!residual) candCodes.join(broadcast(qtab), Seq("s", "code"))
-      else candCodes.join(broadcast(qtab),
-        col("cell") === col("qcell") &&
-          candCodes("s") === qtab("s") && candCodes("code") === qtab("code"))
-    val short = joined
-      .groupBy(col("vec_id"), col("cell"))
-      .agg(round(sum(col("qd2")), 6).as("adc_dist"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-      .limit(shortlist)
-    rankTail(short.join(postings.select(col("vec_id"), col("v"), col("nrm")), Seq("vec_id")),
-      q, None, Seq(col("cell"), col("adc_dist")), k)
+      val tab = typedlit(
+        if (!residual) table(qv)
+        else probed.toSeq.flatMap { case (_, cv, _) =>
+          table(qv.zip(cv).map { case (x, c) => x - c })
+        })
+      val cells = probed.map(_._1).toSeq
+      // a residual row's table is its cell's slot among the probed cells
+      val slot =
+        if (!residual) lit(0)
+        else (array_position(typedlit(cells), col("cell")).cast("int") - 1) * (m * nCodes)
+      val adc = (0 until m).foldLeft(lit(0.0)) { (acc, s) =>
+        acc + element_at(tab, slot + col("codes").getItem(s) + (s * nCodes + 1))
+      }
+      postings.filter(col("cell").isin(cells: _*) && col("vec_id") =!= refLit(queryId))
+        .withColumn("qv", typedlit(qv.toSeq)).withColumn("qnrm", refLit(qnrm))
+        .select(col("vec_id"), col("cell"), round(adc, 6).as("adc_dist"), qcos.as("cos"))
+        .orderBy(col("adc_dist"), col("vec_id"))
+        .limit(n)
+    }
+
+    /** Steps 1-4, run when called: the top `k` `(vec_id, cell, adc_dist,
+      * cos)` as a local frame. */
+    def topK(queryId: Long, k: Int, nprobe: Int, shortlist: Int): DataFrame = {
+      val short = this.shortlist(queryId, nprobe, shortlist)
+      val top = rankDesc(short.collect())(_.getDouble(3), _.getLong(0)).take(k)
+      short.sparkSession.createDataFrame(java.util.Arrays.asList(top: _*), short.schema)
+    }
   }
 
   /** A selected center `(c_id, cv, cnrm)` from a vector frame's row. */

@@ -2,9 +2,11 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, LeafExpression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StructField, StructType}
 
@@ -287,7 +289,39 @@ case class NoPushdown(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** A LONG or DOUBLE constant that generated code reads from the plan's
+  * reference array instead of spelling it out. Spark writes a primitive
+  * `Literal` into the generated source, so plans that differ only in
+  * such a value (a query id, a query norm) each compile to a new class:
+  * a Janino compile per plan, and a class the JIT has never run, so its
+  * row loop starts interpreted every time. Held by reference, the source
+  * is the same for every value: the codegen cache serves every plan
+  * after the first, and the class it serves is already compiled. Not
+  * foldable, so constant folding cannot turn it back into a `Literal`;
+  * not a `Literal`, so it is never pushed into a data source scan. */
+case class ReferencedLiteral(value: Any, dataType: DataType) extends LeafExpression {
+  require(dataType == LongType || dataType == DoubleType,
+    s"graft_ref_literal holds a LONG or DOUBLE, got ${dataType.sql}")
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def prettyName: String = "graft_ref_literal"
+  override def toString: String = s"$prettyName($value)"
+  override def eval(input: InternalRow): Any = value
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val javaType = CodeGenerator.javaType(dataType)
+    val ref = ctx.addReferenceObj("refLiteral", value, CodeGenerator.boxedType(dataType))
+    ev.copy(code = code"final $javaType ${ev.value} = $ref.${javaType}Value();",
+      isNull = FalseLiteral)
+  }
+}
+
 object VectorExpressions {
+  /** Column-level wrappers for [[ReferencedLiteral]]. */
+  def refLit(v: Long): Column =
+    ColumnBridge.column(ReferencedLiteral(v, LongType))
+  def refLit(v: Double): Column =
+    ColumnBridge.column(ReferencedLiteral(v, DoubleType))
+
   /** Column-level wrapper for [[NoPushdown]]. */
   def noPush(c: Column): Column =
     ColumnBridge.column(NoPushdown(ColumnBridge.expression(c)))

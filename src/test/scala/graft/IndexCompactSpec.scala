@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
@@ -9,8 +11,8 @@ import graft.operators.Similarity
   * version, and prove (1) compacted layout ≡ from-scratch rebuild over
   * the merged corpus, (2) the query replay is identical on both, (3)
   * readers of v=N are untouched mid-compaction (version immutability),
-  * (4) delta-wins upsert semantics on vec_id collision, (5) dynamic
-  * partition pruning still fires on the compacted postings scan, (6) a
+  * (4) delta-wins upsert semantics on vec_id collision, (5) the serving
+  * query's postings scan reads only the probed cells' partitions, (6) a
   * committed version is never compacted into again, and (7) quantizer or
   * batch geometry that does not match the index fails instead of
   * committing garbage codes. (1) and (2) run for both encodings. */
@@ -238,6 +240,44 @@ class IndexCompactSpec extends SparkSpec {
     sources.Artifacts.deleteRecursively(new java.io.File(dir))
   }
 
+  test("delta-wins applies to the query row: an updated id queries with its new vector") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_ov_q").toString
+    val (cents, cb) = quantizers(emb)
+    Similarity.writeIvfPqIndex(emb, cents, cb, dir, version = 1)
+    val v20 = emb.filter(col("vec_id") === 20).select(col("embedding")).collect()(0)
+      .getSeq[Float](0).toArray
+    val s = spark; import s.implicits._
+    Similarity.appendIvfPqDelta(batchOf(emb), dir, version = 1)
+    Similarity.appendIvfPqDelta(Seq((33L, v20)).toDF("vec_id", "embedding"),
+      dir, version = 1)
+    def query33(idx: Similarity.IvfPqIndex) =
+      Similarity.ivfPqTopKFromIndex(idx, queryId = 33, k = 10, nprobe = 4, shortlist = 50)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSeq
+    val overlay = query33(Similarity.readIvfPqIndexWithDelta(spark, dir, version = 1))
+    Similarity.compactIvfPqIndex(spark, dir, fromVersion = 1)
+    assert(overlay == query33(Similarity.readIvfPqIndex(spark, dir, 2)),
+      "the overlay query must rank 33's delta vector, as compacted v=2 does")
+    // 33 now carries 20's vector, so 20 is its exact twin
+    assert(overlay.head._1 == 20L && overlay.head._4 == 1.0, overlay.toString)
+    sources.Artifacts.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("a manifest written before the residual column existed opens as raw") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_oldmf").toString
+    val (cents, cb) = quantizers(emb)
+    Similarity.writeIvfPqIndex(emb, cents, cb, dir, version = 1)
+    val raw = replayRows(dir, 1)
+    val idx = Similarity.readIvfPqIndex(spark, dir, 1)
+    val s = spark; import s.implicits._
+    Seq((1, idx.dim, idx.m, idx.nCodes, idx.nCells, idx.nVectors))
+      .toDF("version", "dim", "m", "n_codes", "n_cells", "n_vectors")
+      .coalesce(1).write.mode("overwrite").parquet(s"$dir/v=1/manifest")
+    val old = Similarity.readIvfPqIndex(spark, dir, 1)
+    assert(!old.residual && old.nVectors == idx.nVectors)
+    assert(replayRows(dir, 1) == raw)
+    sources.Artifacts.deleteRecursively(new java.io.File(dir))
+  }
+
   test("overlay read without a committed delta is the plain versioned read") {
     val dir = java.nio.file.Files.createTempDirectory("graft_idx_ov_nd").toString
     val (cents, cb) = quantizers(emb)
@@ -249,19 +289,34 @@ class IndexCompactSpec extends SparkSpec {
     sources.Artifacts.deleteRecursively(new java.io.File(dir))
   }
 
+  /** `number of partitions read` by each postings scan of the serving
+    * shortlist for query 20 at nprobe 4, after it ran, keyed by the
+    * scanned directory's name (`postings` or `delta`). */
+  private def partitionsRead(idx: Similarity.IvfPqIndex): Seq[(String, Long)] = {
+    val short = Similarity.indexKernel(idx).shortlist(queryId = 20, nprobe = 4, n = 50)
+    short.collect()
+    val plan = short.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    plan.collect { case scan: FileSourceScanExec =>
+      scan.relation.location.rootPaths.head.getName -> scan.metrics("numPartitions").value
+    }
+  }
+
   test("DPP: the unioned base ∪ delta postings scan is partition-pruned by the probe") {
     val dir = java.nio.file.Files.createTempDirectory("graft_idx_ov_dpp").toString
     val (cents, cb) = quantizers(emb)
     Similarity.writeIvfPqIndex(emb, cents, cb, dir, version = 1)
     Similarity.appendIvfPqDelta(batchOf(emb), dir, version = 1)
-    val q = Similarity.ivfPqTopKFromIndex(
-      Similarity.readIvfPqIndexWithDelta(spark, dir, 1),
-      queryId = 20, k = 10, nprobe = 4, shortlist = 50)
-    q.collect() // executed plan — DPP subqueries only show post-execution
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning"),
-      "the nprobe probe must dynamically prune the corpus-sized base branch " +
-        "of the unioned postings scan")
+    // the probe's cells are a literal filter, so both branches of the
+    // union are pruned when the plan is built
+    val read = partitionsRead(Similarity.readIvfPqIndexWithDelta(spark, dir, 1))
+    assert(read.collect { case ("postings", n) => n } == Seq(4L),
+      s"the corpus-sized base branch must read exactly the nprobe cells: $read")
+    val delta = read.collect { case ("delta", n) => n }
+    assert(delta.length == 1 && delta.head <= 4,
+      s"the delta branch must read at most the nprobe cells: $read")
     sources.Artifacts.deleteRecursively(new java.io.File(dir))
   }
 
@@ -271,13 +326,9 @@ class IndexCompactSpec extends SparkSpec {
     Similarity.writeIvfPqIndex(emb, cents, cb, dir, version = 1)
     Similarity.appendIvfPqDelta(batchOf(emb), dir, version = 1)
     Similarity.compactIvfPqIndex(spark, dir, fromVersion = 1)
-    val q = Similarity.ivfPqTopKFromIndex(
-      Similarity.readIvfPqIndex(spark, dir, 2),
-      queryId = 20, k = 10, nprobe = 4, shortlist = 50)
-    q.collect() // executed plan — DPP subqueries only show post-execution
-    val plan = q.queryExecution.executedPlan.toString
-    assert(plan.contains("dynamicpruning"),
-      "the nprobe probe must dynamically prune the compacted cell partitions")
+    val read = partitionsRead(Similarity.readIvfPqIndex(spark, dir, 2))
+    assert(read == Seq("postings" -> 4L),
+      s"the compacted postings scan must read exactly the nprobe cells: $read")
     sources.Artifacts.deleteRecursively(new java.io.File(dir))
   }
 }

@@ -900,6 +900,84 @@ class SimilaritySpec extends SparkSpec {
     sources.Artifacts.deleteRecursively(new java.io.File(rawDir))
   }
 
+  test("IVF-PQ top-k: a query id that is not indexed fails naming the id, on every path") {
+    // an absent query row used to empty the probe and everything after
+    // it: 0 rows and no error
+    val emb = Tables.embeddings(spark, sf0001)
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_q").toString
+    val (cents, cb) = (Similarity.deterministicCentroids(emb, nCells = 16),
+      Similarity.deterministicCodebook(emb, nCodes = 16))
+    Similarity.writeIvfPqIndex(emb, cents, cb, dir, version = 4)
+    val absent = 987654321L
+    val fromIndex = intercept[IllegalArgumentException](Similarity.ivfPqTopKFromIndex(
+      Similarity.readIvfPqIndex(spark, dir, 4), absent, k = 10).collect())
+    assert(fromIndex.getMessage.contains(s"$absent") &&
+      fromIndex.getMessage.contains("v=4"), fromIndex.getMessage)
+    for (call <- Seq[() => Any](
+        () => Similarity.ivfPqTopK(emb, absent, k = 10).collect(),
+        () => Similarity.ivfPqTopK(emb, absent, k = 10, residual = true).collect(),
+        () => Similarity.ivfPqTopKWith(emb, cents, cb, absent, k = 10).collect())) {
+      val err = intercept[IllegalArgumentException](call())
+      assert(err.getMessage.contains(s"$absent"), err.getMessage)
+    }
+    sources.Artifacts.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("IVF-PQ serving query: at most 5 Spark jobs on a compacted index, 6 with a delta") {
+    // open + top-10, as a serving call runs them: the manifest read,
+    // the query row, the two quantizer reads and the one shortlist scan
+    // (a committed delta adds the read of its vec_id set)
+    val emb = Tables.embeddings(spark, sf0001)
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_jobs").toString
+    Similarity.writeIvfPqIndex(emb, Similarity.deterministicCentroids(emb, nCells = 16),
+      Similarity.deterministicCodebook(emb, nCodes = 16), dir, version = 1)
+    Similarity.appendIvfPqDelta(emb.filter(col("vec_id") % 17 === 0)
+      .select((col("vec_id") + 2000000L).as("vec_id"), col("embedding")), dir, version = 1)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(version: Int): Int = {
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      jobs.set(0)
+      val rows = Similarity.ivfPqTopKFromIndex(
+        Similarity.readIvfPqIndexWithDelta(spark, dir, version),
+        queryId = 20, k = 10, nprobe = 4, shortlist = 50).collect()
+      assert(rows.length == 10)
+      org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+      jobs.get()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val withDelta = jobsOf(1)
+      assert(withDelta <= 6, s"$withDelta jobs over base + delta")
+      Similarity.compactIvfPqIndex(spark, dir, fromVersion = 1)
+      val compacted = jobsOf(2)
+      assert(compacted <= 5, s"$compacted jobs over the compacted index")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    sources.Artifacts.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("IVF-PQ serving query: a query for another id compiles no new code") {
+    // the query id and norm enter the scans by reference, so after one
+    // query every other id is served from the codegen cache
+    val emb = Tables.embeddings(spark, sf0001)
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_codegen").toString
+    Similarity.writeIvfPqIndex(emb, Similarity.deterministicCentroids(emb, nCells = 16),
+      Similarity.deterministicCodebook(emb, nCodes = 16), dir, version = 1)
+    def top(id: Long): Seq[Long] = Similarity.ivfPqTopKFromIndex(
+      Similarity.readIvfPqIndex(spark, dir, 1), queryId = id, k = 10, nprobe = 4,
+      shortlist = 50).collect().map(_.getLong(0)).toSeq
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    assert(top(20).length == 10)
+    val before = compiles.getCount
+    val later = Seq(21L, 33L, 47L).map(top)
+    assert(compiles.getCount == before, s"${compiles.getCount - before} new compiles")
+    assert(later.forall(_.length == 10) && later.distinct.length == 3)
+    sources.Artifacts.deleteRecursively(new java.io.File(dir))
+  }
+
   test("kCenterCoreset: hand-computed greedy picks on 3 planar vectors") {
     // v1=(1,0) seed (lowest id). v2=(0,1): d=1 (orthogonal) — farthest,
     // picked second with radius 1. v3=(1,1): d=1−1/√2≈0.292893 to both
