@@ -18,7 +18,9 @@ import graft.sources.Artifacts
   *   F5/F7/A3 scoring+normalize → inside [[Sentiment.score]] +
   *   [[Analytics.normalizeScores]];
   *   A4 trends → [[Analytics.dailyTrends]];
-  *   V1-V3 representatives → [[ml.Representatives.representatives]];
+  *   V1-V3 representatives → [[ml.Representatives.representatives]]
+  *   (eager: one Spark job collects the classes, the fit runs on the
+  *   driver, the result is a local frame);
   *   A6 stats + F11 risk → [[Analytics.confidenceStats]] /
   *   [[Risk.insuranceRisk]];
   *   L1 summary prompts → [[Serving.summaryPrompts]];
@@ -40,7 +42,8 @@ object Pipeline {
       summaryPrompts: DataFrame)
 
   /** Runs the full analysis over a documents+events directory. `scored`
-    * is cached: five downstream branches reuse it. */
+    * is cached: five downstream branches reuse it. Every field is lazy
+    * except `representatives`, whose one collect also fills the cache. */
   def analyze(spark: SparkSession, dir: String, withRepresentatives: Boolean = true): Results = {
     val scored = Analytics.normalizeScores(
       Sentiment.score(Tables.documents(spark, dir))).persist()

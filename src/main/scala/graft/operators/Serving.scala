@@ -105,9 +105,10 @@ object Serving {
     *    confidence per class. The oracle-replayable representative here
     *    is the comment whose confidence is NEAREST THE CLASS MEAN
     *    (ties → lower doc_id) — "closest to the class centroid" in the
-    *    one dimension DuckDB can replay bit-for-bit; the TF-IDF/KMeans
-    *    V3 selection ([[graft.ml.Representatives]]) stays the library
-    *    surface with its own rows-only entry. Text truncated at 300 +
+    *    one dimension DuckDB can replay bit-for-bit; the TF-IDF +
+    *    k-means V3 selection ([[graft.ml.Representatives]], a seeded
+    *    k-means++ fit DuckDB cannot replay) stays the library surface
+    *    with its own rows-only entry. Text truncated at 300 +
     *    "..." (`:307-309`, F9);
     *  - 7 highest confidence (`:321-366`): per-class argmax-confidence
     *    comment (ties → lower doc_id = pandas idxmax-first), trunc 300;

@@ -962,9 +962,9 @@ object Similarity {
     * candidates; the pairwise-cosine frame is a broadcast self-join of
     * the O(poolSize) pool (poolSize² tiny rows); the sequential greedy
     * itself is inherently ordered and runs on the DRIVER over the
-    * collected O(poolSize) pool — the [[Representatives]] posture:
-    * collect k·dozens of rows, never corpus data. Selection compares
-    * UNROUNDED scores built from the ROUND(6)-published cos values
+    * collected O(poolSize) pool: collect k·dozens of rows, never corpus
+    * data. Selection compares UNROUNDED scores built from the
+    * ROUND(6)-published cos values
     * (identical inputs + identical IEEE ops on both engines), id
     * tiebreak; `1 − λ` is computed by the same floating subtraction the
     * oracle uses, so the weights match bit-for-bit. Returns

@@ -736,7 +736,7 @@ object TextAnalysis {
     * filtered to the query terms — never a full term explosion — with
     * broadcast df/stats); the expansion stage touches ONLY the
     * O(fbDocs) feedback rows and collects O(expand) terms to the driver
-    * (a scalar probe, the [[graft.ml.Representatives]] posture). Term
+    * (a scalar probe). Term
     * weights ROUND(6)-published before the (weight desc, term) selection
     * so the expansion set is engine-deterministic. */
   def bm25ExpandedTopK(df: DataFrame, textCol: String, idCol: String,

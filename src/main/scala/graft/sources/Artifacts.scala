@@ -10,9 +10,11 @@ import org.apache.spark.sql.functions._
   */
 object Artifacts {
 
-  /** S7: per-sentiment comment JSON + trends JSON with the nested summary
-    * struct (ref `Context_analyzer_RoBERTa_fun.py:732-738,796-812`) +
-    * performance summary (ref `vizualization.py:308-324`). */
+  /** S7: per-sentiment comment JSON (`comments/sentiment=…`) + one trends
+    * JSON document with the nested summary struct (`sentiment_trends`)
+    * (ref `Context_analyzer_RoBERTa_fun.py:732-738,796-812`). The
+    * reference's performance summary (`vizualization.py:308-324`) is not
+    * written. */
   def writeJsonArtifacts(scored: DataFrame, trends: DataFrame, outDir: String): Unit = {
     scored
       .select("doc_id", "text", "sentiment", "confidence", "original_score")

@@ -14,7 +14,7 @@ class EntrySpec extends SparkSpec {
   }
 
   test("every query runs, returns rows, and releases its caches on sf0.001") {
-    val slow = Set("v3_representatives", "dd_minhash_neardup") // covered by their own specs
+    val slow = Set("dd_minhash_neardup") // covered by its own spec
     // Streaming-ingest entries own persisted snapshot state across
     // micro-batches by design — the cache-balance contract is scoped to
     // batch operators (the Verify/Bench harnesses clearCache per query).
