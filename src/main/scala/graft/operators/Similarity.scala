@@ -1333,36 +1333,26 @@ object Similarity {
     * Scale shape: train on `sampleFraction` of the corpus (k-means
     * centroids stabilize on a sample long before the full pass — FAISS
     * trains IVF coarse quantizers on ~256 vectors/centroid); the fit is
-    * a handful of Lloyd passes over the sample, the result is an
-    * O(nCells) table persisted once per (re)train and broadcast at query
-    * time. Zero vectors carry no direction and are excluded from
+    * a handful of Lloyd passes over the [[trainingSample]], the result is
+    * an O(nCells) table persisted once per (re)train and broadcast at
+    * query time. Zero vectors carry no direction and are excluded from
     * training (cosine k-means requires non-zero points); they still
-    * assign downstream by the shared tie convention. */
+    * assign downstream by the shared tie convention. A sample with fewer
+    * than `nCells` non-zero vectors fails with an
+    * `IllegalArgumentException`. */
   def trainCentroids(emb: DataFrame, nCells: Int, seed: Long = 42,
                      sampleFraction: Double = 1.0,
                      maxIter: Int = 20): DataFrame = {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val base = emb
-      .select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-      .filter(normFast(col("v")) > 0.0)
-    val sampled =
-      if (sampleFraction >= 1.0) base
-      else base.sample(withReplacement = false, sampleFraction, seed)
-    // The training sample is SAMPLE-sized by contract (FAISS trains IVF
-    // coarse quantizers on ~256 vectors/centroid), so it fits one
-    // partition; sorting + coalesce(1) pins the k-means|| init's
-    // per-partition sampling to a fixed row order — the fit becomes
-    // deterministic in (data, seed) alone, independent of the session's
-    // core count / input split. Without this, the same corpus trains
-    // different centroids under local[4] vs local[32], and a
-    // hash-gated catalog entry downstream would flap.
-    val feats = sampled.sort("vec_id").coalesce(1)
-      .select(array_to_vector(col("v")).as("features"))
+    val sample = trainingSample(
+      emb.select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
+        .filter(normFast(col("v")) > 0.0),
+      sampleFraction, seed, nCells, "nCells")
     val model = new KMeans()
       .setK(nCells).setSeed(seed).setMaxIter(maxIter)
       .setDistanceMeasure("cosine").setFeaturesCol("features")
-      .fit(feats)
+      .fit(sample.select(array_to_vector(col("v")).as("features")))
     val spark = emb.sparkSession
     import spark.implicits._
     model.clusterCenters.toSeq.zipWithIndex
@@ -1373,10 +1363,8 @@ object Similarity {
   /** Fitted per-subspace PQ codebooks (Jégou 2011 §III: an independent
     * k-means per subspace over the sub-vectors, Euclidean — the metric
     * ADC sums): `m` fits of `nCodes` codewords each over `dim/m`-dim
-    * slices. Returns `(s INT, code INT, cw ARRAY<DOUBLE>)`. The driver
-    * loop is over SUBSPACES (m ≈ 8-16, the BPE-argmax scalar-probe
-    * precedent), never over data; each fit reads the sampled slice
-    * column only. */
+    * slices of the [[trainingSample]], by [[fitSubspaces]]. Returns
+    * `(s INT, code INT, cw ARRAY<DOUBLE>)`. */
   def trainCodebook(emb: DataFrame, m: Int = 8, nCodes: Int = 16,
                     dim: Int = 64, seed: Long = 42,
                     sampleFraction: Double = 1.0,
@@ -1389,7 +1377,8 @@ object Similarity {
     * the shared cosine-argmax convention against `centsIn`. Residuals
     * cluster tighter than raw vectors, so the same codebook budget
     * resolves finer; pair with `annRecallIvfPqWith(..., residual=true)`.
-    * Same fit as [[trainCodebook]], over the residuals. */
+    * Same fit as [[trainCodebook]] ([[fitSubspaces]]), over the
+    * residuals, which the sample's one collect computes. */
   def trainCodebookResidual(emb: DataFrame, centsIn: DataFrame, m: Int = 8,
                             nCodes: Int = 16, dim: Int = 64, seed: Long = 42,
                             sampleFraction: Double = 1.0,
@@ -1399,35 +1388,57 @@ object Similarity {
       m, nCodes, dim, seed, sampleFraction, maxIter)
   }
 
-  /** The per-subspace k-means loop of [[trainCodebook]] and
+  /** The per-subspace MLlib KMeans loop of [[trainCodebook]] and
     * [[trainCodebookResidual]] over `(vec_id, ev)`: subspace `s` fits
-    * with seed `seed + s`. The sample is sorted and held in ONE
-    * partition (the [[trainCentroids]] determinism convention: the fit
-    * depends on (data, seed) alone, not on the core count or input
-    * split) and persisted, since all `m` fits read it. */
+    * with seed `seed + s`, all `m` fits over the one local
+    * [[trainingSample]]. The driver loop is over SUBSPACES (m ≈ 8-16,
+    * the BPE-argmax scalar-probe precedent), never over data. A sample
+    * with fewer than `nCodes` vectors fails with an
+    * `IllegalArgumentException`. */
   private def fitSubspaces(vecs: DataFrame, m: Int, nCodes: Int, dim: Int,
                            seed: Long, sampleFraction: Double,
                            maxIter: Int): DataFrame = {
     require(dim % m == 0, "m must divide dim")
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
-    val sampled =
-      if (sampleFraction >= 1.0) vecs
-      else vecs.sample(withReplacement = false, sampleFraction, seed)
-    val flat = sampled.sort("vec_id").coalesce(1).persist()
-    try {
-      val spark = vecs.sparkSession
-      import spark.implicits._
-      (0 until m).flatMap { s =>
-        val model = new KMeans()
-          .setK(nCodes).setSeed(seed + s).setMaxIter(maxIter)
-          .setFeaturesCol("features")
-          .fit(flat.select(
-            array_to_vector(subVector(col("ev"), s, m, dim)).as("features")))
-        model.clusterCenters.toSeq.zipWithIndex
-          .map { case (c, i) => (s, i, c.toArray.toSeq) }
-      }.toDF("s", "code", "cw")
-    } finally flat.unpersist()
+    val sample = trainingSample(vecs, sampleFraction, seed, nCodes, "nCodes")
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    (0 until m).flatMap { s =>
+      val model = new KMeans()
+        .setK(nCodes).setSeed(seed + s).setMaxIter(maxIter)
+        .setFeaturesCol("features")
+        .fit(sample.select(
+          array_to_vector(subVector(col("ev"), s, m, dim)).as("features")))
+      model.clusterCenters.toSeq.zipWithIndex
+        .map { case (c, i) => (s, i, c.toArray.toSeq) }
+    }.toDF("s", "code", "cw")
+  }
+
+  /** The training sample of the `(vec_id LONG, vector)` frame `e`,
+    * collected in one Spark job and returned as a local single-partition
+    * frame ordered by `vec_id` (a key). Below `fraction` 1 a row is kept
+    * when `xxhash64(vec_id, seed)` falls in the lowest `fraction` of the
+    * hash range: the choice rides on the row's key, where
+    * `Dataset.sample` seeds each partition's sampler apart. So the
+    * sample, and the k-means|| init's per-partition sampling over it,
+    * depend on (data, seed) alone, never on the core count or input
+    * split; without this the same corpus trains different quantizers
+    * under local[4] and local[32], and a hash-gated catalog entry
+    * downstream flaps. The sample is SAMPLE-sized by contract (FAISS
+    * trains IVF coarse quantizers on ~256 vectors/centroid). A sample
+    * smaller than `k` fails up front, naming both: MLlib would return
+    * fewer than `k` centres. */
+  private def trainingSample(e: DataFrame, fraction: Double, seed: Long,
+                             k: Int, kName: String): DataFrame = {
+    val kept =
+      if (fraction >= 1.0) e
+      else e.filter(shiftrightunsigned(xxhash64(col("vec_id"), lit(seed)), 11) <
+        lit(fraction * (1L << 53)))
+    val rows = kept.collect().sortBy(_.getLong(0))
+    require(rows.length >= k,
+      s"the training sample holds ${rows.length} vectors, fewer than $kName = $k")
+    e.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), e.schema).coalesce(1)
   }
 
   /** [[ivfTopK]] with caller-supplied centroids `(cell, cv)` — the

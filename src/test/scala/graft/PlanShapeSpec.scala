@@ -385,17 +385,20 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("trained quantizer fits are layout-deterministic (re-train == re-train)") {
+    // the same corpus under another split or partition count trains the
+    // same quantizers, on the full corpus and on a sample
     val emb = Tables.embeddings(spark, sf0001)
-    val c1 = graft.operators.Similarity.trainCentroids(emb, nCells = 16)
-      .collect().map(_.toSeq).toSet
-    val c2 = graft.operators.Similarity.trainCentroids(emb, nCells = 16)
-      .collect().map(_.toSeq).toSet
-    assert(c1 == c2, "trainCentroids is not deterministic across calls")
-    val b1 = graft.operators.Similarity.trainCodebook(emb, m = 8, nCodes = 16)
-      .collect().map(_.toSeq).toSet
-    val b2 = graft.operators.Similarity.trainCodebook(emb, m = 8, nCodes = 16)
-      .collect().map(_.toSeq).toSet
-    assert(b1 == b2, "trainCodebook is not deterministic across calls")
+    val layouts = Seq(emb, emb, emb.repartition(7), emb.coalesce(1))
+    for (f <- Seq(1.0, 0.5)) {
+      val cents = layouts.map(e => graft.operators.Similarity
+        .trainCentroids(e, nCells = 16, sampleFraction = f).collect().map(_.toSeq).toSet)
+      assert(cents.distinct.length == 1,
+        s"trainCentroids at sampleFraction $f depends on the partition layout")
+      val books = layouts.map(e => graft.operators.Similarity
+        .trainCodebook(e, m = 8, nCodes = 16, sampleFraction = f).collect().map(_.toSeq).toSet)
+      assert(books.distinct.length == 1,
+        s"trainCodebook at sampleFraction $f depends on the partition layout")
+    }
   }
 
   test("v4_attn_scores: the model-seam scan prunes to (doc_id, text) only") {

@@ -584,6 +584,18 @@ class SimilaritySpec extends SparkSpec {
       s"trained avg $avgT vs deterministic $avgD — training stopped paying")
   }
 
+  test("quantizer fits reject a training sample smaller than k") {
+    val emb = Tables.embeddings(spark, sf0001).filter(col("vec_id") < 5)
+    def rejects(fit: => Any, k: String): Unit = {
+      val e = intercept[IllegalArgumentException](fit)
+      assert(e.getMessage.contains("5 vectors") && e.getMessage.contains(k), e.getMessage)
+    }
+    rejects(Similarity.trainCentroids(emb, nCells = 8), "nCells = 8")
+    rejects(Similarity.trainCodebook(emb, m = 2, nCodes = 16), "nCodes = 16")
+    rejects(Similarity.trainCodebookResidual(emb,
+      Similarity.deterministicCentroids(emb, nCells = 2), m = 2, nCodes = 16), "nCodes = 16")
+  }
+
   test("trained IVF-PQ reaches recall@10 >= 0.8 per query at 1.5x the scan budget") {
     // the 0.8 bar, met where the data permits it: probing 24 of 64 cells
     // (37.5% of code bytes vs the deterministic entry's 25%) — the
