@@ -27,6 +27,15 @@ import graft.sources.Artifacts
   *   L3 context assembly → [[Serving.chatContext]];
   *   EP2 results document → [[Serving.resultsDocument]];
   *   S7/S8 sinks → [[Artifacts]].
+  *
+  * Where the figures are computed: the per-class counts, means and
+  * highest-confidence reviews of the context, the results document and
+  * the report come from one aggregation, [[Analytics.classSummary]]; the
+  * corpus-wide counts and confidence figures of the stats and the risk
+  * are [[Analytics.Corpus]]'s aggregate columns; the trends array of the
+  * results document and of the trends artifact is
+  * [[Analytics.trendsArray]]. Each output still plans its own
+  * aggregation: nothing is materialized once per job.
   */
 object Pipeline {
 

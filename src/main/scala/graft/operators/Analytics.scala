@@ -22,9 +22,62 @@ import org.apache.spark.sql.functions._
   */
 object Analytics {
 
+  /** The sentiment classes, in the order the reference's documents list them. */
+  val SentimentClasses: Seq[String] = Seq("POSITIVE", "NEGATIVE", "NEUTRAL")
+
+  /** Per-class summary of the scored reviews — the one aggregation every
+    * per-class figure of the review job is read from: one row per
+    * sentiment with `cnt`, `best` and `mean`.
+    *  - `best` is the highest-confidence review `(doc_id, confidence,
+    *    text)`, ties going to the lower doc_id (pandas idxmax-first;
+    *    ref `pdf_generation/pdf_sections.py:354-355`);
+    *  - `mean` is the class's unrounded mean confidence.
+    *
+    * `max_by` over a lexicographic struct key is a declarative aggregate
+    * with map-side partial: one candidate row per (task, class) shuffles,
+    * where a `row_number` window would sort every fact row into |classes|
+    * tasks. Readers project what they need and the optimizer prunes the
+    * other aggregates from their plans; [[classField]] and [[classCount]]
+    * pivot one class out of it. */
+  def classSummary(scored: DataFrame): DataFrame =
+    scored.groupBy("sentiment").agg(
+      count(lit(1)).as("cnt"),
+      max_by(struct(col("doc_id"), col("confidence"), col("text")),
+        struct(col("confidence"), (-col("doc_id")).as("neg_id"))).as("best"),
+      avg(col("confidence")).as("mean"))
+
+  /** Class `cls`'s `field`, as an aggregate over a [[classSummary]] frame:
+    * NULL when the class is absent. */
+  def classField(cls: String, field: Column): Column =
+    max(when(col("sentiment") === cls, field))
+
+  /** Class `cls`'s review count, as an aggregate over a [[classSummary]]
+    * frame: 0 when the class is absent. */
+  def classCount(cls: String): Column = coalesce(classField(cls, col("cnt")), lit(0L))
+
+  /** All reviews, as an aggregate over a [[classSummary]] frame: 0 for an
+    * empty input (the reference's empty-results document), not NULL. */
+  val classTotal: Column = coalesce(sum(col("cnt")), lit(0L))
+
+  /** Unrounded corpus-wide aggregates of the scored reviews: the single-row
+    * outputs ([[confidenceStats]], [[performanceSummary]],
+    * [[Risk.insuranceRisk]]) select and round these instead of restating
+    * them. Class counts are conditional sums, so NULL on an empty input;
+    * `stdConfidence` is the sample stddev, pandas `std` (ddof=1). */
+  object Corpus {
+    val total: Column = count(lit(1))
+    def classCount(cls: String): Column =
+      sum(when(col("sentiment") === cls, 1L).otherwise(0L))
+    val avgConfidence: Column = avg(col("confidence"))
+    val stdConfidence: Column = stddev_samp(col("confidence"))
+    val minConfidence: Column = min(col("confidence"))
+    val maxConfidence: Column = max(col("confidence"))
+    val avgOriginalScore: Column = avg(col("original_score"))
+  }
+
   /** A1 sentiment distribution (ref `Context_analyzer_RoBERTa_fun.py:724-728`). */
   def sentimentDistribution(scored: DataFrame): DataFrame =
-    scored.groupBy("sentiment").agg(count(lit(1)).as("cnt")).orderBy("sentiment")
+    classSummary(scored).select("sentiment", "cnt").orderBy("sentiment")
 
   /** A2/A12 distribution + percent-of-total (ref `:590-595`;
     * `chatbot_analyzer.py:140-153`). The window sum runs over the
@@ -86,6 +139,14 @@ object Analytics {
         col("positive"), col("negative"), col("neutral"), col("total"))
       .orderBy("date")
 
+  /** The A4 trends frame as one date-ascending array of its day rows (the
+    * `trends` field of the results document and of the trends artifact).
+    * `sort_array` fixes the order: `collect_list` keeps whatever order the
+    * rows arrive in after a shuffle. */
+  def trendsArray(trends: DataFrame): DataFrame =
+    trends.agg(sort_array(collect_list(struct(col("date"), col("positive"),
+      col("negative"), col("neutral"), col("total")))).as("trends"))
+
   /** A5 trends grand summary (ref `:798-811`): single row. */
   def trendsSummary(trends: DataFrame): DataFrame =
     trends.agg(
@@ -105,18 +166,22 @@ object Analytics {
         .as("sentiment_ratio"))
       .orderBy("date")
 
+  /** Reviews meeting `candidateCol`, as an aggregate. */
+  private def candidates(candidateCol: Column): Column =
+    sum(when(candidateCol, 1L).otherwise(0L))
+
   /** A6 confidence/score statistics (ref `vizualization.py:308-324`).
-    * pandas `std` is sample stddev (ddof=1) → `stddev_samp`. Averages of
-    * doubles are rounded: their partial-sum order differs per engine. */
+    * Averages and the stddev are rounded: their partial-sum order differs
+    * per engine. */
   def confidenceStats(scored: DataFrame, candidateCol: Column): DataFrame =
     scored.agg(
-      count(lit(1)).as("total_samples"),
-      round(avg(col("confidence")), 6).as("avg_confidence"),
-      round(stddev_samp(col("confidence")), 6).as("std_confidence"),
-      min(col("confidence")).as("min_confidence"),
-      max(col("confidence")).as("max_confidence"),
-      round(avg(col("original_score")), 6).as("avg_original_score"),
-      sum(when(candidateCol, 1L).otherwise(0L)).as("candidates_count"))
+      Corpus.total.as("total_samples"),
+      round(Corpus.avgConfidence, 6).as("avg_confidence"),
+      round(Corpus.stdConfidence, 6).as("std_confidence"),
+      Corpus.minConfidence.as("min_confidence"),
+      Corpus.maxConfidence.as("max_confidence"),
+      round(Corpus.avgOriginalScore, 6).as("avg_original_score"),
+      candidates(candidateCol).as("candidates_count"))
 
   /** A6 nested-output parity: the reference's `performance_summary.json`
     * document (ref `vizualization.py:308-324`) minus the wall-clock
@@ -124,22 +189,19 @@ object Analytics {
     * reference's sub-object shape. */
   def performanceSummary(scored: DataFrame, candidateCol: Column): DataFrame =
     scored.agg(
-      count(lit(1)).as("total_samples"),
-      struct(
-        sum(when(col("sentiment") === "POSITIVE", 1L).otherwise(0L)).as("POSITIVE"),
-        sum(when(col("sentiment") === "NEGATIVE", 1L).otherwise(0L)).as("NEGATIVE"),
-        sum(when(col("sentiment") === "NEUTRAL", 1L).otherwise(0L)).as("NEUTRAL"))
+      Corpus.total.as("total_samples"),
+      struct(SentimentClasses.map(c => Corpus.classCount(c).as(c)): _*)
         .as("sentiment_distribution"),
       struct(
-        round(avg(col("original_score")), 6).as("avg_original_score"),
-        round(avg(col("confidence")), 6).as("avg_sentiment_confidence"),
-        sum(when(candidateCol, 1L).otherwise(0L)).as("candidates_count"))
+        round(Corpus.avgOriginalScore, 6).as("avg_original_score"),
+        round(Corpus.avgConfidence, 6).as("avg_sentiment_confidence"),
+        candidates(candidateCol).as("candidates_count"))
         .as("score_distribution"),
       struct(
-        round(avg(col("confidence")), 6).as("mean"),
-        round(stddev_samp(col("confidence")), 6).as("std"),
-        min(col("confidence")).as("min"),
-        max(col("confidence")).as("max")).as("confidence_stats"))
+        round(Corpus.avgConfidence, 6).as("mean"),
+        round(Corpus.stdConfidence, 6).as("std"),
+        Corpus.minConfidence.as("min"),
+        Corpus.maxConfidence.as("max")).as("confidence_stats"))
 
   /** [[performanceSummary]] with the sub-objects flattened to dotted
     * scalar columns — the correctness-gate shape (the gate hashes cells
@@ -289,15 +351,9 @@ object Analytics {
       .select("doc_id", "original_score", "sentiment")
 
   /** O5 argmax per group (ref `pdf_generation/pdf_sections.py:354-355`):
-    * highest-confidence row per sentiment, deterministic tiebreak
-    * (confidence DESC, doc_id ASC). `max_by` over a lexicographic struct
-    * key: a declarative aggregate with map-side partial — one candidate
-    * row per (task, group) shuffles, where the `row_number` window form
-    * sorts every fact row into |groups| tasks. */
+    * each class's `best` review from [[classSummary]]. */
   def argmaxPerGroup(scored: DataFrame): DataFrame =
-    scored.groupBy("sentiment")
-      .agg(max_by(struct(col("doc_id"), col("confidence")),
-        struct(col("confidence"), (-col("doc_id")).as("neg_id"))).as("best"))
+    classSummary(scored)
       .select(col("sentiment"), col("best.doc_id").as("doc_id"),
         col("best.confidence").as("confidence"))
       .orderBy("sentiment")

@@ -47,16 +47,16 @@ object Dedup {
     shinglesFromTokens(TextFns.tokens(text), n)
 
   /** Exploded (id, tags…, shingle) stream; `tags` are pass-through
-    * columns of `df`. Three projection steps so the optimizer cannot
-    * collapse the tokenizer back into the HOF lambda (CollapseProject
-    * keeps the boundary because `toks` is non-cheap and referenced three
-    * times by the shingle expression). */
+    * columns of `df`. The tokens are their own projection, so the
+    * tokenizer runs once per row. The explode takes the shingle
+    * expression itself, not a projected column: over a column, Spark
+    * infers a `size(shs) > 0` filter and pushes it below the projection,
+    * which computes the shingles twice per row. */
   private def shingleStream(df: DataFrame, textCol: String, idCol: String,
                             n: Int, tags: Seq[String] = Nil): DataFrame = {
     val keys = col(idCol) +: tags.map(col)
     df.select(keys :+ TextFns.tokens(col(textCol)).as("toks"): _*)
-      .select(keys :+ shinglesFromTokens(col("toks"), n).as("shs"): _*)
-      .select(keys :+ explode(col("shs")).as("sh"): _*)
+      .select(keys :+ explode(shinglesFromTokens(col("toks"), n)).as("sh"): _*)
   }
 
   /** [[shingleStream]] over `probe ∪ corpus` with `__p` marking the
@@ -81,8 +81,7 @@ object Dedup {
     * top-k as TakeOrderedAndProject. */
   def hotNgrams(df: DataFrame, textCol: String, idCol: String,
                 n: Int = 8, minDf: Long = 3, k: Int = 50): DataFrame =
-    df.select(col(idCol), TextFns.tokens(col(textCol)).as("toks"))
-      .select(col(idCol), explode(shinglesFromTokens(col("toks"), n)).as("sh"))
+    shingleStream(df, textCol, idCol, n)
       .groupBy("sh").agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf)
       .orderBy(col("df").desc, col("sh"))
@@ -145,7 +144,7 @@ object Dedup {
   def containmentAntiJoin(candidates: DataFrame, existing: DataFrame,
                           textCol: String, idCol: String, n: Int): DataFrame = {
     val candSh = shingleStream(candidates, textCol, idCol, n)
-    val exSh = existing.select(explode(shingles(col(textCol), n)).as("sh")).distinct()
+    val exSh = shingleStream(existing, textCol, idCol, n).select("sh").distinct()
     val hit = candSh.join(exSh, Seq("sh"), "left_semi").select(idCol).distinct()
     candidates.join(hit, Seq(idCol), "left_anti")
       .select(col(idCol)).orderBy(idCol)
@@ -167,7 +166,7 @@ object Dedup {
                     textCol: String, idCol: String, n: Int): DataFrame = {
     val corpSh = shingleStream(corpus, textCol, idCol, n)
     val benchSh = broadcast(
-      benchmark.select(explode(shingles(col(textCol), n)).as("sh")).distinct())
+      shingleStream(benchmark, textCol, idCol, n).select("sh").distinct())
     val overlaps = corpSh.join(benchSh, Seq("sh"))
       .groupBy(col(idCol)).agg(count(lit(1)).as("n_overlap"))
     corpus.select(col(idCol))
@@ -1095,8 +1094,8 @@ object Dedup {
   def sourceOverlapMatrix(df: DataFrame, textCol: String, idCol: String,
                           groupCol: String, n: Int,
                           maxDf: Long = 0L): DataFrame = {
-    val sh0 = df.select(col(groupCol).as("src"), TextFns.tokens(col(textCol)).as("toks"))
-      .select(col("src"), explode(shinglesFromTokens(col("toks"), n)).as("sh"))
+    val sh0 = shingleStream(df, textCol, idCol, n, Seq(groupCol))
+      .select(col(groupCol).as("src"), col("sh"))
     val shFiltered = if (maxDf > 0) {
       // hot-shingle guard, same contract as [[ngramJaccardPairs]]: a
       // shingle in more than maxDf (source, doc) rows is boilerplate and

@@ -18,9 +18,9 @@ object Graph {
 
   /** Session-conf storage knob for the iterative loops' checkpoint
     * blocks — generalized engine-wide in round 15 as
-    * `spark.graft.iter.checkpointStorage` ([[Iter.checkpoint]]), with
-    * `spark.graft.graph.checkpointStorage` kept as an alias (this knob
-    * shipped under the graph name first): `default` keeps
+    * `spark.graft.iter.checkpointStorage` ([[Iter.checkpoint]]; the
+    * graph-only name it shipped under first is retired and rejected):
+    * `default` keeps
     * Spark's MEMORY_AND_DISK (deserialized rows — measured fastest
     * while the heap is roomy: 6.7 s vs 7.6 s for the other modes at
     * sf0.1@8g), `ser` pins MEMORY_AND_DISK_SER (serialized blocks —
@@ -536,7 +536,7 @@ object Graph {
     * arg-min aggregation on node — no windows over fact rows, no driver
     * collect; integer counts so engine/oracle agree exactly. Per-round
     * [[iterCheckpoint]] truncates lineage and honors the
-    * `spark.graft.graph.checkpointStorage` knob. Expects a distinct
+    * `spark.graft.iter.checkpointStorage` knob. Expects a distinct
     * symmetrized edge list (the [[tradeEdges]] contract). Returns
     * `(id, community)` ordered by id. */
   /** `labelInit` maps a node id to its STARTING label (default: the id

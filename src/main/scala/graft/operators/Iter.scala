@@ -24,10 +24,10 @@ import org.apache.spark.storage.StorageLevel
   *   - `ser`: MEMORY_AND_DISK_SER (smaller blocks, still heap-resident);
   *   - `disk`: DISK_ONLY (zero block-manager heap; page cache makes the
   *     "disk" blocks memory-speed on any warm host).
-  * `spark.graft.graph.checkpointStorage` is kept as an ALIAS (the knob
-  * shipped under that name in round 14; the iter.* name wins when both
-  * are set). Unknown values throw — a typo must not silently lose the
-  * memory-tight deployment's intended posture. */
+  * Unknown values throw — a typo must not silently lose the memory-tight
+  * deployment's intended posture. So does the retired round-14 name
+  * `spark.graft.graph.checkpointStorage`, which would otherwise be
+  * ignored without a word. */
 object Iter {
   /** Runs `body` (the construction+execution of a DIMENSION-sized
     * iterative loop — state O(items)/O(vocab), never O(corpus)) with AQE
@@ -53,11 +53,13 @@ object Iter {
     }
   }
 
-  private[graft] def storageConf(df: DataFrame): String =
-    df.sparkSession.conf.getOption("spark.graft.iter.checkpointStorage")
-      .orElse(df.sparkSession.conf
-        .getOption("spark.graft.graph.checkpointStorage"))
-      .getOrElse("default")
+  private[graft] def storageConf(df: DataFrame): String = {
+    val conf = df.sparkSession.conf
+    require(conf.getOption("spark.graft.graph.checkpointStorage").isEmpty,
+      "spark.graft.graph.checkpointStorage is retired: set " +
+        "spark.graft.iter.checkpointStorage (default|ser|disk) instead")
+    conf.get("spark.graft.iter.checkpointStorage", "default")
+  }
 
   def checkpoint(df: DataFrame): DataFrame = storageConf(df) match {
     case "ser"     => df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)

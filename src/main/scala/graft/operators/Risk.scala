@@ -70,20 +70,23 @@ object Risk {
     * risk assessment as one single-row DataFrame. `scored` is the sentiment
     * pipeline output; `trends` is the A4 frame.
     *
-    * The order-dependent double aggregates (avg/std of confidence) are
-    * canonicalized by rounding to 9 decimals before entering the formula so
-    * both engines compute the multipliers from identical inputs.
+    * The counts and confidence figures are [[Analytics.Corpus]]'s
+    * aggregates. The order-dependent double aggregates (avg/std of
+    * confidence) are canonicalized by rounding to 9 decimals before
+    * entering the formula so both engines compute the multipliers from
+    * identical inputs.
     */
   def insuranceRisk(scored: DataFrame, trends: DataFrame,
                     baseRate: Double = 5000.0): DataFrame = {
+    import Analytics.Corpus
     val dist = scored.agg(
-      count(lit(1)).as("total_samples"),
-      sum(when(col("sentiment") === "POSITIVE", 1L).otherwise(0L)).as("n_pos"),
-      sum(when(col("sentiment") === "NEGATIVE", 1L).otherwise(0L)).as("n_neg"),
-      sum(when(col("sentiment") === "NEUTRAL", 1L).otherwise(0L)).as("n_neu"),
-      round(avg(col("confidence")), 9).as("avg_confidence"),
-      round(stddev_samp(col("confidence")), 9).as("std_confidence"),
-      min(col("confidence")).as("min_confidence"))
+      Corpus.total.as("total_samples"),
+      Corpus.classCount("POSITIVE").as("n_pos"),
+      Corpus.classCount("NEGATIVE").as("n_neg"),
+      Corpus.classCount("NEUTRAL").as("n_neu"),
+      round(Corpus.avgConfidence, 9).as("avg_confidence"),
+      round(Corpus.stdConfidence, 9).as("std_confidence"),
+      Corpus.minConfidence.as("min_confidence"))
 
     val joined = broadcast(dist).crossJoin(broadcast(
       trendRisk(trends).select("trend_multiplier", "trend_status")))

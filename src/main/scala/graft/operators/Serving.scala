@@ -10,6 +10,12 @@ import org.apache.spark.sql.functions._
   * `chatbot_analyzer.py:120-182`); the LLM call itself is out of engine
   * scope, the assembly is a pure aggregation and is oracle-checked.
   *
+  * The per-class evidence (class counts, highest-confidence reviews, class
+  * means) is pivoted out of [[Analytics.classSummary]], the one
+  * aggregation that defines it; [[summaryPrompts]] keeps its own top-k
+  * heap. The risk block reads [[Analytics.Corpus]]'s aggregates through
+  * [[Risk.insuranceRisk]].
+  *
   * Number formatting note: percentages are rendered via integer permille
   * arithmetic (never double→string, which differs across engines).
   */
@@ -19,30 +25,38 @@ object Serving {
     array_join(transform(sort_array(collect_list(struct(sortKey.as("k"), line.as("v")))),
       s => s.getField("v")), ", ")
 
-  /** Single-row context frame: distribution_ctx, top_words_ctx, examples_ctx. */
+  /** A `{:.1f}` percentage of `cnt` in `total`, rendered via integer
+    * permille arithmetic (never double→string). */
+  private def pct1(cnt: Column, total: Column): Column = {
+    val pm = round(cnt * lit(1000.0) / total, 0).cast("long")
+    concat((pm / 10).cast("long"), lit("."), pmod(pm, lit(10)))
+  }
+
+  /** The 80-char example of a class's `best` review in a
+    * [[Analytics.classSummary]] frame: the per-class evidence the
+    * summary and recommendation generators consume (ref
+    * `summarize_sentiments_fun.py:134-143`, `recommendation_fun.py:39-45`). */
+  private val example80: Column = substring(col("best.text"), 1, 80)
+
+  /** Single-row context frame: distribution_ctx, top_words_ctx, examples_ctx.
+    * The distribution and example lines both read one
+    * [[Analytics.classSummary]]. */
   def chatContext(scored: DataFrame, topWords: DataFrame): DataFrame = {
-    val total = Window.partitionBy()
-    val dist = scored.groupBy("sentiment").agg(count(lit(1)).as("cnt"))
-      .withColumn("pm", round(col("cnt") * lit(1000.0) / sum("cnt").over(total), 0).cast("long"))
-      .withColumn("line", concat(col("sentiment"), lit(": "), col("cnt"),
-        lit(" ("), (col("pm") / 10).cast("long"), lit("."), pmod(col("pm"), lit(10)), lit("%)")))
-      .agg(joinedLines(col("sentiment"), col("line")).as("distribution_ctx"))
+    val perClass = Analytics.classSummary(scored)
+      .withColumn("total", sum("cnt").over(Window.partitionBy()))
+      .agg(
+        joinedLines(col("sentiment"), concat(col("sentiment"), lit(": "), col("cnt"),
+          lit(" ("), pct1(col("cnt"), col("total")), lit("%)"))).as("distribution_ctx"),
+        joinedLines(col("sentiment"), concat(col("sentiment"), lit(": "), example80))
+          .as("examples_ctx"))
 
     val words = topWords
       .withColumn("line", concat(col("word"), lit(" ("), col("cnt"), lit(")")))
       .agg(joinedLines(struct((-col("cnt")).as("nc"), col("word")), col("line"))
         .as("top_words_ctx"))
 
-    // argmax per class via max_by (declarative aggregate, map-side
-    // partial) — a row_number window here would sort every fact row into
-    // one task per sentiment class
-    val examples = scored.groupBy("sentiment")
-      .agg(max_by(substring(col("text"), 1, 80),
-        struct(col("confidence"), (-col("doc_id")).as("neg_id"))).as("ex"))
-      .withColumn("line", concat(col("sentiment"), lit(": "), col("ex")))
-      .agg(joinedLines(col("sentiment"), col("line")).as("examples_ctx"))
-
-    broadcast(dist).crossJoin(broadcast(words)).crossJoin(broadcast(examples))
+    broadcast(perClass).crossJoin(broadcast(words))
+      .select("distribution_ctx", "top_words_ctx", "examples_ctx")
   }
 
   /** EP2/S12 — the `/api/results/{job}/data` artifact merge
@@ -51,40 +65,27 @@ object Serving {
     * the frontend consumes. Summary/recommendation GENERATION is the
     * external-LLM seam (out of engine scope per SURVEY §2.9); the
     * deterministic assembly carries exactly the per-class evidence the
-    * generator consumes — class count + highest-confidence example
-    * (ref `summarize_sentiments_fun.py:134-143`,
-    * `recommendation_fun.py:39-45`).
+    * generator consumes — class count + highest-confidence example, both
+    * pivoted out of [[Analytics.classSummary]].
     *
     * Shape: everything reduces to single-row aggregates before the
     * broadcast cross-joins — O(1) assembled data at any input scale. */
   def resultsDocument(scored: DataFrame, trends: DataFrame): DataFrame = {
-    val trendsArr = trends.agg(sort_array(collect_list(struct(
-      col("date"), col("positive"), col("negative"), col("neutral"),
-      col("total")))).as("trends"))
-    val per = scored.groupBy("sentiment").agg(
-      count(lit(1)).as("cnt"),
-      max_by(substring(col("text"), 1, 80),
-        struct(col("confidence"), (-col("doc_id")).as("neg_id"))).as("ex"))
+    import Analytics.{classCount, classField}
     def summaryOf(cls: String): Column =
-      max(when(col("sentiment") === cls, struct(
+      classField(cls, struct(
         lit(cls).as("sentiment_type"),
         col("cnt").as("num_comments_analyzed"),
-        col("ex").as("summary")))).as(cls.toLowerCase + "_summary")
-    def cntOf(cls: String): Column =
-      coalesce(max(when(col("sentiment") === cls, col("cnt"))), lit(0L))
-    val merged = per.agg(
-      summaryOf("POSITIVE"), summaryOf("NEGATIVE"), summaryOf("NEUTRAL"),
-      struct(
-        // coalesce: an empty input must yield a zero-count statistics
-        // block, not a NULL one (ref routes.py empty-results document)
-        coalesce(sum(col("cnt")), lit(0L)).as("total_reviews"),
-        cntOf("POSITIVE").as("positive"),
-        cntOf("NEGATIVE").as("negative"),
-        cntOf("NEUTRAL").as("neutral")).as("statistics"))
+        example80.as("summary"))).as(cls.toLowerCase + "_summary")
+    val classes = Analytics.SentimentClasses
+    val statistics = struct(Analytics.classTotal.as("total_reviews") +:
+      classes.map(c => classCount(c).as(c.toLowerCase)): _*)
+    val fields = classes.map(summaryOf) :+ statistics.as("statistics")
+    val merged = Analytics.classSummary(scored).agg(fields.head, fields.tail: _*)
       .withColumn("recommendations", struct(
         col("positive_summary.summary").as("positive_basis"),
         col("negative_summary.summary").as("negative_basis")))
-    broadcast(trendsArr).crossJoin(broadcast(merged))
+    broadcast(Analytics.trendsArray(trends)).crossJoin(broadcast(merged))
       .select("trends", "positive_summary", "negative_summary",
         "neutral_summary", "recommendations", "statistics")
   }
@@ -120,59 +121,43 @@ object Serving {
     *    the full [[Risk.insuranceRisk]] multiplier breakdown plus
     *    average confidence; `total_samples` ≡ `total_comments`.
     *
-    * Scale shape: two map-side-combinable aggregations over the scored
-    * corpus (class mean pass, then the per-class argmin/argmax pass —
-    * the mean must exist before the nearest-to-mean reduction), the A4
-    * trends aggregation, then everything is single-row broadcast
-    * cross-joins — O(1) assembled data at any input scale. */
+    * Counts, class means and the highest-confidence comments come from
+    * [[Analytics.classSummary]]. Scale shape: the summary aggregation,
+    * then one nearest-to-mean pass over the scored corpus joined with the
+    * broadcast summary (the mean must exist before the reduction; the
+    * summary's count and best review ride through it), the A4 trends
+    * aggregation, then everything is single-row broadcast cross-joins —
+    * O(1) assembled data at any input scale. */
   def reportDocument(scored: DataFrame, trends: DataFrame,
                      sourceInfo: String = "documents"): DataFrame = {
-    val cavg = scored.groupBy("sentiment")
-      .agg(round(avg(col("confidence")), 9).as("cavg"))
-    val t300 = graft.functions.TextFns.truncateWithEllipsis(col("text"), 300)
-    val per = scored.join(broadcast(cavg), "sentiment")
+    import Analytics.{classCount, classField}
+    val summary = Analytics.classSummary(scored)
+    def t300(text: Column): Column = graft.functions.TextFns.truncateWithEllipsis(text, 300)
+    // the class mean is rounded to 9 places, the oracle's canonical form;
+    // the summary's columns are constant per class and ride along
+    val per = scored.join(broadcast(summary), "sentiment")
       .groupBy("sentiment")
       .agg(
-        count(lit(1)).as("cnt"),
-        min_by(struct(t300.as("text"), col("confidence")),
-          struct(abs(col("confidence") - col("cavg")).as("d"), col("doc_id")))
+        min_by(struct(t300(col("text")).as("text"), col("confidence")),
+          struct(abs(col("confidence") - round(col("mean"), 9)).as("d"), col("doc_id")))
           .as("rep"),
-        max_by(struct(t300.as("text"), col("confidence")),
-          struct(col("confidence"), (-col("doc_id")).as("neg_id"))).as("hc"),
-        max_by(substring(col("text"), 1, 80),
-          struct(col("confidence"), (-col("doc_id")).as("neg_id"))).as("ex80"))
-    def cOf(cls: String): Column =
-      coalesce(max(when(col("sentiment") === cls, col("cnt"))), lit(0L))
-    def fOf(cls: String, field: String): Column =
-      max(when(col("sentiment") === cls, col(field)))
-    val merged = per.agg(
-      coalesce(sum(col("cnt")), lit(0L)).as("total_comments"),
-      cOf("POSITIVE").as("positive_cnt"),
-      cOf("NEGATIVE").as("negative_cnt"),
-      cOf("NEUTRAL").as("neutral_cnt"),
-      fOf("POSITIVE", "rep.text").as("rep_positive_text"),
-      fOf("POSITIVE", "rep.confidence").as("rep_positive_confidence"),
-      fOf("NEGATIVE", "rep.text").as("rep_negative_text"),
-      fOf("NEGATIVE", "rep.confidence").as("rep_negative_confidence"),
-      fOf("NEUTRAL", "rep.text").as("rep_neutral_text"),
-      fOf("NEUTRAL", "rep.confidence").as("rep_neutral_confidence"),
-      fOf("POSITIVE", "hc.text").as("hc_positive_text"),
-      fOf("POSITIVE", "hc.confidence").as("hc_positive_confidence"),
-      fOf("NEGATIVE", "hc.text").as("hc_negative_text"),
-      fOf("NEGATIVE", "hc.confidence").as("hc_negative_confidence"),
-      fOf("NEUTRAL", "hc.text").as("hc_neutral_text"),
-      fOf("NEUTRAL", "hc.confidence").as("hc_neutral_confidence"),
-      fOf("POSITIVE", "ex80").as("summary_positive_basis"),
-      fOf("NEGATIVE", "ex80").as("summary_negative_basis"))
-    // {:.1f}% share via integer permille (the chatContext convention)
-    def pct(cnt: Column): Column = {
-      val pm = round(cnt * lit(1000.0) / col("total_comments"), 0).cast("long")
-      concat((pm / 10).cast("long"), lit("."), pmod(pm, lit(10)))
+        any_value(col("cnt")).as("cnt"),
+        any_value(col("best")).as("best"))
+    def picks(prefix: String, text: Column, conf: Column): Seq[Column] =
+      Analytics.SentimentClasses.flatMap { cls =>
+        val lc = cls.toLowerCase
+        Seq(classField(cls, text).as(s"${prefix}_${lc}_text"),
+          classField(cls, conf).as(s"${prefix}_${lc}_confidence"))
+      }
+    val bases = Seq("POSITIVE", "NEGATIVE").map(c =>
+      classField(c, example80).as(s"summary_${c.toLowerCase}_basis"))
+    val counts = Analytics.SentimentClasses.map(c => classCount(c).as(s"${c.toLowerCase}_cnt"))
+    val merged = per.agg(Analytics.classTotal.as("total_comments"),
+      counts ++ picks("rep", col("rep.text"), col("rep.confidence")) ++
+        picks("hc", t300(col("best.text")), col("best.confidence")) ++ bases: _*)
+    val withPct = Analytics.SentimentClasses.map(_.toLowerCase).foldLeft(merged) { (df, lc) =>
+      df.withColumn(s"${lc}_pct", pct1(col(s"${lc}_cnt"), col("total_comments")))
     }
-    val withPct = merged
-      .withColumn("positive_pct", pct(col("positive_cnt")))
-      .withColumn("negative_pct", pct(col("negative_cnt")))
-      .withColumn("neutral_pct", pct(col("neutral_cnt")))
     val risk = Risk.insuranceRisk(scored, trends).select(
       col("insurance_cost"), col("risk_level"), col("risk_score"),
       col("sentiment_multiplier"), col("confidence_multiplier"),

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
 object Artifacts {
 
   /** S7: per-sentiment comment JSON (`comments/sentiment=…`) + one trends
-    * JSON document with the nested summary struct (`sentiment_trends`)
+    * JSON document, days in date order, with the nested summary struct
+    * (`sentiment_trends`)
     * (ref `Context_analyzer_RoBERTa_fun.py:732-738,796-812`). The
     * reference's performance summary (`vizualization.py:308-324`) is not
     * written. */
@@ -27,9 +28,7 @@ object Artifacts {
         struct(col("start_date").as("start"), col("end_date").as("end")).as("date_range"),
         col("total_reviews"), col("total_positive"), col("total_negative"),
         col("total_neutral")).as("summary"))
-    val doc = trends.agg(collect_list(struct(col("date"), col("positive"),
-        col("negative"), col("neutral"), col("total"))).as("trends"))
-      .crossJoin(summary)
+    val doc = graft.operators.Analytics.trendsArray(trends).crossJoin(summary)
     doc.coalesce(1).write.mode("overwrite").json(s"$outDir/sentiment_trends")
   }
 

@@ -5,6 +5,49 @@ import graft.operators.Analytics
 
 class AnalyticsSpec extends SparkSpec {
 
+  /** Scored rows with a confidence tie in POSITIVE (docs 1 and 2) and in
+    * NEUTRAL (docs 7 and 6, listed higher id first): the lower doc_id wins. */
+  private def tiedScored = {
+    val s = spark
+    import s.implicits._
+    Seq(
+      (2L, "fast shipping great seller", "POSITIVE", 0.9, 0.7, 120),
+      (1L, "solid build quality overall", "POSITIVE", 0.9, 0.8, 250),
+      (3L, "works", "POSITIVE", 0.7, 0.6, 40),
+      (4L, "broke after a week", "NEGATIVE", 0.8, 0.1, 300),
+      (7L, "fine i suppose", "NEUTRAL", 0.65, 0.4, 205),
+      (5L, "meh", "NEUTRAL", 0.55, 0.5, 210),
+      (6L, "ok i guess", "NEUTRAL", 0.65, 0.45, 90))
+      .toDF("doc_id", "text", "sentiment", "confidence", "original_score", "n_chars")
+  }
+
+  test("argmaxPerGroup: highest confidence per class, ties to the lower doc_id") {
+    val df = Analytics.argmaxPerGroup(tiedScored)
+    assert(df.schema.catalogString == "struct<sentiment:string,doc_id:bigint,confidence:double>")
+    assert(df.collect().map(_.toString).toSeq ==
+      Seq("[NEGATIVE,4,0.8]", "[NEUTRAL,6,0.65]", "[POSITIVE,1,0.9]"))
+  }
+
+  test("confidenceStats: pinned single row over the tie sample") {
+    val df = Analytics.confidenceStats(tiedScored, col("n_chars") >= 200)
+    assert(df.schema.catalogString == "struct<total_samples:bigint,avg_confidence:double," +
+      "std_confidence:double,min_confidence:double,max_confidence:double," +
+      "avg_original_score:double,candidates_count:bigint>")
+    assert(df.collect().map(_.toString).toSeq ==
+      Seq("[7,0.735714,0.134519,0.55,0.9,0.507143,4]"))
+  }
+
+  test("performanceSummary: pinned nested row over the tie sample") {
+    val df = Analytics.performanceSummary(tiedScored, col("n_chars") >= 200)
+    assert(df.schema.catalogString == "struct<total_samples:bigint," +
+      "sentiment_distribution:struct<POSITIVE:bigint,NEGATIVE:bigint,NEUTRAL:bigint>," +
+      "score_distribution:struct<avg_original_score:double," +
+      "avg_sentiment_confidence:double,candidates_count:bigint>," +
+      "confidence_stats:struct<mean:double,std:double,min:double,max:double>>")
+    assert(df.collect().map(_.toString).toSeq ==
+      Seq("[7,[3,1,3],[0.507143,0.735714,4],[0.735714,0.134519,0.55,0.9]]"))
+  }
+
   test("A7 histogram: fixed-width bins, max value lands in last bin") {
     val s = spark
     import s.implicits._

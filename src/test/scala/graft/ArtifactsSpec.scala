@@ -20,7 +20,10 @@ class ArtifactsSpec extends SparkSpec {
     assert(comments.columns.contains("sentiment")) // partition column round-trips
     val doc = spark.read.json(s"$tmp/sentiment_trends")
     val row = doc.collect()(0)
-    assert(row.getSeq[Any](row.fieldIndex("trends")).length == 30)
+    val days = row.getSeq[org.apache.spark.sql.Row](row.fieldIndex("trends"))
+      .map(_.getAs[String]("date"))
+    assert(days.length == 30)
+    assert(days == days.sorted, "trends array is date-ascending")
     val summary = row.getAs[org.apache.spark.sql.Row]("summary")
     assert(summary.getAs[Long]("total_reviews") == 1000L)
   }

@@ -3,8 +3,8 @@ package graft
 import graft.operators.Iter
 
 /** The engine-wide iterative-checkpoint knob ([[Iter]], r14 VERDICT
-  * task 4): conf resolution (iter.* name, graph.* alias, precedence)
-  * and loud rejection of unknown storage values. */
+  * task 4): conf resolution and loud rejection of unknown storage values
+  * and of the retired graph.* name. */
 class IterSpec extends SparkSpec {
 
   private def df = spark.range(3).toDF("id")
@@ -20,16 +20,14 @@ class IterSpec extends SparkSpec {
     assert(Iter.storageConf(df) == "default")
   }
 
-  test("storageConf: the graph.* alias still works") {
+  test("checkpoint: the retired graph.* key throws, naming the iter.* key") {
     withConfs("spark.graft.graph.checkpointStorage" -> "disk") {
-      assert(Iter.storageConf(df) == "disk")
+      val e = intercept[IllegalArgumentException](Iter.checkpoint(df))
+      assert(e.getMessage.contains("spark.graft.iter.checkpointStorage"))
     }
-  }
-
-  test("storageConf: the iter.* name wins over the alias") {
     withConfs("spark.graft.iter.checkpointStorage" -> "ser",
       "spark.graft.graph.checkpointStorage" -> "disk") {
-      assert(Iter.storageConf(df) == "ser")
+      intercept[IllegalArgumentException](Iter.checkpoint(df))
     }
   }
 

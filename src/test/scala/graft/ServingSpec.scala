@@ -58,6 +58,56 @@ class ServingSpec extends SparkSpec {
     assert(row.isNullAt(row.fieldIndex("positive_summary")))
   }
 
+  test("chatContext: pinned distribution, top words and tie-broken examples") {
+    val s = spark
+    import s.implicits._
+    val words = Seq(("great", 3L), ("product", 2L), ("absolutely", 2L)).toDF("word", "cnt")
+    val df = Serving.chatContext(sampleScored, words)
+    assert(df.schema.catalogString ==
+      "struct<distribution_ctx:string,top_words_ctx:string,examples_ctx:string>")
+    assert(df.collect().map(_.toString).toSeq == Seq(
+      "[NEGATIVE: 1 (25.0%), NEUTRAL: 1 (25.0%), POSITIVE: 2 (50.0%)," +
+        "great (3), absolutely (2), product (2)," +
+        "NEGATIVE: terrible broke on day one, NEUTRAL: it exists and does things, " +
+        "POSITIVE: great product works well]"))
+  }
+
+  test("reportDocument: pinned row over the tie sample, zeros for an absent class") {
+    val df = Serving.reportDocument(sampleScored, sampleTrends)
+    assert(df.schema.catalogString == "struct<source_info:string,total_comments:bigint," +
+      "positive_cnt:bigint,negative_cnt:bigint,neutral_cnt:bigint," +
+      "rep_positive_text:string,rep_positive_confidence:double," +
+      "rep_negative_text:string,rep_negative_confidence:double," +
+      "rep_neutral_text:string,rep_neutral_confidence:double," +
+      "hc_positive_text:string,hc_positive_confidence:double," +
+      "hc_negative_text:string,hc_negative_confidence:double," +
+      "hc_neutral_text:string,hc_neutral_confidence:double," +
+      "summary_positive_basis:string,summary_negative_basis:string," +
+      "positive_pct:string,negative_pct:string,neutral_pct:string," +
+      "insurance_cost:double,risk_level:string,risk_score:bigint," +
+      "sentiment_multiplier:double,confidence_multiplier:double," +
+      "sample_multiplier:double,trend_multiplier:double,trend_status:string," +
+      "avg_confidence:double>")
+    // POSITIVE ties at 0.95 (also the class mean): doc 1 is both the
+    // representative and the highest-confidence comment
+    assert(df.collect().map(_.toString).toSeq == Seq(
+      "[documents,4,2,1,1," +
+        "great product works well,0.95,terrible broke on day one,0.88," +
+        "it exists and does things,0.61," +
+        "great product works well,0.95,terrible broke on day one,0.88," +
+        "it exists and does things,0.61," +
+        "great product works well,terrible broke on day one,50.0,25.0,25.0," +
+        "12242.34,High,69,1.75,1.08,1.3,1.0,Stable,0.848]"))
+    val noNeutral = Serving.reportDocument(
+      sampleScored.filter(col("sentiment") =!= "NEUTRAL"), sampleTrends)
+    assert(noNeutral.collect().map(_.toString).toSeq == Seq(
+      "[documents,3,2,1,0," +
+        "great product works well,0.95,terrible broke on day one,0.88,null,null," +
+        "great product works well,0.95,terrible broke on day one,0.88,null,null," +
+        "great product works well,terrible broke on day one,66.7,33.3,0.0," +
+        "12353.61,Critical,76,1.83,1.04,1.3,1.0,Stable,0.927]"))
+  }
+
   test("summaryPrompts: reference template, numbered 2-decimal confidence lines") {
     val out = Serving.summaryPrompts(sampleScored, 10)
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
